@@ -3523,7 +3523,7 @@ WITH b AS (
            THEN 1.0 ELSE 0.8 END) AS quality_score
   FROM qf
 ), dg AS (
-  SELECT doc_id, md5(@NORM_RED@) AS dig FROM r
+  SELECT doc_id, md5(red) AS dig FROM r
 ), canon AS (
   SELECT dig, min(doc_id) AS canonical_id FROM dg GROUP BY dig
 ), sp AS (
@@ -4886,7 +4886,9 @@ def oracle_sql() -> dict[str, str]:
                 CAST(sum(o.occ) AS BIGINT) AS n_bigrams,
                 CAST(sum(CASE WHEN c12.c12 = 1 THEN o.occ ELSE 0 END)
                      AS BIGINT) AS n_hapax_bigrams,
-                round(sum(o.occ * (CAST(c12.c12 AS DOUBLE) / c1.c1))
+                round(list_reduce(list_sort(
+                        list(o.occ * (CAST(c12.c12 AS DOUBLE) / c1.c1))),
+                      (a, b) -> a + b)
                       / sum(o.occ), 6) AS mean_bigram_prob
               FROM occ o
               JOIN c12 ON o.w1 = c12.w1 AND o.w2 = c12.w2

@@ -1,9 +1,13 @@
-"""Main-content extraction as pure JVM column expressions.
+"""Main-content extraction, in two implementations of rules.clean_text
+(the per-turn equality invariant; tested equal).
 
-Mirrors rules.clean_text exactly (the per-turn equality invariant).
-Implemented with higher-order array functions — whole-stage-codegen'd,
-zero Python in the hot path.  A pandas-UDF variant is provided for
-comparison/benchmarking only.
+* ``clean_text_pandas_udf`` — the DEFAULT extractor
+  (``extract_turns(arrow_extractor=True)``): an Arrow-batched pandas
+  UDF running ``rules.clean_text`` itself.
+* ``clean_text_expr`` — the pure-JVM twin built from higher-order array
+  functions (whole-stage codegen, no Python); used with
+  ``arrow_extractor=False`` and wherever a single cheap consumer
+  follows.
 
 Note on regex dialects: where rules.py uses Python `\\s` (unicode-aware
 on str patterns), the Spark expressions use the PY_WS class below —

@@ -93,36 +93,40 @@ def main(argv: list[str] | None = None) -> None:
         from pyspark import StorageLevel
 
         res.extracted_turns.persist(StorageLevel.MEMORY_AND_DISK)
+        # unpersist on every way out: a failed write must not leave the
+        # shard's cache pinned while the next shard runs
         mode = "overwrite"
         suffix = f"_shard{shard}" if args.shards > 1 else ""
-        tio.write_table(res.extracted_turns, args.output, f"extracted_turns{suffix}", mode)
-        tio.write_table(res.visit_spans, args.output, f"visit_spans{suffix}", mode)
-        tio.write_table(res.documents, args.output, f"documents{suffix}", mode)
-        if res.medications is not None:
-            tio.write_table(res.medications, args.output, f"medications{suffix}", mode)
-            tio.write_table(res.problems, args.output, f"problems{suffix}", mode)
-            tio.write_table(res.lab_results, args.output, f"lab_results{suffix}", mode)
-            tio.write_table(res.vitals, args.output, f"vitals{suffix}", mode)
-            tio.write_table(res.allergies, args.output, f"allergies{suffix}", mode)
-            tio.write_table(res.plan_items, args.output, f"plan_items{suffix}", mode)
-            tio.write_table(res.dedup_log, args.output, f"dedup_log{suffix}", mode)
-        if res.quarantine is not None:
-            tio.write_table(res.quarantine, args.output, f"quarantine{suffix}", mode)
-        if res.data_quality is not None:
-            tio.write_table(res.data_quality, args.output, f"data_quality{suffix}", mode)
-        if res.ccd_xml is not None:
-            tio.write_table(res.ccd_xml, args.output, f"ccd_xml{suffix}", mode)
-        if res.narrative is not None:
-            tio.write_table(res.narrative, args.output, f"narrative{suffix}", mode)
-        tio.write_table(res.metrics, args.output, f"metrics{suffix}", mode)
-        for stage, ldf in res.lineage.items():
-            tio.write_table(ldf, args.output, f"lineage_{stage}{suffix}", mode)
-        # read back through the same IO abstraction the writes used —
-        # a hardcoded parquet path crashes under an Iceberg output
-        n = tio.read_table(spark, args.output, f"extracted_turns{suffix}").count()
-        total += n
-        manifest.mark_done(shard, n, n_shards=args.shards)
-        res.extracted_turns.unpersist()
+        try:
+            tio.write_table(res.extracted_turns, args.output, f"extracted_turns{suffix}", mode)
+            tio.write_table(res.visit_spans, args.output, f"visit_spans{suffix}", mode)
+            tio.write_table(res.documents, args.output, f"documents{suffix}", mode)
+            if res.medications is not None:
+                tio.write_table(res.medications, args.output, f"medications{suffix}", mode)
+                tio.write_table(res.problems, args.output, f"problems{suffix}", mode)
+                tio.write_table(res.lab_results, args.output, f"lab_results{suffix}", mode)
+                tio.write_table(res.vitals, args.output, f"vitals{suffix}", mode)
+                tio.write_table(res.allergies, args.output, f"allergies{suffix}", mode)
+                tio.write_table(res.plan_items, args.output, f"plan_items{suffix}", mode)
+                tio.write_table(res.dedup_log, args.output, f"dedup_log{suffix}", mode)
+            if res.quarantine is not None:
+                tio.write_table(res.quarantine, args.output, f"quarantine{suffix}", mode)
+            if res.data_quality is not None:
+                tio.write_table(res.data_quality, args.output, f"data_quality{suffix}", mode)
+            if res.ccd_xml is not None:
+                tio.write_table(res.ccd_xml, args.output, f"ccd_xml{suffix}", mode)
+            if res.narrative is not None:
+                tio.write_table(res.narrative, args.output, f"narrative{suffix}", mode)
+            tio.write_table(res.metrics, args.output, f"metrics{suffix}", mode)
+            for stage, ldf in res.lineage.items():
+                tio.write_table(ldf, args.output, f"lineage_{stage}{suffix}", mode)
+            # read back through the same IO abstraction the writes used —
+            # a hardcoded parquet path crashes under an Iceberg output
+            n = tio.read_table(spark, args.output, f"extracted_turns{suffix}").count()
+            total += n
+            manifest.mark_done(shard, n, n_shards=args.shards)
+        finally:
+            res.extracted_turns.unpersist()
         print(f"[shard {shard}] {n} turns committed")
 
     dt = time.time() - t0

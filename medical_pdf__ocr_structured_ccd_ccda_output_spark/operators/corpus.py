@@ -1646,8 +1646,11 @@ def bigram_lm_scores(documents: DataFrame, text: str = "text") -> DataFrame:
     mean of exact conditional probabilities p(w2|w1) =
     c(w1,w2)/c(w1,*), each a correctly-rounded IEEE division of two
     BIGINT corpus counts — bit-identical across engines, unlike ln()
-    whose last ulp is libm-specific.  The mean is a strictly monotone
-    proxy for the (inverse) perplexity ranking on this model class.
+    whose last ulp is libm-specific.  The occurrence-weighted terms are
+    summed in ascending order by a sequential fold, so the mean does not
+    depend on the partition layout (a plain double SUM would).  The mean
+    is a strictly monotone proxy for the (inverse) perplexity ranking on
+    this model class.
 
     One row per document: (doc_id, n_tokens, n_bigrams,
     n_hapax_bigrams, hapax_rate, mean_bigram_prob) —
@@ -1671,6 +1674,8 @@ def bigram_lm_scores(documents: DataFrame, text: str = "text") -> DataFrame:
       the bigram model table scales with corpus vocabulary^2 reach
       and must stay a shuffle join; AQE downgrades to broadcast at
       test scale automatically.
+    * the ordered fold collects one double per distinct in-doc bigram,
+      so its per-doc state is bounded by the document's length.
     """
     words = documents.select(
         "doc_id", F.split(norm_text(F.col(text)), " ").alias("_words")
@@ -1706,6 +1711,7 @@ def bigram_lm_scores(documents: DataFrame, text: str = "text") -> DataFrame:
     )
     c12 = occ.groupBy("w1", "w2").agg(F.sum("occ").alias("c12"))
     c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
+    term = F.col("occ") * (F.col("c12").cast("double") / F.col("c1"))
     probed = (
         occ.join(c12, ["w1", "w2"]).join(c1, "w1")
         .groupBy("doc_id")
@@ -1713,9 +1719,12 @@ def bigram_lm_scores(documents: DataFrame, text: str = "text") -> DataFrame:
             F.sum("occ").cast("long").alias("n_bigrams"),
             F.sum(F.when(F.col("c12") == 1, F.col("occ")).otherwise(0))
             .cast("long").alias("n_hapax_bigrams"),
+            # sorted sequential fold, not F.sum: a double sum's
+            # addition order follows the partition layout (and the
+            # engine), so its last ulp could flip the round-6 result
             F.round(
-                F.sum(F.col("occ")
-                      * (F.col("c12").cast("double") / F.col("c1")))
+                F.aggregate(F.array_sort(F.collect_list(term)),
+                            F.lit(0.0), lambda acc, x: acc + x)
                 / F.sum("occ"),
                 6,
             ).alias("mean_bigram_prob"),
@@ -1775,7 +1784,8 @@ def curate_corpus(documents: DataFrame, eval_docs: DataFrame | None = None,
     is computed on the REDACTED text.
 
     Invariant worth stating: all filter signals are pure functions of
-    the redacted text, so members of an exact-duplicate group are
+    the redacted text, and the duplicate digest is md5 of that same
+    (un-normalized) text, so members of an exact-duplicate group are
     indistinguishable except by doc_id — either the whole group fails
     the same earlier rule, or exactly the canonical (min doc_id)
     survives and the rest read ``duplicate``.  The kept set therefore
@@ -1826,7 +1836,10 @@ def curate_corpus(documents: DataFrame, eval_docs: DataFrame | None = None,
     sig = base.select(
         "doc_id", split_key, "has_pii",
         signal_scores_udf()(F.col("_red")).alias("_sc"),
-        F.md5(norm_text(F.col("_red"))).alias("_digest"),
+        # keyed on the exact text the signals score: a norm_text key
+        # would group whitespace variants whose punct_ratio differs, so
+        # a failing canonical could drop a passing twin as 'duplicate'
+        F.md5(F.col("_red")).alias("_digest"),
     ).select(
         "doc_id", split_key, "has_pii",
         F.col("_sc.n_tokens").alias("n_tokens"),

@@ -33,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import context_cached
+
 TURN_ORDER = ["turn_idx", "ts"]
 
 
@@ -40,18 +42,31 @@ def _boundary_int() -> F.Column:
     return F.col("is_boundary").cast("int")
 
 
-def assign_visits(extracted: DataFrame) -> DataFrame:
-    """Single-window visit assignment (one shuffle on conv_id)."""
+def _visit_columns() -> tuple[F.Column, F.Column, F.Column]:
+    """(_rn, visit_seq, visit_id) — each reads the column before it."""
     w_order = Window.partitionBy("conv_id").orderBy(*TURN_ORDER)
     w_run = w_order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     rn = F.row_number().over(w_order)
-    df = extracted.withColumn("_rn", rn)
     visit_seq = F.lit(1) + F.sum(
         F.when(F.col("is_boundary") & (F.col("_rn") > 1), 1).otherwise(0)
     ).over(w_run)
     return (
-        df.withColumn("visit_seq", visit_seq.cast("int"))
-        .withColumn("visit_id", F.format_string("visit_%03d", F.col("visit_seq")))
+        rn,
+        visit_seq.cast("int"),
+        F.format_string("visit_%03d", F.col("visit_seq")),
+    )
+
+
+def assign_visits(extracted: DataFrame) -> DataFrame:
+    """Single-window visit assignment (one shuffle on conv_id).  The
+    window Columns are built once per live SparkContext
+    (``session.context_cached``)."""
+    rn, visit_seq, visit_id = context_cached(
+        extracted, "assign_visits", _visit_columns)
+    return (
+        extracted.withColumn("_rn", rn)
+        .withColumn("visit_seq", visit_seq)
+        .withColumn("visit_id", visit_id)
         .drop("_rn")
     )
 

@@ -7,8 +7,12 @@ real cluster (AQE on, Arrow on, explicit shuffle partitioning, UTC).
 from __future__ import annotations
 
 import os
+import threading
+from typing import Callable, Hashable, TypeVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 
 def get_spark(app_name: str = "ccda_extraction_engine",
@@ -113,3 +117,34 @@ def tune_scan_splits(spark: SparkSession, *paths: str,
             "spark.sql.adaptive.coalescePartitions.enabled", "false"
         )
     return target
+
+
+_PER_CONTEXT: dict[tuple, object] = {}
+_PER_CONTEXT_LOCK = threading.Lock()
+
+
+def _context_of(df: DataFrame):
+    return df.sparkSession.sparkContext
+
+
+def context_cached(df: DataFrame, key: Hashable, build: Callable[[], T]) -> T:
+    """``build()``'s result, built once per live SparkContext.
+
+    For Column trees that are identical on every call: building one
+    costs a py4j round trip per ``F.*`` node, thousands for the
+    extraction projection, while reusing a JVM Column in a new plan
+    costs none (Columns are immutable and get their own analysis in
+    every plan).  The entry is keyed on the SparkContext object itself,
+    not its ``id()``: a stopped-and-recreated context is a new object,
+    so it never sees Columns (or UDFs with broadcast state) made
+    against the old one.  Only the current context's entries are kept —
+    PySpark runs one SparkContext per process."""
+    sc = _context_of(df)
+    full_key = (sc, key)
+    with _PER_CONTEXT_LOCK:
+        hit = _PER_CONTEXT.get(full_key)
+        if hit is None:
+            for stale in [k for k in _PER_CONTEXT if k[0] is not sc]:
+                del _PER_CONTEXT[stale]
+            hit = _PER_CONTEXT[full_key] = build()
+    return hit

@@ -134,3 +134,41 @@ def test_lm_totality_and_degenerate_docs(spark):
     # "a a": one bigram, corpus count 1 -> hapax, p = 1/1
     assert out[4]["n_bigrams"] == 1 and out[4]["n_hapax_bigrams"] == 1
     assert out[4]["mean_bigram_prob"] == 1.0
+
+
+def test_lm_mean_is_ordered_fold_independent_of_layout(spark):
+    # mean_bigram_prob = round6(sum of occ * c12/c1 over the doc's
+    # distinct bigrams, added in ascending order from 0.0, / n_bigrams):
+    # the Python fold below is that exact IEEE sequence, and Spark's
+    # round(double, 6) is HALF_UP on the double's shortest repr.  Two
+    # partition layouts of the same corpus must give the same bits.
+    import random
+    from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
+
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(9)]
+    rows = [(i, " ".join(rng.choice(vocab) for _ in range(rng.randint(2, 60))))
+            for i in range(40)]
+    occ = {i: Counter(zip(t.split(), t.split()[1:])) for i, t in rows}
+    c12 = Counter()
+    for bg in occ.values():
+        c12.update(bg)
+    c1 = Counter()
+    for (w1, _), n in c12.items():
+        c1[w1] += n
+    want = {}
+    for i, bg in occ.items():
+        acc = 0.0
+        for x in sorted(n * (c12[b] / c1[b[0]]) for b, n in bg.items()):
+            acc += x
+        mean = acc / sum(bg.values())
+        want[i] = float(Decimal(repr(mean)).quantize(
+            Decimal("0.000001"), rounding=ROUND_HALF_UP))
+
+    d = _df(spark, rows)
+    layouts = [d.coalesce(1), d.repartition(7, F.col("doc_id") % 3)]
+    for df in layouts:
+        got = {r["doc_id"]: r["mean_bigram_prob"]
+               for r in bigram_lm_scores(df).collect()}
+        assert got == want

@@ -85,6 +85,25 @@ def test_duplicate_group_one_survivor_invariant(spark):
     assert all(r["drop_reason"] == "low_quality" for r in junk)
 
 
+def test_whitespace_twins_straddling_punct_cut_are_not_duplicates(spark):
+    # the two texts differ only in whitespace, so they normalize alike,
+    # but punct_ratio = 120 punct / n_chars straddles the 0.2 cut:
+    # 120/539 with single spaces (factor 0.5), 120/658 with double
+    # spaces (factor 1.0).  The duplicate digest keys on the same text
+    # the signals score, so the failing twin cannot take the passing
+    # one down with it as 'duplicate'.
+    single = " ".join(["the", "wo!!"] * 60)
+    double = "  ".join(["the", "wo!!"] * 60)
+    d = _docs(spark, [(1, "s1", single), (2, "s1", double)])
+    out = {r["doc_id"]: r for r in
+           curate_corpus(d, min_tokens=5, min_quality=0.6).collect()}
+    assert out[1]["quality_score"] == 0.5
+    assert out[2]["quality_score"] == 1.0
+    assert out[1]["drop_reason"] == "low_quality"
+    assert out[2]["keep"] and out[2]["drop_reason"] == ""
+    assert [out[i]["canonical_id"] for i in (1, 2)] == [1, 2]
+
+
 def test_decontamination_wiring_and_reason_order(spark):
     # doc 2 is an exact dup of doc 1 AND contaminated; contamination
     # outranks duplicate in the priority chain
@@ -155,7 +174,11 @@ def test_signal_udf_property_parity(spark):
 
     raw = st.text(
         alphabet=string.ascii_letters + string.digits + string.punctuation
-        + " \t\n\r\x0b\x0c\x1c\x85\xa0" + "éñ±",
+        + " \t\n\r\x0b\x0c\x1c\x85\xa0" + "éñ±"
+        # case-mapping edge codepoints (Python str.lower vs Spark lower):
+        # final sigma, Turkish dotted/dotless i, capital sharp s, a
+        # titlecase digraph
+        + "Σσς" + "İı" + "ẞß" + "ǅ",
         max_size=60,
     )
 

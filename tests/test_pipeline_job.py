@@ -87,6 +87,38 @@ def test_job_resume(spark, tmp_path):
     assert not (s1 & s2)
 
 
+def test_failed_write_unpersists_shard_cache(spark, tmp_path, monkeypatch):
+    """A sink write that raises must not leave the shard's persisted
+    extract+sessionize plan cached."""
+    from pyspark import StorageLevel
+
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark import job
+
+    in_dir = str(tmp_path / "in")
+    fixtures.transcripts_spark_df(spark, 4, seed=3).write.parquet(
+        os.path.join(in_dir, "transcripts.parquet"))
+    results, writes = [], []
+
+    def pipeline(*a, **kw):
+        results.append(run_pipeline(*a, **kw))
+        return results[-1]
+
+    def write_table(df, root, name, mode):
+        writes.append(name)
+        if len(writes) == 2:
+            raise OSError("sink unavailable")
+        return real_write(df, root, name, mode)
+
+    real_write = job.tio.write_table
+    monkeypatch.setattr(job, "run_pipeline", pipeline)
+    monkeypatch.setattr(job.tio, "write_table", write_table)
+    with pytest.raises(OSError, match="sink unavailable"):
+        job.main(["--input", in_dir, "--output", str(tmp_path / "out"),
+                  "--no-raw-text"])
+    assert writes[0] == "extracted_turns"
+    assert results[0].extracted_turns.storageLevel == StorageLevel.NONE
+
+
 def test_manifest_refuses_shard_count_change(spark, tmp_path):
     """Round-3 review fix: pmod(hash, n) bucketing is not stable across
     n, so resuming with a different --shards would silently skip every
