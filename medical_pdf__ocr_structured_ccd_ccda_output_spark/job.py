@@ -85,19 +85,22 @@ def main(argv: list[str] | None = None) -> None:
             with_narrative=args.narrative,
             max_text_chars=args.max_text_chars or None,
         )
-        # every sink below derives from the extract+sessionize plan;
-        # without a persist, each of the ~15 write actions re-executes
-        # the scan, the Arrow cleaning UDF, and the conv_id shuffle
-        # from scratch (round-3 review fix).  MEMORY_AND_DISK: a shard
-        # that outgrows executor memory spills instead of recomputing.
+        # every sink below derives from these frames (quality aggregate,
+        # extract+sessionize plan, dedup output); without a persist each
+        # of the ~15 write actions re-executes the scan, the Arrow
+        # cleaning UDF, the conv_id shuffle and the grouped dedup.
+        # Persisted in dependency order, so each cached plan reads the
+        # caches before it.  MEMORY_AND_DISK: a shard that outgrows
+        # executor memory spills instead of recomputing.  Unpersisted on
+        # every way out: a failed write must not leave the shard's caches
+        # pinned while the next shard runs.
         from pyspark import StorageLevel
 
-        res.extracted_turns.persist(StorageLevel.MEMORY_AND_DISK)
-        # unpersist on every way out: a failed write must not leave the
-        # shard's cache pinned while the next shard runs
         mode = "overwrite"
         suffix = f"_shard{shard}" if args.shards > 1 else ""
         try:
+            for df in res.to_persist:
+                df.persist(StorageLevel.MEMORY_AND_DISK)
             tio.write_table(res.extracted_turns, args.output, f"extracted_turns{suffix}", mode)
             tio.write_table(res.visit_spans, args.output, f"visit_spans{suffix}", mode)
             tio.write_table(res.documents, args.output, f"documents{suffix}", mode)
@@ -126,7 +129,8 @@ def main(argv: list[str] | None = None) -> None:
             total += n
             manifest.mark_done(shard, n, n_shards=args.shards)
         finally:
-            res.extracted_turns.unpersist()
+            for df in res.to_persist:
+                df.unpersist()
         print(f"[shard {shard}] {n} turns committed")
 
     dt = time.time() - t0

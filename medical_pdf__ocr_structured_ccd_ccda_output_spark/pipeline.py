@@ -59,6 +59,9 @@ class PipelineResult:
     allergies: DataFrame | None = None
     plan_items: DataFrame | None = None
     data_quality: DataFrame | None = None
+    # frames every sink above shares, in dependency order: persisting
+    # them in this order lets each cached plan embed the caches before it
+    to_persist: list[DataFrame] = field(default_factory=list)
 
 
 def conversation_quality(transcripts: DataFrame) -> DataFrame:
@@ -124,13 +127,19 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
                  with_narrative: bool = False,
                  max_text_chars: int | None = None) -> PipelineResult:
     quarantine = None
+    to_persist = []
     if with_validation:
-        transcripts, quarantine = apply_quarantine(transcripts)
+        # one aggregate feeds both the anti-join's broadcast side and the
+        # quarantine sink
+        quality = conversation_quality(transcripts)
+        to_persist.append(quality)
+        transcripts, quarantine = apply_quarantine(transcripts, quality)
     extracted = extract_turns(transcripts, with_sections=True)
     if skew_aware:
         turns = assign_visits_skew_aware(extracted, bucket_size=skew_bucket_size)
     else:
         turns = assign_visits(extracted)
+    to_persist.append(turns)
 
     visits = visit_rollup(turns, include_raw_text=include_raw_text,
                           max_text_chars=max_text_chars)
@@ -161,14 +170,15 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
         med_c = dedup_entities(med_raw, "medication")
         prob_c = dedup_entities(prob_raw, "problem")
         lab_c = dedup_entities(lab_raw, "result")
+        all_c = dedup_entities(extract_allergies(turns), "allergy")
+        plan_c = dedup_entities(extract_plan_items(turns), "plan")
+        to_persist += [med_c, prob_c, lab_c, all_c, plan_c]
         meds, med_log = split_dedup_output(med_c)
         probs, prob_log = split_dedup_output(prob_c)
         labs, lab_log = split_dedup_output(lab_c)
         vits = extract_vitals(turns)
-        alls, all_log = split_dedup_output(
-            dedup_entities(extract_allergies(turns), "allergy"))
-        plans, plan_log = split_dedup_output(
-            dedup_entities(extract_plan_items(turns), "plan"))
+        alls, all_log = split_dedup_output(all_c)
+        plans, plan_log = split_dedup_output(plan_c)
         log = (
             med_log.withColumn("entity_type", F.lit("medication"))
             .unionByName(prob_log.withColumn("entity_type", F.lit("problem")))
@@ -246,4 +256,5 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
         allergies=alls,
         plan_items=plans,
         data_quality=data_quality,
+        to_persist=to_persist,
     )
