@@ -16,7 +16,7 @@ import argparse
 import os
 import time
 
-from pyspark.sql import functions as F
+from pyspark.sql import Observation, functions as F
 
 from .pipeline import run_pipeline
 from .session import get_spark, tune_scan_splits
@@ -101,7 +101,12 @@ def main(argv: list[str] | None = None) -> None:
         try:
             for df in res.to_persist:
                 df.persist(StorageLevel.MEMORY_AND_DISK)
-            tio.write_table(res.extracted_turns, args.output, f"extracted_turns{suffix}", mode)
+            # the committed row count rides on the write itself (a fresh
+            # Observation per shard: each observes one DataFrame only)
+            rows = Observation()
+            tio.write_table(
+                res.extracted_turns.observe(rows, F.count(F.lit(1)).alias("n")),
+                args.output, f"extracted_turns{suffix}", mode)
             tio.write_table(res.visit_spans, args.output, f"visit_spans{suffix}", mode)
             tio.write_table(res.documents, args.output, f"documents{suffix}", mode)
             if res.medications is not None:
@@ -123,9 +128,7 @@ def main(argv: list[str] | None = None) -> None:
             tio.write_table(res.metrics, args.output, f"metrics{suffix}", mode)
             for stage, ldf in res.lineage.items():
                 tio.write_table(ldf, args.output, f"lineage_{stage}{suffix}", mode)
-            # read back through the same IO abstraction the writes used —
-            # a hardcoded parquet path crashes under an Iceberg output
-            n = tio.read_table(spark, args.output, f"extracted_turns{suffix}").count()
+            n = rows.get["n"]
             total += n
             manifest.mark_done(shard, n, n_shards=args.shards)
         finally:
