@@ -16,7 +16,11 @@ Two tiers, per the reference's semantics (deduplication_service.py):
 
 The dedup decision log (enterprise improvement #3 analog) is emitted
 from the same pass as union-schema rows (row_kind='log') so merge and
-log cost one grouped shuffle; split_dedup_output() separates them.
+log cost one grouped shuffle.  dedup_all() runs every entity kind in
+that one pass (one shuffle, one Python-worker pass for all five kinds);
+kind_output() and dedup_log() read each kind's rows and the combined
+log off it.  dedup_entities() is dedup_all() over a single kind, and
+split_dedup_output() separates its entities from its log.
 """
 
 from __future__ import annotations
@@ -78,135 +82,224 @@ _KIND_SPEC = {
 }
 
 
-def _output_schema(kind: str) -> str:
+# merge-output columns every kind shares, after its entity fields
+_MERGE_COLUMNS = {
+    "source_pages": "array<int>", "source_line_in_turn": "int",
+    "merge_confidence": "double",
+    "alternative_representations": "array<string>",
+    "value_conflicts_json": "string",
+}
+# decision-log columns: union-schema name -> (dedup_log name, type)
+_LOG_COLUMNS = {
+    "log_action": ("action", "string"), "log_reason": ("reason", "string"),
+    "log_item1": ("item1", "string"), "log_item2": ("item2", "string"),
+    "log_similarity": ("similarity", "double"),
+    "log_threshold": ("threshold", "double"),
+    "log_source_pages": ("source_pages", "array<int>"),
+}
+
+
+def _output_schema(kinds: list[str]) -> str:
     # log columns carry a log_ prefix in the union schema so entity
     # fields can never collide (the plan kind's key IS named 'action');
-    # split_dedup_output aliases them back for consumers
-    ent = ", ".join(f"{f} string" for f in _KIND_SPEC[kind]["fields"])
-    return (
-        "conv_id string, visit_id string, row_kind string, "
-        f"{ent}, "
-        "source_pages array<int>, source_line_in_turn int, "
-        "merge_confidence double, "
-        "alternative_representations array<string>, value_conflicts_json string, "
-        "log_action string, log_reason string, log_item1 string, "
-        "log_item2 string, log_similarity double, log_threshold double, "
-        "log_source_pages array<int>"
-    )
+    # split_dedup_output aliases them back for consumers.  The entity
+    # fields of different kinds are distinct, so several kinds share
+    # one flat schema.
+    cols = {
+        "entity_type": "string", "conv_id": "string", "visit_id": "string",
+        "row_kind": "string",
+        **{f: "string" for k in kinds for f in _KIND_SPEC[k]["fields"]},
+        **_MERGE_COLUMNS,
+        **{c: t for c, (_, t) in _LOG_COLUMNS.items()},
+    }
+    return ", ".join(f"{c} {t}" for c, t in cols.items())
 
 
-def dedup_entities(entities: DataFrame, kind: str,
-                   threshold: float = rules.FUZZY_THRESHOLD,
-                   buckets: int | None = None) -> DataFrame:
-    """Greedy dedup per (conv_id, visit_id); returns union-schema rows
-    (row_kind in {'entity','log'}).  Use split_dedup_output() after.
+def _kind_columns(kind: str) -> list[str]:
+    """dedup_entities' output columns for one kind, in schema order."""
+    return ["conv_id", "visit_id", "row_kind", *_KIND_SPEC[kind]["fields"],
+            *_MERGE_COLUMNS, *_LOG_COLUMNS]
 
-    Execution is BUCKETED: the shuffle key is a hash bucket of the
-    logical group key and each Python call processes every group in its
-    bucket via pandas groupby.  One Arrow batch + one function call per
+
+def _log_aliases() -> list:
+    return [F.col(c).alias(a) for c, (a, _) in _LOG_COLUMNS.items()]
+
+
+def _merge_group(kind: str, conv_id, visit_id, records: list[dict],
+                 threshold: float, all_fields: list[str]) -> list[dict]:
+    """Union-schema rows (entities, then log entries) of one (conv_id,
+    visit_id) group of one kind, in document order."""
+    spec = _KIND_SPEC[kind]
+    fields = spec["fields"]
+    merged, log = spec["merge"](records, threshold)
+    no_fields = {f: None for f in all_fields}
+    no_log = {c: None for c in _LOG_COLUMNS}
+    out = []
+    for m in merged:
+        vc = m.get("value_conflicts")
+        out.append({
+            "entity_type": kind, "conv_id": conv_id, "visit_id": visit_id,
+            "row_kind": "entity",
+            **no_fields,
+            **{f: m.get(f) for f in fields},
+            "source_pages": [int(p) for p in m.get("source_pages", [])],
+            # base record's document-order ordinal (merge() copies
+            # the kept record's fields) — lets renderers sort
+            # same-page entities in true document order instead of
+            # a pinned 0
+            "source_line_in_turn": (
+                int(m["source_line_in_turn"])
+                if m.get("source_line_in_turn") is not None else None
+            ),
+            "merge_confidence": m.get("merge_confidence"),
+            "alternative_representations": m.get("alternative_representations"),
+            "value_conflicts_json": json.dumps(vc) if vc else None,
+            **no_log,
+        })
+    for entry in log:
+        out.append({
+            "entity_type": kind, "conv_id": conv_id, "visit_id": visit_id,
+            "row_kind": "log",
+            **no_fields,
+            "source_pages": None, "source_line_in_turn": None,
+            "merge_confidence": None,
+            "alternative_representations": None,
+            "value_conflicts_json": None,
+            "log_action": entry["action"],
+            "log_reason": entry["reason"],
+            "log_item1": entry["item1"], "log_item2": entry["item2"],
+            "log_similarity": entry["similarity"],
+            "log_threshold": entry["threshold"],
+            "log_source_pages": [int(p) for p in entry["source_pages"]
+                                 if p is not None],
+        })
+    return out
+
+
+def dedup_all(entities: dict[str, DataFrame],
+              threshold: float = rules.FUZZY_THRESHOLD,
+              buckets: int | None = None) -> DataFrame:
+    """Greedy dedup per (kind, conv_id, visit_id) of several entity
+    kinds in ONE grouped pass; `entities` maps a _KIND_SPEC kind to its
+    entity frame.  Returns union-schema rows: `entity_type` (the kind),
+    row_kind in {'entity','log'}, every kind's entity fields, the merge
+    columns and the log_* columns.  kind_output() / dedup_log() read the
+    sinks off it; cache it when more than one of them is consumed.
+
+    Execution is BUCKETED: the shuffle key is a hash bucket of
+    (conv_id, visit_id) and each Python call processes every group of
+    every kind in its bucket.  One Arrow batch + one function call per
     (conv,visit) group costs ~5 ms of serialization overhead regardless
     of group size — fatal when groups are tiny and plentiful (the
     common case: tens of entities per visit, millions of visits).
     Bucketing amortizes that to one call per bucket (measured 10.5 s ->
     ~0.6 s on the 2 000-group contract query) and the bucket key is
-    uniform, so no logical hot key can skew the shuffle."""
+    uniform, so no logical hot key can skew the shuffle.  Fusing the
+    kinds makes that one shuffle and one Python-worker pass for all of
+    them instead of one per kind.  A bucket holds the same rows of a
+    kind whether the kind runs alone or fused, so both give the same
+    groups in the same order."""
     import pandas as pd
+    from pyspark.sql.types import IntegralType
 
-    spec = _KIND_SPEC[kind]
-    key, fields, merge = spec["key"], spec["fields"], spec["merge"]
+    kinds = list(entities)
+    all_fields = [f for k in kinds for f in _KIND_SPEC[k]["fields"]]
+    columns = {k: df.columns for k, df in entities.items()}
+    int_columns = {c for df in entities.values() for c in df.schema.fieldNames()
+                   if isinstance(df.schema[c].dataType, IntegralType)}
 
     def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         from itertools import groupby as igroupby
 
-        sort_cols = [c for c in ("source_page", "source_line_in_turn")
-                     if c in pdf.columns]
-        # one global sort, ONE to_dict over the whole bucket (a to_dict
-        # per tiny group costs ~1 ms each and dominated the pass), then
-        # consecutive-key grouping — document order inside each group is
-        # preserved by the stable sort (greedy results depend on it)
-        pdf = pdf.sort_values(
-            ["conv_id", "visit_id"] + sort_cols + [key], kind="mergesort"
-        ).drop(columns=["_bucket"])
-        pdf = pdf.astype(object).where(pd.notna(pdf), None)
-        all_records = pdf.to_dict("records")
         out: list[dict] = []
-        for (conv_id, visit_id), rec_iter in igroupby(
-                all_records, key=lambda r: (r["conv_id"], r["visit_id"])):
-            records = list(rec_iter)
-            merged, log = merge(records, threshold)
-            for m in merged:
-                vc = m.get("value_conflicts")
-                out.append({
-                    "conv_id": conv_id, "visit_id": visit_id,
-                    "row_kind": "entity",
-                    **{f: m.get(f) for f in fields},
-                    "source_pages": [int(p) for p in m.get("source_pages", [])],
-                    # base record's document-order ordinal (merge() copies
-                    # the kept record's fields) — lets renderers sort
-                    # same-page entities in true document order instead of
-                    # a pinned 0
-                    "source_line_in_turn": (
-                        int(m["source_line_in_turn"])
-                        if m.get("source_line_in_turn") is not None else None
-                    ),
-                    "merge_confidence": m.get("merge_confidence"),
-                    "alternative_representations":
-                        m.get("alternative_representations"),
-                    "value_conflicts_json": json.dumps(vc) if vc else None,
-                    "log_action": None, "log_reason": None, "log_item1": None,
-                    "log_item2": None, "log_similarity": None,
-                    "log_threshold": None, "log_source_pages": None,
-                })
-            for entry in log:
-                out.append({
-                    "conv_id": conv_id, "visit_id": visit_id,
-                    "row_kind": "log",
-                    **{f: None for f in fields},
-                    "source_pages": None, "source_line_in_turn": None,
-                    "merge_confidence": None,
-                    "alternative_representations": None,
-                    "value_conflicts_json": None,
-                    "log_action": entry["action"],
-                    "log_reason": entry["reason"],
-                    "log_item1": entry["item1"], "log_item2": entry["item2"],
-                    "log_similarity": entry["similarity"],
-                    "log_threshold": entry["threshold"],
-                    "log_source_pages": [int(p) for p in entry["source_pages"]
-                                         if p is not None],
-                })
+        for kind in kinds:
+            sub = pdf.loc[pdf["_kind"] == kind, columns[kind]]
+            if sub.empty:
+                continue
+            # Arrow hands an integer column with a null anywhere in the
+            # bucket over as float64; restore the integer dtype when
+            # this kind's rows have none, as a bucket of the kind alone
+            # would have it
+            sub = sub.astype({
+                c: "int64" for c in int_columns.intersection(sub.columns)
+                if sub[c].dtype.kind == "f" and sub[c].notna().all()
+            })
+            sort_cols = [c for c in ("source_page", "source_line_in_turn")
+                         if c in sub.columns]
+            # one global sort, ONE to_dict over the kind's rows (a
+            # to_dict per tiny group costs ~1 ms each and dominated the
+            # pass), then consecutive-key grouping — document order
+            # inside each group is preserved by the stable sort (greedy
+            # results depend on it)
+            sub = sub.sort_values(
+                ["conv_id", "visit_id"] + sort_cols + [_KIND_SPEC[kind]["key"]],
+                kind="mergesort",
+            )
+            sub = sub.astype(object).where(pd.notna(sub), None)
+            for (conv_id, visit_id), rec_iter in igroupby(
+                    sub.to_dict("records"),
+                    key=lambda r: (r["conv_id"], r["visit_id"])):
+                out += _merge_group(kind, conv_id, visit_id, list(rec_iter),
+                                    threshold, all_fields)
         return pd.DataFrame(out)
 
+    union = None
+    for kind, df in entities.items():
+        tagged = df.withColumn("_kind", F.lit(kind))
+        union = tagged if union is None else union.unionByName(
+            tagged, allowMissingColumns=True)
     if buckets is None:
         # one bucket per shuffle partition: buckets ARE the tasks of the
         # grouped-map stage, so this matches the session's configured
         # parallelism; raise it explicitly for very large clusters
-        buckets = int(entities.sparkSession.conf.get(
+        buckets = int(union.sparkSession.conf.get(
             "spark.sql.shuffle.partitions", "200"))
-    bucketed = entities.withColumn(
+    bucketed = union.withColumn(
         "_bucket", F.pmod(F.xxhash64("conv_id", "visit_id"), F.lit(buckets))
     )
     return bucketed.groupBy("_bucket").applyInPandas(
-        per_bucket, schema=_output_schema(kind)
+        per_bucket, schema=_output_schema(kinds)
     )
+
+
+def kind_output(fused: DataFrame, kind: str) -> DataFrame:
+    """One kind's rows of dedup_all output, in dedup_entities' schema."""
+    return fused.filter(F.col("entity_type") == kind).select(*_kind_columns(kind))
+
+
+def dedup_entities(entities: DataFrame, kind: str,
+                   threshold: float = rules.FUZZY_THRESHOLD,
+                   buckets: int | None = None) -> DataFrame:
+    """Greedy dedup per (conv_id, visit_id) of one kind; returns
+    union-schema rows (row_kind in {'entity','log'}).  Use
+    split_dedup_output() after.  This is dedup_all over the one kind
+    (same bucketed pass, same per-bucket code)."""
+    return kind_output(dedup_all({kind: entities}, threshold, buckets), kind)
 
 
 def split_dedup_output(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(merged_entities, decision_log) — cache `combined` upstream if both
-    sides are consumed."""
+    """(merged_entities, decision_log) of one kind's union-schema rows
+    (dedup_entities or kind_output output) — cache `combined` upstream
+    if both sides are consumed.  A pipeline that dedups several kinds
+    runs dedup_all once and reads each kind's entities with
+    kind_output and every kind's log with dedup_log instead."""
     ent = combined.filter(F.col("row_kind") == "entity").drop(
-        "row_kind", "log_action", "log_reason", "log_item1", "log_item2",
-        "log_similarity", "log_threshold", "log_source_pages")
+        "row_kind", *_LOG_COLUMNS)
     log = combined.filter(F.col("row_kind") == "log").select(
         "conv_id", "visit_id",
-        F.col("log_action").alias("action"),
-        F.col("log_reason").alias("reason"),
-        F.col("log_item1").alias("item1"),
-        F.col("log_item2").alias("item2"),
-        F.col("log_similarity").alias("similarity"),
-        F.col("log_threshold").alias("threshold"),
-        F.col("log_source_pages").alias("source_pages"),
+        *_log_aliases(),
     )
     return ent, log
+
+
+def dedup_log(fused: DataFrame) -> DataFrame:
+    """Every kind's decision log from dedup_all output: split_dedup_output's
+    log columns plus the kind as `entity_type`, last."""
+    return fused.filter(F.col("row_kind") == "log").select(
+        "conv_id", "visit_id",
+        *_log_aliases(),
+        "entity_type",
+    )
 
 
 def exact_dedup_sql(entities: DataFrame, kind: str) -> DataFrame:

@@ -6,7 +6,9 @@ Shuffle budget (the thing that matters at 100 TB):
   stage 2  ONE shuffle on conv_id for the ordering window (or the
            skew-aware bucketed variant's (conv_id,bucket) shuffles)
   stage 3  groupBy rollups reuse the conv_id partitioning where
-           possible; entity dedup shuffles on (conv_id, visit_id)
+           possible; entity dedup is ONE shuffle on a (conv_id,
+           visit_id) bucket for all five kinds (dedup_all), whose
+           output every entity sink, the dedup log and the XML read
 Lineage + metrics ride on the same DataFrames (no extra scans besides
 the small aggregates).
 """
@@ -17,7 +19,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .operators.dedup import dedup_entities, split_dedup_output
+from .operators.dedup import dedup_all, dedup_log, kind_output, split_dedup_output
 from .operators.entities import (
     extract_allergies,
     extract_lab_results,
@@ -162,30 +164,20 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
 
     meds = probs = labs = log = vits = alls = plans = None
     if with_entities:
-        import pyspark.sql.functions as F
-
-        med_raw = extract_medications(turns)
-        prob_raw = extract_problems(turns)
-        lab_raw = extract_lab_results(turns)
-        med_c = dedup_entities(med_raw, "medication")
-        prob_c = dedup_entities(prob_raw, "problem")
-        lab_c = dedup_entities(lab_raw, "result")
-        all_c = dedup_entities(extract_allergies(turns), "allergy")
-        plan_c = dedup_entities(extract_plan_items(turns), "plan")
-        to_persist += [med_c, prob_c, lab_c, all_c, plan_c]
-        meds, med_log = split_dedup_output(med_c)
-        probs, prob_log = split_dedup_output(prob_c)
-        labs, lab_log = split_dedup_output(lab_c)
-        vits = extract_vitals(turns)
-        alls, all_log = split_dedup_output(all_c)
-        plans, plan_log = split_dedup_output(plan_c)
-        log = (
-            med_log.withColumn("entity_type", F.lit("medication"))
-            .unionByName(prob_log.withColumn("entity_type", F.lit("problem")))
-            .unionByName(lab_log.withColumn("entity_type", F.lit("result")))
-            .unionByName(all_log.withColumn("entity_type", F.lit("allergy")))
-            .unionByName(plan_log.withColumn("entity_type", F.lit("plan")))
+        fused = dedup_all({
+            "medication": extract_medications(turns),
+            "problem": extract_problems(turns),
+            "result": extract_lab_results(turns),
+            "allergy": extract_allergies(turns),
+            "plan": extract_plan_items(turns),
+        })
+        to_persist.append(fused)
+        meds, probs, labs, alls, plans = (
+            split_dedup_output(kind_output(fused, kind))[0]
+            for kind in ("medication", "problem", "result", "allergy", "plan")
         )
+        log = dedup_log(fused)
+        vits = extract_vitals(turns)
 
     lineage = {
         "extracted_turns": lineage_rows(
