@@ -15,13 +15,38 @@ from __future__ import annotations
 import argparse
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import Observation, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.util import inheritable_thread_target
 
 from .pipeline import run_pipeline
 from .session import get_spark, tune_scan_splits
 from .sources import io as tio
 from .sources.manifest import Manifest
+
+
+# sink writes in flight at once; a small fixed pool bounds the driver
+# memory the concurrent jobs hold
+SINK_WRITERS = 4
+
+
+def write_concurrently(spark, sinks: list[tuple[str, DataFrame]],
+                       location: str, mode: str) -> None:
+    """Write each (name, df) through tio.write_table, SINK_WRITERS at a
+    time, started in list order.  Waits for every write, then raises the
+    first failure in list order.  Each write runs with a copy of the
+    calling thread's Spark local properties (job group, description,
+    scheduler pool), taken when it is submitted."""
+    with ThreadPoolExecutor(SINK_WRITERS, thread_name_prefix="sink") as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(tio.write_table),
+                        df, location, name, mode)
+            for name, df in sinks
+        ]
+    for f in futures:
+        if f.exception() is not None:
+            raise f.exception()
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -104,30 +129,32 @@ def main(argv: list[str] | None = None) -> None:
             # the committed row count rides on the write itself (a fresh
             # Observation per shard: each observes one DataFrame only)
             rows = Observation()
-            tio.write_table(
-                res.extracted_turns.observe(rows, F.count(F.lit(1)).alias("n")),
-                args.output, f"extracted_turns{suffix}", mode)
-            tio.write_table(res.visit_spans, args.output, f"visit_spans{suffix}", mode)
-            tio.write_table(res.documents, args.output, f"documents{suffix}", mode)
-            if res.medications is not None:
-                tio.write_table(res.medications, args.output, f"medications{suffix}", mode)
-                tio.write_table(res.problems, args.output, f"problems{suffix}", mode)
-                tio.write_table(res.lab_results, args.output, f"lab_results{suffix}", mode)
-                tio.write_table(res.vitals, args.output, f"vitals{suffix}", mode)
-                tio.write_table(res.allergies, args.output, f"allergies{suffix}", mode)
-                tio.write_table(res.plan_items, args.output, f"plan_items{suffix}", mode)
-                tio.write_table(res.dedup_log, args.output, f"dedup_log{suffix}", mode)
-            if res.quarantine is not None:
-                tio.write_table(res.quarantine, args.output, f"quarantine{suffix}", mode)
-            if res.data_quality is not None:
-                tio.write_table(res.data_quality, args.output, f"data_quality{suffix}", mode)
-            if res.ccd_xml is not None:
-                tio.write_table(res.ccd_xml, args.output, f"ccd_xml{suffix}", mode)
-            if res.narrative is not None:
-                tio.write_table(res.narrative, args.output, f"narrative{suffix}", mode)
-            tio.write_table(res.metrics, args.output, f"metrics{suffix}", mode)
-            for stage, ldf in res.lineage.items():
-                tio.write_table(ldf, args.output, f"lineage_{stage}{suffix}", mode)
+            turns = res.extracted_turns.observe(rows, F.count(F.lit(1)).alias("n"))
+            # written alone, one after the other: extracted_turns fills
+            # the quality and turn caches, dedup_log the dedup cache.
+            # With every cache filled, no two concurrent writes race to
+            # fill one (each race costs a Spark job of its own).
+            for name, df in (("extracted_turns", turns), ("dedup_log", res.dedup_log)):
+                if df is not None:
+                    tio.write_table(df, args.output, f"{name}{suffix}", mode)
+            # the rest concurrently: each write is mostly fixed Spark job
+            # latency, so one at a time leaves the cores idle.  The
+            # longest sink goes first, so it does not start last and run
+            # alone.  The manifest commits only after every write
+            # succeeded.
+            sinks = [
+                ("ccd_xml", res.ccd_xml), ("narrative", res.narrative),
+                ("visit_spans", res.visit_spans), ("documents", res.documents),
+                ("medications", res.medications), ("problems", res.problems),
+                ("lab_results", res.lab_results), ("vitals", res.vitals),
+                ("allergies", res.allergies), ("plan_items", res.plan_items),
+                ("quarantine", res.quarantine), ("data_quality", res.data_quality),
+                ("metrics", res.metrics),
+                *((f"lineage_{stage}", ldf) for stage, ldf in res.lineage.items()),
+            ]
+            write_concurrently(
+                spark, [(f"{name}{suffix}", df) for name, df in sinks if df is not None],
+                args.output, mode)
             n = rows.get["n"]
             total += n
             manifest.mark_done(shard, n, n_shards=args.shards)
