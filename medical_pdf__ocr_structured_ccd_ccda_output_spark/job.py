@@ -17,7 +17,8 @@ import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.util import inheritable_thread_target
 
 from .pipeline import run_pipeline
@@ -31,7 +32,7 @@ from .sources.manifest import Manifest
 SINK_WRITERS = 4
 
 
-def write_concurrently(spark, sinks: list[tuple[str, DataFrame]],
+def write_concurrently(spark: SparkSession, sinks: list[tuple[str, DataFrame]],
                        location: str, mode: str) -> None:
     """Write each (name, df) through tio.write_table, SINK_WRITERS at a
     time, started in list order.  Waits for every write, then raises the
@@ -119,8 +120,6 @@ def main(argv: list[str] | None = None) -> None:
         # executor memory spills instead of recomputing.  Unpersisted on
         # every way out: a failed write must not leave the shard's caches
         # pinned while the next shard runs.
-        from pyspark import StorageLevel
-
         mode = "overwrite"
         suffix = f"_shard{shard}" if args.shards > 1 else ""
         try:

@@ -126,14 +126,14 @@ def _log_aliases() -> list:
 
 
 def _merge_group(kind: str, conv_id, visit_id, records: list[dict],
-                 threshold: float, all_fields: list[str]) -> list[dict]:
+                 threshold: float, no_fields: dict) -> list[dict]:
     """Union-schema rows (entities, then log entries) of one (conv_id,
-    visit_id) group of one kind, in document order."""
+    visit_id) group of one kind, in document order; `no_fields` maps
+    every entity field of the pass to None."""
     spec = _KIND_SPEC[kind]
     fields = spec["fields"]
     merged, log = spec["merge"](records, threshold)
-    no_fields = {f: None for f in all_fields}
-    no_log = {c: None for c in _LOG_COLUMNS}
+    no_log = dict.fromkeys(_LOG_COLUMNS)
     out = []
     for m in merged:
         vc = m.get("value_conflicts")
@@ -203,7 +203,7 @@ def dedup_all(entities: dict[str, DataFrame],
     from pyspark.sql.types import IntegralType
 
     kinds = list(entities)
-    all_fields = [f for k in kinds for f in _KIND_SPEC[k]["fields"]]
+    no_fields = dict.fromkeys(f for k in kinds for f in _KIND_SPEC[k]["fields"])
     columns = {k: df.columns for k, df in entities.items()}
     int_columns = {c for df in entities.values() for c in df.schema.fieldNames()
                    if isinstance(df.schema[c].dataType, IntegralType)}
@@ -240,7 +240,7 @@ def dedup_all(entities: dict[str, DataFrame],
                     sub.to_dict("records"),
                     key=lambda r: (r["conv_id"], r["visit_id"])):
                 out += _merge_group(kind, conv_id, visit_id, list(rec_iter),
-                                    threshold, all_fields)
+                                    threshold, no_fields)
         return pd.DataFrame(out)
 
     union = None
@@ -281,14 +281,12 @@ def split_dedup_output(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(merged_entities, decision_log) of one kind's union-schema rows
     (dedup_entities or kind_output output) — cache `combined` upstream
     if both sides are consumed.  A pipeline that dedups several kinds
-    runs dedup_all once and reads each kind's entities with
-    kind_output and every kind's log with dedup_log instead."""
+    runs dedup_all once, caches it, splits each kind's kind_output with
+    this and reads every kind's log at once with dedup_log."""
     ent = combined.filter(F.col("row_kind") == "entity").drop(
         "row_kind", *_LOG_COLUMNS)
     log = combined.filter(F.col("row_kind") == "log").select(
-        "conv_id", "visit_id",
-        *_log_aliases(),
-    )
+        "conv_id", "visit_id", *_log_aliases())
     return ent, log
 
 

@@ -150,21 +150,6 @@ def _section_xml(code: str, display: str, title: str, body: Column) -> Column:
     )
 
 
-def _agg_rows(df: DataFrame, row: Column, sep: str = "") -> DataFrame:
-    """(conv_id, visit_id, xml): document-order concatenation of rendered
-    rows — sort key (source_page, source_line_in_turn) mirrors the
-    reference's list order."""
-    order = F.struct(
-        F.col("source_page"), F.col("source_line_in_turn"), row.alias("r")
-    )
-    return df.groupBy("conv_id", "visit_id").agg(
-        F.array_join(
-            F.transform(F.array_sort(F.collect_list(order)), lambda s: s["r"]),
-            sep,
-        ).alias("xml")
-    )
-
-
 def _coded_entry(text_col: Column, code_map: list[tuple[str, str]],
                  system: str) -> Column:
     """First-match substring code lookup -> <entry> element or ''
@@ -202,18 +187,6 @@ def _problem_row() -> Column:
     )
 
 
-def problem_section(problems: DataFrame) -> DataFrame:
-    """Problem List (LOINC 11450-4, xml_renderer.py:252-279) + SNOMED
-    coded entries.  Expects extract_problems/dedup output columns."""
-    agg = _agg_rows(problems, _problem_row())
-    return agg.select(
-        "conv_id", "visit_id",
-        _section_xml("11450-4", "Problem List", "Problem List",
-                     F.format_string("<list>%s</list>", F.col("xml"))
-                     ).alias("problems_xml"),
-    )
-
-
 _MED_HEADER = (
     "<thead><tr><th>Medication</th><th>Dose</th><th>Frequency</th>"
     "<th>Route</th><th>Source Page</th></tr></thead>"
@@ -229,19 +202,6 @@ def _medication_row() -> Column:
     )
 
 
-def medication_section(medications: DataFrame) -> DataFrame:
-    """Medication History (LOINC 10160-0, xml_renderer.py:281-326)."""
-    agg = _agg_rows(medications, _medication_row())
-    return agg.select(
-        "conv_id", "visit_id",
-        _section_xml(
-            "10160-0", "Medication History", "Medications",
-            F.format_string("<table>%s<tbody>%s</tbody></table>",
-                            F.lit(_MED_HEADER), F.col("xml")),
-        ).alias("medications_xml"),
-    )
-
-
 def _vital_row() -> Column:
     num = F.when(
         F.col("value") == F.floor("value"),
@@ -253,19 +213,6 @@ def _vital_row() -> Column:
             "%s: %s %s", xml_escape(F.col("vital_name")), num,
             xml_escape(F.coalesce(F.col("unit"), F.lit(""))),
         )),
-    )
-
-
-def vitals_section(vitals: DataFrame) -> DataFrame:
-    """Vital Signs (LOINC 8716-3, xml_renderer.py:328-353).  Like the
-    reference, only single-value vitals render as list items (its loop
-    requires vital_data['value'], which blood_pressure lacks)."""
-    agg = _agg_rows(vitals.filter(F.col("value").isNotNull()), _vital_row())
-    return agg.select(
-        "conv_id", "visit_id",
-        _section_xml("8716-3", "Vital Signs", "Vital Signs",
-                     F.format_string("<list>%s</list>", F.col("xml"))
-                     ).alias("vitals_xml"),
     )
 
 
@@ -294,20 +241,6 @@ def _result_row() -> Column:
     )
 
 
-def results_section(results: DataFrame) -> DataFrame:
-    """Results (LOINC 30954-2, xml_renderer.py:355-403; flag fallback
-    'normal') + LOINC coded entries."""
-    agg = _agg_rows(results, _result_row())
-    return agg.select(
-        "conv_id", "visit_id",
-        _section_xml(
-            "30954-2", "Relevant diagnostic tests/laboratory data", "Results",
-            F.format_string("<table>%s<tbody>%s</tbody></table>",
-                            F.lit(_RESULT_HEADER), F.col("xml")),
-        ).alias("results_xml"),
-    )
-
-
 def _plan_row() -> Column:
     item = F.concat(
         xml_escape(F.col("action")),
@@ -319,17 +252,6 @@ def _plan_row() -> Column:
                ).otherwise(F.lit("")),
     )
     return F.format_string("<item>%s</item>", item)
-
-
-def plan_section(plan: DataFrame) -> DataFrame:
-    """Plan of Care (LOINC 18776-5, xml_renderer.py:424-453)."""
-    agg = _agg_rows(plan, _plan_row())
-    return agg.select(
-        "conv_id", "visit_id",
-        _section_xml("18776-5", "Plan of Care", "Plan",
-                     F.format_string("<list>%s</list>", F.col("xml"))
-                     ).alias("plan_xml"),
-    )
 
 
 def entity_sections(medications: DataFrame | None = None,

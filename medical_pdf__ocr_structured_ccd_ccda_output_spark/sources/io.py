@@ -14,16 +14,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(  # type: ignore[attr-defined]
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
-
-
 def is_iceberg_location(location: str) -> bool:
     """True when `location` names an Iceberg catalog prefix
     (catalog[.namespace]) rather than a filesystem directory.

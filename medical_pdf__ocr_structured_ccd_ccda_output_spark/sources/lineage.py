@@ -42,8 +42,3 @@ def lineage_rows(df: DataFrame, run_id: str, stage: str,
         )
     )
 
-
-def observe_counts(df: DataFrame, name: str) -> DataFrame:
-    """Attach a named observation (row count) readable from the
-    QueryExecutionListener / observation metrics after an action."""
-    return df.observe(name, F.count(F.lit(1)).alias("rows"))

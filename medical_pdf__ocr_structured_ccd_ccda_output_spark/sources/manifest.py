@@ -11,8 +11,6 @@ scale (driver-side manifest, no Structured Streaming needed).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -77,10 +75,6 @@ class Manifest:
     def filter_shard(self, transcripts: DataFrame, shard: int,
                      n_shards: int) -> DataFrame:
         return transcripts.filter(shard_of(F.col("conv_id"), n_shards) == shard)
-
-
-def output_shard_dir(base: str, name: str, shard: int) -> str:
-    return os.path.join(base, f"{name}.parquet", f"shard={shard}")
 
 
 class StageManifest:

@@ -6,8 +6,11 @@ import pytest
 
 from medical_pdf__ocr_structured_ccd_ccda_output_spark import fixtures, rules
 from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.dedup import (
+    dedup_all,
     dedup_entities,
+    dedup_log,
     exact_dedup_sql,
+    kind_output,
     split_dedup_output,
 )
 from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.excerpts import (
@@ -176,6 +179,71 @@ def test_exact_dedup_sql_complete_fields_parity(spark):
         "source_page int, source_line_in_turn int")
     al = exact_dedup_sql(alls, "allergy").collect()[0].asDict()
     assert al["merge_confidence"] is None  # merge_simple excludes None page
+
+
+def test_fused_dedup_matches_per_kind(spark):
+    """dedup_all over five kinds, filtered to one kind, equals that kind
+    deduped alone: same entity and log rows, column order and types.
+    Visit c1/v1 holds four kinds (so they share a bucket) and a
+    medication with a null source_page (so Arrow hands the bucket's
+    source_page over as float64); the allergy input has zero rows."""
+    tail = "source_page int, source_line_in_turn int"
+    frames = {
+        "medication": spark.createDataFrame(
+            [("c1", "v1", "Aspirin", "81mg", None, None, 1, 2),
+             ("c1", "v1", "aspirin", "81mg", "daily", "PO", 3, 1),
+             ("c1", "v1", "Metformin", "500mg", None, None, None, 4),
+             ("c1", "v1", "Metformin", "1000mg", "BID", None, 2, 5),
+             ("c2", "v1", "Lisinopril", "10mg", "daily", None, 1, 1)],
+            "conv_id string, visit_id string, name string, dose string, "
+            f"frequency string, route string, {tail}"),
+        "problem": spark.createDataFrame(
+            [("c1", "v1", "Type 2 Diabetes Mellitus", "E11.9", "active", 1, 1),
+             ("c1", "v1", "Type 2 Diabetes Melitus", None, None, 2, 1),
+             ("c1", "v2", "HTN", None, None, 4, 1)],
+            "conv_id string, visit_id string, problem string, "
+            f"icd10_code string, status string, {tail}"),
+        "result": spark.createDataFrame(
+            [("c1", "v1", "Glucose", "110", "mg/dL", None, None, 1, 3),
+             ("c1", "v1", "glucose", "120", "mg/dL", None, "H", 2, 3),
+             ("c2", "v1", "A1c", "6.1", None, None, None, 1, 2),
+             ("c2", "v1", "A1c", "6.1", "%", None, None, 3, 2)],
+            "conv_id string, visit_id string, test_name string, "
+            "value string, unit string, reference_range string, "
+            f"abnormal_flag string, {tail}"),
+        "allergy": spark.createDataFrame(
+            [], f"conv_id string, visit_id string, substance string, {tail}"),
+        "plan": spark.createDataFrame(
+            [("c1", "v1", "Start metformin", "medication", 5, 1),
+             ("c1", "v1", "start Metformin", None, 6, 1),
+             ("c3", "v1", "Follow up in 3 months", "follow_up", 1, 1)],
+            f"conv_id string, visit_id string, action string, category string, {tail}"),
+    }
+    fused = dedup_all(frames).cache()
+    log = dedup_log(fused)
+    assert log.columns == ["conv_id", "visit_id", "action", "reason", "item1",
+                           "item2", "similarity", "threshold", "source_pages",
+                           "entity_type"]
+
+    def rows(df):
+        return sorted(repr(sorted(r.asDict().items())) for r in df.collect())
+
+    for kind, df in frames.items():
+        want_ent, want_log = split_dedup_output(dedup_entities(df, kind))
+        got_ent, got_log = split_dedup_output(kind_output(fused, kind))
+        kind_log = log.filter(log.entity_type == kind).drop("entity_type")
+        assert got_ent.schema == want_ent.schema, kind
+        assert kind_log.schema == got_log.schema == want_log.schema, kind
+        assert rows(got_ent) == rows(want_ent), kind
+        assert rows(got_log) == rows(kind_log) == rows(want_log), kind
+        if kind == "allergy":
+            assert not rows(got_ent) and not rows(got_log)
+    # the integer fix-up keeps value_conflicts' source_page an int
+    glucose = kind_output(fused, "result").filter("test_name = 'Glucose'")
+    conflicts = json.loads(glucose.first()["value_conflicts_json"])
+    assert conflicts == [{"value": "120", "unit": "mg/dL", "source_page": 2}]
+    assert isinstance(conflicts[0]["source_page"], int)
+    fused.unpersist()
 
 
 def test_excerpt_enrichment(spark):

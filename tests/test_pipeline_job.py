@@ -85,18 +85,32 @@ def test_job_resume(spark, tmp_path):
         os.path.join(out_dir, "extracted_turns_shard2.parquet")
     ).select("conv_id").distinct().collect()}
     assert not (s1 & s2)
+    # each shard's rows_out is its own Observation's count
+    rows_out = {r["shard"]: r["rows_out"] for r in man2._rows()}
+    for shard in (1, 2):
+        assert rows_out[shard] == spark.read.parquet(os.path.join(
+            out_dir, f"extracted_turns_shard{shard}.parquet")).count()
 
 
-def test_failed_write_unpersists_shard_cache(spark, tmp_path, monkeypatch):
-    """A sink write that raises must not leave the shard's persisted
-    extract+sessionize plan cached."""
+@pytest.fixture(scope="module")
+def small_input(spark, tmp_path_factory):
+    """Input dir of a 4-conversation job.main run."""
+    in_dir = str(tmp_path_factory.mktemp("small_input"))
+    fixtures.transcripts_spark_df(spark, 4, seed=3).write.parquet(
+        os.path.join(in_dir, "transcripts.parquet"))
+    return in_dir
+
+
+def test_failed_write_unpersists_shard_cache(spark, small_input, tmp_path,
+                                             monkeypatch):
+    """A sink write that raises inside the concurrent phase is re-raised
+    after every other write ran, leaves none of the shard's persisted
+    frames cached, and commits nothing to the manifest."""
     from pyspark import StorageLevel
 
     from medical_pdf__ocr_structured_ccd_ccda_output_spark import job
 
-    in_dir = str(tmp_path / "in")
-    fixtures.transcripts_spark_df(spark, 4, seed=3).write.parquet(
-        os.path.join(in_dir, "transcripts.parquet"))
+    out_dir = str(tmp_path / "out")
     results, writes = [], []
 
     def pipeline(*a, **kw):
@@ -105,7 +119,7 @@ def test_failed_write_unpersists_shard_cache(spark, tmp_path, monkeypatch):
 
     def write_table(df, root, name, mode):
         writes.append(name)
-        if len(writes) == 2:
+        if name == "medications":
             raise OSError("sink unavailable")
         return real_write(df, root, name, mode)
 
@@ -113,10 +127,37 @@ def test_failed_write_unpersists_shard_cache(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(job, "run_pipeline", pipeline)
     monkeypatch.setattr(job.tio, "write_table", write_table)
     with pytest.raises(OSError, match="sink unavailable"):
-        job.main(["--input", in_dir, "--output", str(tmp_path / "out"),
-                  "--no-raw-text"])
-    assert writes[0] == "extracted_turns"
-    assert results[0].extracted_turns.storageLevel == StorageLevel.NONE
+        job.main(["--input", small_input, "--output", out_dir, "--no-raw-text"])
+    assert writes[:2] == ["extracted_turns", "dedup_log"]
+    # the failure did not cut the concurrent phase short
+    assert {"medications", "plan_items", "metrics",
+            "lineage_extracted_turns"} <= set(writes)
+    # quality aggregate, extract+sessionize plan, fused dedup
+    persisted = results[0].to_persist
+    assert len(persisted) == 3
+    assert results[0].extracted_turns is persisted[1]
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+    assert Manifest(spark, os.path.join(out_dir, "_manifest"),
+                    "run_0").completed_shards() == set()
+
+
+def test_job_spark_job_budget(spark, small_input, tmp_path):
+    """One job.main shard over the small fixture runs a pinned number of
+    Spark jobs: a lost persist or a re-split dedup re-executes plans
+    and adds jobs.  Pool threads inherit the caller's job group."""
+    import uuid
+
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark import job
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4()}"
+    sc.setJobGroup(group, "job.main Spark-job budget")
+    try:
+        job.main(["--input", small_input, "--output", str(tmp_path / "out")])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 28
 
 
 def test_manifest_refuses_shard_count_change(spark, tmp_path):
