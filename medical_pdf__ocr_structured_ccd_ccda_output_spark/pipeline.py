@@ -11,6 +11,17 @@ Shuffle budget (the thing that matters at 100 TB):
            output every entity sink, the dedup log and the XML read
 Lineage + metrics ride on the same DataFrames (no extra scans besides
 the small aggregates).
+
+The plan is built by two builders, and ``run_pipeline`` is simply
+``build_outputs(spark, prepare_turns(...))``:
+  prepare_turns  quality aggregate, quarantine, extract, sessionize:
+                 everything the extracted_turns sink needs (TurnsStage)
+  build_outputs  everything downstream of the turns: visits, rollups,
+                 entities + fused dedup, lineage, CCD XML, narrative
+                 (PipelineResult)
+Both only build plans; neither runs a Spark job.  ``job.main`` calls
+them separately so the extracted_turns write, which needs only the
+first, runs while the driver builds the second.
 """
 
 from __future__ import annotations
@@ -118,6 +129,42 @@ def apply_quarantine(transcripts: DataFrame,
     return clean, quality.filter(F.col("quarantined"))
 
 
+@dataclass
+class TurnsStage:
+    """prepare_turns' output: the sessionized turn plan, and with
+    validation on, the per-conversation quality aggregate and the
+    quarantine frame over it."""
+    turns: DataFrame
+    quality: DataFrame | None = None
+    quarantine: DataFrame | None = None
+
+    @property
+    def to_persist(self) -> list[DataFrame]:
+        """The frames every sink shares, in dependency order (the turn
+        plan's anti-join reads the quality aggregate)."""
+        return [df for df in (self.quality, self.turns) if df is not None]
+
+
+def prepare_turns(transcripts: DataFrame,
+                  skew_aware: bool = False,
+                  skew_bucket_size: int = 100_000,
+                  with_validation: bool = True) -> TurnsStage:
+    """Quality aggregate + quarantine, extraction and sessionization:
+    the plan of the extracted_turns sink and the input of build_outputs."""
+    quality = quarantine = None
+    if with_validation:
+        # one aggregate feeds both the anti-join's broadcast side and the
+        # quarantine sink
+        quality = conversation_quality(transcripts)
+        transcripts, quarantine = apply_quarantine(transcripts, quality)
+    extracted = extract_turns(transcripts, with_sections=True)
+    if skew_aware:
+        turns = assign_visits_skew_aware(extracted, bucket_size=skew_bucket_size)
+    else:
+        turns = assign_visits(extracted)
+    return TurnsStage(turns, quality, quarantine)
+
+
 def run_pipeline(spark: SparkSession, transcripts: DataFrame,
                  run_id: str = "run_0",
                  skew_aware: bool = False,
@@ -128,21 +175,27 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
                  with_validation: bool = True,
                  with_narrative: bool = False,
                  max_text_chars: int | None = None) -> PipelineResult:
-    quarantine = None
-    to_persist = []
-    if with_validation:
-        # one aggregate feeds both the anti-join's broadcast side and the
-        # quarantine sink
-        quality = conversation_quality(transcripts)
-        to_persist.append(quality)
-        transcripts, quarantine = apply_quarantine(transcripts, quality)
-    extracted = extract_turns(transcripts, with_sections=True)
-    if skew_aware:
-        turns = assign_visits_skew_aware(extracted, bucket_size=skew_bucket_size)
-    else:
-        turns = assign_visits(extracted)
-    to_persist.append(turns)
+    stage = prepare_turns(transcripts, skew_aware=skew_aware,
+                          skew_bucket_size=skew_bucket_size,
+                          with_validation=with_validation)
+    return build_outputs(spark, stage, run_id=run_id,
+                         with_entities=with_entities, with_xml=with_xml,
+                         include_raw_text=include_raw_text,
+                         with_narrative=with_narrative,
+                         max_text_chars=max_text_chars)
 
+
+def build_outputs(spark: SparkSession, stage: TurnsStage,
+                  run_id: str = "run_0",
+                  with_entities: bool = True,
+                  with_xml: bool = True,
+                  include_raw_text: bool = True,
+                  with_narrative: bool = False,
+                  max_text_chars: int | None = None) -> PipelineResult:
+    """Every sink's plan over ``stage``'s turns.  ``to_persist`` is the
+    stage's frames followed by the fused dedup output."""
+    turns = stage.turns
+    to_persist = stage.to_persist
     visits = visit_rollup(turns, include_raw_text=include_raw_text,
                           max_text_chars=max_text_chars)
     # schema-validation warnings stage (raising Pydantic validators ->
@@ -243,7 +296,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
         lineage=lineage,
         ccd_xml=xml,
         narrative=narrative,
-        quarantine=quarantine,
+        quarantine=stage.quarantine,
         vitals=vits,
         allergies=alls,
         plan_items=plans,

@@ -18,23 +18,30 @@ def shard_of(conv_id_col, n_shards: int):
     return F.pmod(F.xxhash64(conv_id_col), F.lit(n_shards)).cast("int")
 
 
-class Manifest:
+class _RunRows:
+    """A parquet dir of small commit rows: one row appended per commit,
+    read back filtered on run_id.  Subclasses name the columns after
+    run_id."""
+
+    COLUMNS: tuple[tuple[str, str], ...] = ()
+    # read every file's footer, for dirs whose columns changed over time
+    MERGE_SCHEMA = False
+
     def __init__(self, spark: SparkSession, path: str, run_id: str):
         self.spark = spark
         self.path = path
         self.run_id = run_id
 
     def _rows(self):
-        """Manifest rows for this run_id, or [] on first run.  ONLY the
+        """Rows for this run_id, or [] on first run.  ONLY the
         path-not-found case maps to "first run" — a corrupted footer or
         permission error must propagate, not silently restart the whole
         run (round-3 review fix)."""
         from pyspark.errors import AnalysisException
 
         try:
-            # mergeSchema: manifests written before the n_shards column
-            # (and mixed-version appends) must still read cleanly
-            df = self.spark.read.option("mergeSchema", "true").parquet(self.path)
+            df = self.spark.read.option(
+                "mergeSchema", str(self.MERGE_SCHEMA).lower()).parquet(self.path)
         except AnalysisException as e:
             msg = str(e)
             if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
@@ -42,16 +49,30 @@ class Manifest:
             raise
         return df.filter(F.col("run_id") == self.run_id).collect()
 
+    def _append(self, *values) -> None:
+        """Append the row (run_id, *values), built in the JVM: a
+        createDataFrame over a Python list becomes a Python RDD, whose
+        one task waits seconds for a Python worker to start."""
+        cols = [F.lit(self.run_id).cast("string").alias("run_id")] + [
+            F.lit(v).cast(t).alias(c)
+            for (c, t), v in zip(self.COLUMNS, values, strict=True)
+        ]
+        self.spark.range(1, numPartitions=1).select(*cols) \
+            .write.mode("append").parquet(self.path)
+
+
+class Manifest(_RunRows):
+    COLUMNS = (("shard", "int"), ("rows_out", "long"), ("n_shards", "int"))
+    # manifests written before the n_shards column (and mixed-version
+    # appends) must still read cleanly
+    MERGE_SCHEMA = True
+
     def completed_shards(self) -> set[int]:
         return {r["shard"] for r in self._rows()}
 
     def mark_done(self, shard: int, rows_out: int,
                   n_shards: int | None = None) -> None:
-        df = self.spark.createDataFrame(
-            [(self.run_id, shard, rows_out, n_shards)],
-            "run_id string, shard int, rows_out long, n_shards int",
-        )
-        df.coalesce(1).write.mode("append").parquet(self.path)
+        self._append(shard, rows_out, n_shards)
 
     def pending(self, transcripts: DataFrame, n_shards: int) -> list[int]:
         """Pending shard ids for a resume.  Refuses a shard count that
@@ -77,7 +98,7 @@ class Manifest:
         return transcripts.filter(shard_of(F.col("conv_id"), n_shards) == shard)
 
 
-class StageManifest:
+class StageManifest(_RunRows):
     """String-keyed manifest for DAG-shaped jobs (corpus dedup).
 
     The extraction job's unit of resumability is a conv_id hash shard
@@ -91,22 +112,7 @@ class StageManifest:
     outputs back instead of recomputing them.
     """
 
-    def __init__(self, spark: SparkSession, path: str, run_id: str):
-        self.spark = spark
-        self.path = path
-        self.run_id = run_id
-
-    def _rows(self):
-        from pyspark.errors import AnalysisException
-
-        try:
-            df = self.spark.read.parquet(self.path)
-        except AnalysisException as e:
-            msg = str(e)
-            if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                return []
-            raise
-        return df.filter(F.col("run_id") == self.run_id).collect()
+    COLUMNS = (("stage", "string"), ("rows_out", "long"), ("note", "string"))
 
     def completed(self) -> set[str]:
         return {r["stage"] for r in self._rows()}
@@ -138,10 +144,3 @@ class StageManifest:
 
     def mark_done(self, stage: str, rows_out: int) -> None:
         self._append(stage, rows_out, "")
-
-    def _append(self, stage: str, rows_out: int, note: str) -> None:
-        df = self.spark.createDataFrame(
-            [(self.run_id, stage, rows_out, note)],
-            "run_id string, stage string, rows_out long, note string",
-        )
-        df.coalesce(1).write.mode("append").parquet(self.path)

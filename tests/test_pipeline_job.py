@@ -113,8 +113,8 @@ def test_failed_write_unpersists_shard_cache(spark, small_input, tmp_path,
     out_dir = str(tmp_path / "out")
     results, writes = [], []
 
-    def pipeline(*a, **kw):
-        results.append(run_pipeline(*a, **kw))
+    def outputs(*a, **kw):
+        results.append(real_build(*a, **kw))
         return results[-1]
 
     def write_table(df, root, name, mode):
@@ -123,8 +123,8 @@ def test_failed_write_unpersists_shard_cache(spark, small_input, tmp_path,
             raise OSError("sink unavailable")
         return real_write(df, root, name, mode)
 
-    real_write = job.tio.write_table
-    monkeypatch.setattr(job, "run_pipeline", pipeline)
+    real_write, real_build = job.tio.write_table, job.build_outputs
+    monkeypatch.setattr(job, "build_outputs", outputs)
     monkeypatch.setattr(job.tio, "write_table", write_table)
     with pytest.raises(OSError, match="sink unavailable"):
         job.main(["--input", small_input, "--output", out_dir, "--no-raw-text"])
@@ -136,6 +136,113 @@ def test_failed_write_unpersists_shard_cache(spark, small_input, tmp_path,
     persisted = results[0].to_persist
     assert len(persisted) == 3
     assert results[0].extracted_turns is persisted[1]
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+    assert Manifest(spark, os.path.join(out_dir, "_manifest"),
+                    "run_0").completed_shards() == set()
+
+
+def _wrap_job(job, monkeypatch, fail_write=None, fail_build=None):
+    """Wrap job.main's builders and sink writes.  Returns the stages and
+    results the builders produced, the writes entered and finished, and
+    whether the stage's frames were still persisted when the
+    extracted_turns write ended.  The wrapped build_outputs first waits
+    until that write is entered: it fails unless the write starts while
+    the build runs.  A failing build is raised before the write goes on."""
+    import threading
+
+    seen = {"stages": [], "results": [], "entered": [], "finished": [],
+            "turns_write": threading.Event(), "build_raised": threading.Event()}
+    real_prepare, real_build = job.prepare_turns, job.build_outputs
+    real_write = job.tio.write_table
+
+    def prepare(*a, **kw):
+        seen["stages"].append(real_prepare(*a, **kw))
+        return seen["stages"][-1]
+
+    def outputs(*a, **kw):
+        assert seen["turns_write"].wait(60), "extracted_turns did not overlap the build"
+        if fail_build is not None:
+            seen["build_raised"].set()
+            raise fail_build
+        seen["results"].append(real_build(*a, **kw))
+        return seen["results"][-1]
+
+    def write_table(df, root, name, mode):
+        seen["entered"].append(name)
+        if name == "extracted_turns":
+            seen["turns_write"].set()
+            if fail_build is not None:
+                assert seen["build_raised"].wait(60)
+        if name == fail_write:
+            raise OSError(f"{name} sink unavailable")
+        real_write(df, root, name, mode)
+        seen["finished"].append(name)
+        if name == "extracted_turns":
+            seen["cached_at_turns_end"] = all(
+                f.is_cached for f in seen["stages"][0].to_persist)
+
+    monkeypatch.setattr(job, "prepare_turns", prepare)
+    monkeypatch.setattr(job, "build_outputs", outputs)
+    monkeypatch.setattr(job.tio, "write_table", write_table)
+    return seen
+
+
+def test_turns_write_overlaps_build(spark, small_input, tmp_path, monkeypatch):
+    """The extracted_turns write is entered while build_outputs runs:
+    the wrapped build waits for it, so the old build-then-write order
+    fails here after 60 s instead of passing by luck."""
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark import job
+
+    out_dir = str(tmp_path / "out")
+    seen = _wrap_job(job, monkeypatch)
+    job.main(["--input", small_input, "--output", out_dir, "--no-raw-text"])
+    assert seen["entered"][:2] == ["extracted_turns", "dedup_log"]
+    assert set(seen["finished"]) == set(seen["entered"])
+    assert seen["cached_at_turns_end"]
+    assert Manifest(spark, os.path.join(out_dir, "_manifest"),
+                    "run_0").completed_shards() == {0}
+
+
+def test_failed_build_waits_for_turns_write(spark, small_input, tmp_path,
+                                            monkeypatch):
+    """A build_outputs failure while the extracted_turns write runs is
+    raised only after that write finished; the quality and turn caches
+    are unpersisted and nothing is committed."""
+    from pyspark import StorageLevel
+
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark import job
+
+    out_dir = str(tmp_path / "out")
+    seen = _wrap_job(job, monkeypatch, fail_build=RuntimeError("build failed"))
+    with pytest.raises(RuntimeError, match="build failed"):
+        job.main(["--input", small_input, "--output", out_dir, "--no-raw-text"])
+    assert seen["entered"] == seen["finished"] == ["extracted_turns"]
+    # nothing was unpersisted while the write read the caches
+    assert seen["cached_at_turns_end"]
+    persisted = seen["stages"][0].to_persist
+    assert len(persisted) == 2
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+    assert Manifest(spark, os.path.join(out_dir, "_manifest"),
+                    "run_0").completed_shards() == set()
+
+
+def test_failed_turns_write_unpersists_after_build(spark, small_input, tmp_path,
+                                                   monkeypatch):
+    """A failed extracted_turns write is raised once the overlapped build
+    is done; no other sink is written, every persisted frame (the fused
+    dedup output included) is unpersisted and nothing is committed."""
+    from pyspark import StorageLevel
+
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark import job
+
+    out_dir = str(tmp_path / "out")
+    seen = _wrap_job(job, monkeypatch, fail_write="extracted_turns")
+    with pytest.raises(OSError, match="extracted_turns sink unavailable"):
+        job.main(["--input", small_input, "--output", out_dir, "--no-raw-text"])
+    assert seen["entered"] == ["extracted_turns"]
+    assert seen["finished"] == []
+    persisted = seen["results"][0].to_persist
+    assert len(persisted) == 3
     assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
     assert Manifest(spark, os.path.join(out_dir, "_manifest"),
                     "run_0").completed_shards() == set()
@@ -172,6 +279,67 @@ def test_manifest_refuses_shard_count_change(spark, tmp_path):
     assert man.pending(tr, 64) == list(range(1, 64))
     with pytest.raises(ValueError, match="shards"):
         man.pending(tr, 32)
+
+
+def test_manifest_rows_compatible_across_writers(spark, tmp_path):
+    """Rows mark_done builds in the JVM read back like the rows of the
+    earlier createDataFrame writer, and a dir mixing both (plus a row
+    from before the n_shards column) resumes and refuses as before."""
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark.sources.manifest import (
+        StageManifest,
+    )
+
+    def old_row(path, row, ddl):
+        spark.createDataFrame([row], ddl).coalesce(1) \
+            .write.mode("append").parquet(path)
+
+    def schema(path):
+        return [(f.name, f.dataType.simpleString(), f.nullable)
+                for f in spark.read.parquet(path).schema]
+
+    ddl = "run_id string, shard int, rows_out long, n_shards int"
+    old_row(str(tmp_path / "old"), ("r1", 0, 5, 4), ddl)
+    Manifest(spark, str(tmp_path / "new"), "r1").mark_done(0, 5, n_shards=4)
+    assert schema(str(tmp_path / "new")) == schema(str(tmp_path / "old"))
+
+    path = str(tmp_path / "_m")
+    old_row(path, ("r1", 0, 5, 4), ddl)
+    old_row(path, ("r1", 1, 6), "run_id string, shard int, rows_out long")
+    man = Manifest(spark, path, "r1")
+    man.mark_done(2, 7, n_shards=4)
+    Manifest(spark, path, "r2").mark_done(0, 1)
+    merged = spark.read.option("mergeSchema", "true").parquet(path).schema
+    assert {(f.name, f.dataType.simpleString(), f.nullable) for f in merged} == {
+        ("run_id", "string", True), ("shard", "int", True),
+        ("rows_out", "bigint", True), ("n_shards", "int", True)}
+    assert sorted((r["shard"], r["rows_out"], r["n_shards"])
+                  for r in man._rows()) == [(0, 5, 4), (1, 6, None), (2, 7, 4)]
+    assert man.completed_shards() == {0, 1, 2}
+    assert man.pending(None, 4) == [3]
+    with pytest.raises(ValueError, match="shards"):
+        man.pending(None, 8)
+    # a run without a recorded shard count refuses nothing
+    r2 = Manifest(spark, path, "r2")
+    assert r2.completed_shards() == {0}
+    assert r2.pending(None, 2) == [1]
+
+    ddl = "run_id string, stage string, rows_out long, note string"
+    old_row(str(tmp_path / "s_old"), ("r1", "pairs", 3, ""), ddl)
+    StageManifest(spark, str(tmp_path / "s_new"), "r1").mark_done("pairs", 3)
+    assert schema(str(tmp_path / "s_new")) == schema(str(tmp_path / "s_old"))
+
+    spath = str(tmp_path / "_s")
+    old_row(spath, ("r1", "signatures/shard=0", 10, ""), ddl)
+    sm = StageManifest(spark, spath, "r1")
+    sm.record_params({"bands": 16, "hash": "md5"})
+    assert sm.params() == {"bands": "16", "hash": "md5"}
+    sm.record_params({"hash": "md5", "bands": 16})
+    with pytest.raises(ValueError, match="params"):
+        sm.record_params({"bands": 32, "hash": "md5"})
+    sm.mark_done("pairs", 3)
+    assert StageManifest(spark, spath, "r1").completed() == {
+        "signatures/shard=0", "_params", "pairs"}
+    assert StageManifest(spark, spath, "r2").params() == {}
 
 
 def test_io_location_dispatch(tmp_path):

@@ -1,7 +1,12 @@
 """Driver-side plan-construction probe: per repetition, the seconds and
 py4j round trips it takes to BUILD ``assign_visits(extract_turns(t))``
-and ``run_pipeline(t)`` (no Spark job runs while building), and the
-seconds to EXECUTE each built plan into a noop sink.
+and the pipeline's two halves (no Spark job runs while building), and
+the seconds to EXECUTE each built plan into a noop sink.
+
+The pipeline is built as ``job.main`` builds it: ``prepare_turns``
+(``prepare_*``) blocks the first sink write, the extracted_turns one;
+``build_outputs`` (``outputs_*``) runs while that write does.  Their sum
+is what ``run_pipeline`` costs.
 
 Usage: python tools/plan_build_probe.py [cores] [conversations] [reps]
 
@@ -66,7 +71,10 @@ def main():
     from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.sessionize import (
         assign_visits,
     )
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.pipeline import run_pipeline
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark.pipeline import (
+        build_outputs,
+        prepare_turns,
+    )
     from medical_pdf__ocr_structured_ccd_ccda_output_spark.session import get_spark
 
     spark = get_spark("plan_build_probe", master=f"local[{cores}]",
@@ -84,8 +92,10 @@ def main():
             plan, out["extract_build_s"], out["extract_py4j"] = timed(
                 counter, lambda: assign_visits(extract_turns(t, with_sections=True)))
             _, out["extract_exec_s"], _ = timed(counter, lambda: noop(plan))
-            res, out["pipeline_build_s"], out["pipeline_py4j"] = timed(
-                counter, lambda: run_pipeline(spark, t))
+            stage, out["prepare_build_s"], out["prepare_py4j"] = timed(
+                counter, lambda: prepare_turns(t))
+            res, out["outputs_build_s"], out["outputs_py4j"] = timed(
+                counter, lambda: build_outputs(spark, stage))
             _, out["pipeline_exec_s"], _ = timed(counter, lambda: noop(res.documents))
             print(json.dumps(out), flush=True)
     finally:
