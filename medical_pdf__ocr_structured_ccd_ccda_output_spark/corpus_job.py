@@ -292,9 +292,9 @@ def run_incremental_job(spark: SparkSession, batch: DataFrame, output: str,
     # index signature.  The first admit derives it from the signature
     # arrays and persists it; later admits scan the narrow artifact
     # instead of re-hashing every corpus signature into buckets (the
-    # dominant per-admit cost measured on the x1280 index,
-    # tools/incremental_bench.py).  Appends below keep it in step with
-    # exact_sigs_inc; a row-count check (one bounded action per admit)
+    # dominant per-admit cost measured on the x1280 index by
+    # `git show 19ed140:tools/incremental_bench.py`).  Appends below
+    # keep it in step with exact_sigs_inc; a row-count check (one bounded action per admit)
     # detects staleness — from a crash between the two appends or an
     # older-code artifact — and rebuilds.
     n_bands = int(params["bands"])

@@ -1,13 +1,12 @@
-"""Main-content extraction, in two implementations of rules.clean_text
-(the per-turn equality invariant; tested equal).
+"""Main-content extraction: one production implementation of
+rules.clean_text and one JVM reference twin (tested equal per turn).
 
-* ``clean_text_pandas_udf`` — the DEFAULT extractor
-  (``extract_turns(arrow_extractor=True)``): an Arrow-batched pandas
-  UDF running ``rules.clean_text`` itself.
+* ``clean_text_pandas_udf`` — THE extractor (``extract_turns``): an
+  Arrow-batched pandas UDF running ``rules.clean_text`` itself.
 * ``clean_text_expr`` — the pure-JVM twin built from higher-order array
-  functions (whole-stage codegen, no Python); used with
-  ``arrow_extractor=False`` and wherever a single cheap consumer
-  follows.
+  functions (whole-stage codegen, no Python).  It is the reference the
+  ``clean_extract`` contract query, ``bench.py`` and the parity tests
+  use; no pipeline stage runs it.
 
 Note on regex dialects: where rules.py uses Python `\\s` (unicode-aware
 on str patterns), the Spark expressions use the PY_WS class below —
@@ -64,10 +63,11 @@ def clean_text_expr(text: Column) -> Column:
 
 
 def clean_text_pandas_udf():
-    """Arrow-batched extractor UDF (same semantics as clean_text_expr —
-    tested equal).  Shares rules.clean_text with the pytest oracle, and
-    the ArrowEvalPython node doubles as a materialization barrier for
-    the expensive cleaning step (see operators/extract.py)."""
+    """Arrow-batched extractor UDF, the one ``extract_turns`` runs (same
+    semantics as clean_text_expr — tested equal).  Shares
+    rules.clean_text with the pytest oracle, and the ArrowEvalPython
+    node doubles as a materialization barrier for the expensive
+    cleaning step (see operators/extract.py)."""
     from pyspark.sql import types as T
 
     def _clean(s: pd.Series) -> pd.Series:

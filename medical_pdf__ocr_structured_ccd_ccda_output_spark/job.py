@@ -180,8 +180,7 @@ def run_shard(spark: SparkSession, pool: ThreadPoolExecutor,
         # dedup_log alone: it fills the dedup cache, so no two
         # concurrent writes race to fill it (each race costs a Spark
         # job of its own)
-        if res.dedup_log is not None:
-            tio.write_table(res.dedup_log, args.output, f"dedup_log{suffix}", mode)
+        tio.write_table(res.dedup_log, args.output, f"dedup_log{suffix}", mode)
         # the rest concurrently, SINK_WRITERS at a time in list order:
         # each write is mostly fixed Spark job latency, so one at a time
         # leaves the cores idle.  The longest sink goes first, so it does

@@ -62,6 +62,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
+# connected_components' shuffle sizing (see its docstring): rows per
+# label-table partition, and the smallest partition worth a core of its own
+TARGET_ROWS_PER_PARTITION = 1_000_000
+MIN_ROWS_PER_PARTITION = 50_000
+
+
 class _CkptTracker:
     """Frees superseded (local)checkpoints by block-store RDD id.
 
@@ -79,9 +85,11 @@ class _CkptTracker:
     checkpointing concurrently (e.g. a streaming query sharing the
     session) would land its ids in the diff and a later ``drop``
     would unpersist a live truncated-lineage checkpoint — silent data
-    loss.  All drivers in this repo are single-threaded; a concurrent
-    caller must instead derive ids from the returned DataFrame's own
-    RDD graph.
+    loss.  Every caller in this repo (the corpus jobs) checkpoints from
+    one driver thread.  ``job.main`` writes its sinks from a thread
+    pool, but it never checkpoints and never calls this module.  A
+    concurrent caller must instead derive ids from the returned
+    DataFrame's own RDD graph.
     """
 
     def __init__(self, spark, use_reliable: bool):
@@ -135,8 +143,6 @@ def connected_components(
     dst_col: str = "dst",
     max_iter: int = 30,
     use_reliable_checkpoint: bool = False,
-    target_rows_per_partition: int = 1_000_000,
-    min_rows_per_partition: int = 50_000,
 ) -> DataFrame:
     """Label every vertex with the minimum vertex id reachable from it.
 
@@ -160,7 +166,7 @@ def connected_components(
     ``localCheckpoint`` materializes eagerly, so AQE's post-shuffle
     coalescing cannot rescue it.  The loop therefore scopes
     ``spark.sql.shuffle.partitions`` to
-    ``max(rows, edges) / target_rows_per_partition`` (≥1, capped at
+    ``max(rows, edges) / TARGET_ROWS_PER_PARTITION`` (≥1, capped at
     the session value) and restores the session setting after.  At
     10^12 docs the same formula yields thousands of partitions — it
     scales up as well as down.
@@ -170,7 +176,7 @@ def connected_components(
     30 cores idle — measured as the dominant anti-scaling term of the
     ×320 dedup probe (8→32-core efficiency 0.31, BENCH.md round 4).  So
     the partition count is floored at the core count whenever the graph
-    has at least ``min_rows_per_partition`` rows per core — i.e. tasks
+    has at least ``MIN_ROWS_PER_PARTITION`` rows per core — i.e. tasks
     never shrink below ~50 k rows (where scheduling overhead would
     dominate), but above that the loop uses every core slot.
     """
@@ -206,8 +212,8 @@ def connected_components(
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cores = spark.sparkContext.defaultParallelism
     n_parts = max(
-        -(-n_rows // target_rows_per_partition),
-        min(cores, -(-n_rows // min_rows_per_partition)),
+        -(-n_rows // TARGET_ROWS_PER_PARTITION),
+        min(cores, -(-n_rows // MIN_ROWS_PER_PARTITION)),
     )
     n_parts = max(1, min(session_parts, n_parts))
     spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))

@@ -8,7 +8,7 @@ sink, which is gated the same way as visit raw_text).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.cleaning import PY_WS, strip_ws
 
@@ -78,6 +78,27 @@ def capped_ordered_concat(df: DataFrame, part_cols: list[str],
             full_len > F.lit(max_chars))
 
 
+def turn_order_mean(col: str = "confidence",
+                    order_col: str = "turn_idx") -> Column:
+    """Aggregate expression: the mean of ``col`` over the group, summed
+    in ``order_col`` order, skipping nulls (null when every value is).
+
+    ``F.avg``'s double sum adds in partition order, so its last ulp
+    follows the row layout, and a 2-decimal ``bround`` over it can then
+    flip (an exact mean of 0.625 summed as 0.6250000000000001 rounds
+    to 0.63, summed exactly to 0.62).  A sequential fold over the
+    values sorted by turn is the oracle's ``sum(confs) / len(confs)``
+    bit for bit, whatever the layout — the same fix as
+    ``mean_bigram_prob``.  The per-group state is the group's values,
+    like the combined-text collect_list beside it."""
+    value = F.col(col)
+    entry = F.when(value.isNotNull(), F.struct(order_col, value.alias("v")))
+    total = F.aggregate(F.array_sort(F.collect_list(entry)), F.lit(0.0),
+                        lambda acc, x: acc + x["v"])
+    n = F.count(value)
+    return F.when(n > 0, total / n)
+
+
 def document_rollup(turns_with_visits: DataFrame,
                     include_combined_text: bool = True,
                     max_text_chars: int | None = None) -> DataFrame:
@@ -105,7 +126,7 @@ def document_rollup(turns_with_visits: DataFrame,
         )
     aggs = [
         F.count("*").alias("page_count"),
-        F.bround(F.avg("confidence"), 2).alias("ocr_confidence_avg"),
+        F.bround(turn_order_mean(), 2).alias("ocr_confidence_avg"),
         F.sum(F.when(F.col("confidence") > 0, 1).otherwise(0)).alias("successful_pages"),
         F.countDistinct("visit_id").alias("visit_count"),
         F.sum(F.col("manual_review_required").cast("int")).alias("pages_needing_review"),
@@ -171,7 +192,7 @@ def data_quality_rollup(turns_with_sections: DataFrame,
         F.sum(unclear_in_turn).cast("long").alias("n_unclear_sections"),
     ]
     if include_confidence:
-        aggs.append(F.bround(F.avg("confidence"), 2).alias("confidence_score"))
+        aggs.append(F.bround(turn_order_mean(), 2).alias("confidence_score"))
     agg = turns_with_sections.groupBy("conv_id").agg(*aggs)
     expected = F.array(*[F.lit(s) for s in rules.EXPECTED_SECTIONS])
     critical = F.array(*[F.lit(s) for s in rules.CRITICAL_SECTIONS])

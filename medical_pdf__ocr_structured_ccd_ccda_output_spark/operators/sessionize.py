@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..session import context_cached
+from .rollups import capped_ordered_concat, turn_order_mean
 
 TURN_ORDER = ["turn_idx", "ts"]
 
@@ -145,10 +146,12 @@ def visit_rollup(turns_with_visits: DataFrame,
     cannot stream; disable it and keep the turn-level table instead.
 
     confidence_agg: 'avg' (reference semantics, chunking_service.py:
-    183-207) or 'min' — min is order-independent and keeps the exact
-    2-decimal per-turn values, so downstream renderings of it are
+    183-207), summed in turn order by rollups.turn_order_mean so it is
+    the same under any row layout (its state is one (turn_idx,
+    confidence) pair per turn of the visit), or 'min' — min keeps the
+    exact 2-decimal per-turn values, so downstream renderings of it are
     bit-identical across engines (used by the DuckDB-oracled ccd_xml
-    contract query; avg of doubles is summation-order-sensitive).
+    contract query; a mean's last ulp differs between engines).
 
     max_text_chars bounds the raw_text aggregation STATE per visit and
     adds a raw_text_truncated flag — see rollups.capped_ordered_concat.
@@ -160,8 +163,6 @@ def visit_rollup(turns_with_visits: DataFrame,
         "\n--- Page %d ---\n%s\n", F.col("turn_idx"), F.col("text_clean")
     )
     if include_raw_text:
-        from .rollups import capped_ordered_concat
-
         # strip=False: per-visit raw_text is unstripped per reference
         # (chunking_service.py:158-207)
         turns_with_visits, raw_text, truncated = capped_ordered_concat(
@@ -179,7 +180,7 @@ def visit_rollup(turns_with_visits: DataFrame,
             )
         )["extracted_date"].alias("visit_date"),
         (F.min("confidence") if confidence_agg == "min"
-         else F.avg("confidence")).alias("confidence"),
+         else turn_order_mean()).alias("confidence"),
     ]
     if "text_clean" in turns_with_visits.columns:
         # EncounterType (enums.py:16-22): first non-unknown per-turn

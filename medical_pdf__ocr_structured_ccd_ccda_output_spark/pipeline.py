@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .operators.dedup import dedup_all, dedup_log, kind_output, split_dedup_output
 from .operators.entities import (
@@ -37,6 +37,7 @@ from .operators.entities import (
     extract_medications,
     extract_plan_items,
     extract_problems,
+    extract_visit_texts,
     extract_vitals,
 )
 from .operators.extract import extract_turns
@@ -50,7 +51,7 @@ from .operators.sessionize import (
     assign_visits_skew_aware,
     visit_rollup,
 )
-from .renderers.xml import render_ccd_xml
+from .renderers.xml import entity_sections, render_ccd_xml
 from .sources.lineage import lineage_rows
 
 
@@ -64,14 +65,14 @@ class PipelineResult:
     lab_results: DataFrame
     dedup_log: DataFrame
     metrics: DataFrame
+    vitals: DataFrame
+    allergies: DataFrame
+    plan_items: DataFrame
+    data_quality: DataFrame
     lineage: dict[str, DataFrame] = field(default_factory=dict)
     ccd_xml: DataFrame | None = None
     narrative: DataFrame | None = None
     quarantine: DataFrame | None = None
-    vitals: DataFrame | None = None
-    allergies: DataFrame | None = None
-    plan_items: DataFrame | None = None
-    data_quality: DataFrame | None = None
     # frames every sink above shares, in dependency order: persisting
     # them in this order lets each cached plan embed the caches before it
     to_persist: list[DataFrame] = field(default_factory=list)
@@ -83,8 +84,6 @@ def conversation_quality(transcripts: DataFrame) -> DataFrame:
     emptiness, encrypted marker.  Returns (conv_id, n_turns, total_chars,
     n_nonempty, warnings array, quarantined bool); warning order matches
     rules.conversation_warnings."""
-    import pyspark.sql.functions as F
-
     from . import rules
     from .functions.cleaning import PY_NONWS as _PY_NONWS
 
@@ -121,8 +120,6 @@ def apply_quarantine(transcripts: DataFrame,
     is expected to be tiny relative to the corpus, so the turn-level
     filter is a broadcast anti/semi join on conv_id — no extra shuffle
     of the big side."""
-    import pyspark.sql.functions as F
-
     quality = quality if quality is not None else conversation_quality(transcripts)
     bad = quality.filter(F.col("quarantined")).select("conv_id")
     clean = transcripts.join(F.broadcast(bad), "conv_id", "left_anti")
@@ -147,7 +144,6 @@ class TurnsStage:
 
 def prepare_turns(transcripts: DataFrame,
                   skew_aware: bool = False,
-                  skew_bucket_size: int = 100_000,
                   with_validation: bool = True) -> TurnsStage:
     """Quality aggregate + quarantine, extraction and sessionization:
     the plan of the extracted_turns sink and the input of build_outputs."""
@@ -159,7 +155,7 @@ def prepare_turns(transcripts: DataFrame,
         transcripts, quarantine = apply_quarantine(transcripts, quality)
     extracted = extract_turns(transcripts, with_sections=True)
     if skew_aware:
-        turns = assign_visits_skew_aware(extracted, bucket_size=skew_bucket_size)
+        turns = assign_visits_skew_aware(extracted)
     else:
         turns = assign_visits(extracted)
     return TurnsStage(turns, quality, quarantine)
@@ -168,18 +164,13 @@ def prepare_turns(transcripts: DataFrame,
 def run_pipeline(spark: SparkSession, transcripts: DataFrame,
                  run_id: str = "run_0",
                  skew_aware: bool = False,
-                 skew_bucket_size: int = 100_000,
-                 with_entities: bool = True,
-                 with_xml: bool = True,
                  include_raw_text: bool = True,
                  with_validation: bool = True,
                  with_narrative: bool = False,
                  max_text_chars: int | None = None) -> PipelineResult:
     stage = prepare_turns(transcripts, skew_aware=skew_aware,
-                          skew_bucket_size=skew_bucket_size,
                           with_validation=with_validation)
     return build_outputs(spark, stage, run_id=run_id,
-                         with_entities=with_entities, with_xml=with_xml,
                          include_raw_text=include_raw_text,
                          with_narrative=with_narrative,
                          max_text_chars=max_text_chars)
@@ -187,8 +178,6 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
 
 def build_outputs(spark: SparkSession, stage: TurnsStage,
                   run_id: str = "run_0",
-                  with_entities: bool = True,
-                  with_xml: bool = True,
                   include_raw_text: bool = True,
                   with_narrative: bool = False,
                   max_text_chars: int | None = None) -> PipelineResult:
@@ -200,14 +189,12 @@ def build_outputs(spark: SparkSession, stage: TurnsStage,
                           max_text_chars=max_text_chars)
     # schema-validation warnings stage (raising Pydantic validators ->
     # flagged rows; canonical_schema.py:182-208,286-292)
-    import pyspark.sql.functions as _F
-
     from .functions.validate import visit_warnings_expr
 
     visits = visits.withColumn(
         "schema_warnings",
         visit_warnings_expr(
-            _F.col("visit_id"), _F.col("confidence"), _F.col("turn_count")
+            F.col("visit_id"), F.col("confidence"), F.col("turn_count")
         ),
     )
     data_quality = data_quality_rollup(turns)
@@ -215,22 +202,20 @@ def build_outputs(spark: SparkSession, stage: TurnsStage,
                            max_text_chars=max_text_chars)
     metrics = stage_metrics(turns)
 
-    meds = probs = labs = log = vits = alls = plans = None
-    if with_entities:
-        fused = dedup_all({
-            "medication": extract_medications(turns),
-            "problem": extract_problems(turns),
-            "result": extract_lab_results(turns),
-            "allergy": extract_allergies(turns),
-            "plan": extract_plan_items(turns),
-        })
-        to_persist.append(fused)
-        meds, probs, labs, alls, plans = (
-            split_dedup_output(kind_output(fused, kind))[0]
-            for kind in ("medication", "problem", "result", "allergy", "plan")
-        )
-        log = dedup_log(fused)
-        vits = extract_vitals(turns)
+    fused = dedup_all({
+        "medication": extract_medications(turns),
+        "problem": extract_problems(turns),
+        "result": extract_lab_results(turns),
+        "allergy": extract_allergies(turns),
+        "plan": extract_plan_items(turns),
+    })
+    to_persist.append(fused)
+    meds, probs, labs, alls, plans = (
+        split_dedup_output(kind_output(fused, kind))[0]
+        for kind in ("medication", "problem", "result", "allergy", "plan")
+    )
+    log = dedup_log(fused)
+    vits = extract_vitals(turns)
 
     lineage = {
         "extracted_turns": lineage_rows(
@@ -240,49 +225,35 @@ def build_outputs(spark: SparkSession, stage: TurnsStage,
 
     xml = None
     narrative = None
-    if (with_xml and include_raw_text) or with_narrative:
-        sections = None
-        nsections = None
-        if with_entities:
-            import pyspark.sql.functions as F
-
-            from .renderers.xml import entity_sections
-
-            def _first_page(df: DataFrame) -> DataFrame:
-                # deduped entities carry the merged source_pages set;
-                # the render sort key is the first (earliest) page plus
-                # the kept record's intra-turn line ordinal, so same-page
-                # entities render in true document/dedup-output order
-                # (not content-lexicographic — round-2 ADVICE fix)
-                return df.withColumn(
-                    "source_page", F.element_at("source_pages", 1)
-                ).withColumn(
-                    "source_line_in_turn",
-                    F.coalesce(F.col("source_line_in_turn"), F.lit(0)),
-                )
-
-            from .operators.entities import extract_visit_texts
-
-            ent_kw = dict(
-                medications=_first_page(meds),
-                problems=_first_page(probs),
-                vitals=vits,
-                results=_first_page(labs),
-                plan=_first_page(plans),
-                visit_texts=extract_visit_texts(turns),
+    if include_raw_text or with_narrative:
+        def _first_page(df: DataFrame) -> DataFrame:
+            # deduped entities carry the merged source_pages set; the
+            # render sort key is the first (earliest) page plus the kept
+            # record's intra-turn line ordinal, so same-page entities
+            # render in true document/dedup-output order (not
+            # content-lexicographic — round-2 ADVICE fix)
+            return df.withColumn(
+                "source_page", F.element_at("source_pages", 1)
+            ).withColumn(
+                "source_line_in_turn",
+                F.coalesce(F.col("source_line_in_turn"), F.lit(0)),
             )
-            if with_xml and include_raw_text:
-                sections = entity_sections(**ent_kw)
-            if with_narrative:
-                from .renderers.text import narrative_sections
 
-                nsections = narrative_sections(**ent_kw)
-        if with_xml and include_raw_text:
-            xml = render_ccd_xml(visits, sections=sections)
+        ent_kw = dict(
+            medications=_first_page(meds),
+            problems=_first_page(probs),
+            vitals=vits,
+            results=_first_page(labs),
+            plan=_first_page(plans),
+            visit_texts=extract_visit_texts(turns),
+        )
+        if include_raw_text:
+            xml = render_ccd_xml(visits, sections=entity_sections(**ent_kw))
         if with_narrative:
-            from .renderers.text import render_narrative
+            from .renderers.text import narrative_sections, render_narrative
 
-            narrative = render_narrative(visits, sections=nsections)
+            narrative = render_narrative(
+                visits, sections=narrative_sections(**ent_kw))
 
     return PipelineResult(
         extracted_turns=turns,

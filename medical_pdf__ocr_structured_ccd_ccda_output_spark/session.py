@@ -56,8 +56,12 @@ def get_spark(app_name: str = "ccda_extraction_engine",
     return spark
 
 
-def tune_scan_splits(spark: SparkSession, *paths: str,
-                     per_core_splits: int = 3) -> int:
+# scan splits per core slot that tune_scan_splits aims for: >= 2-3 per
+# slot leaves room to even out stragglers
+SCAN_SPLITS_PER_CORE = 3
+
+
+def tune_scan_splits(spark: SparkSession, *paths: str) -> int:
     """Size file-scan splits to the actual input so every core gets map
     work.
 
@@ -75,7 +79,7 @@ def tune_scan_splits(spark: SparkSession, *paths: str,
     core slot for stragglers — applies at every scale.
 
     Sets ``maxPartitionBytes`` to ``total_input_bytes /
-    (per_core_splits * defaultParallelism)`` (floor 256 KB, cap 128 MB)
+    (SCAN_SPLITS_PER_CORE * defaultParallelism)`` (floor 256 KB, cap 128 MB)
     and ``openCostInBytes`` proportionally so tiny-file packing honors
     the same target.  Local filesystem paths only (size probe walks the
     directory); non-local URIs are ignored.  Call BEFORE
@@ -107,7 +111,7 @@ def tune_scan_splits(spark: SparkSession, *paths: str,
                 os.path.getsize(os.path.join(root, f)) for f in files
             )
     cores = spark.sparkContext.defaultParallelism
-    target = total // max(1, per_core_splits * cores)
+    target = total // max(1, SCAN_SPLITS_PER_CORE * cores)
     target = max(256 * 1024, min(128 * 1024 * 1024, target))
     open_cost = max(16 * 1024, min(4 * 1024 * 1024, target // 8))
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(target))

@@ -41,17 +41,9 @@ def read_table(spark: SparkSession, location: str, name: str) -> DataFrame:
 
 
 def write_table(df: DataFrame, location: str, name: str,
-                mode: str = "overwrite",
-                partition_by: list[str] | None = None) -> None:
+                mode: str = "overwrite") -> None:
     if is_iceberg_location(location):
-        from pyspark.sql import functions as F
-
         writer = df.writeTo(f"{location}.{name}")
-        if partition_by and mode != "append":
-            # appends inherit the existing table's partitioning; create
-            # paths must declare it or downstream partition pruning is
-            # silently lost (round-3 review fix)
-            writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
         if mode == "append":
             writer.append()
         elif mode in ("error", "errorifexists"):
@@ -61,7 +53,4 @@ def write_table(df: DataFrame, location: str, name: str,
         else:
             raise ValueError(f"unsupported Iceberg write mode: {mode!r}")
         return
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(os.path.join(location, f"{name}.parquet"))
+    df.write.mode(mode).parquet(os.path.join(location, f"{name}.parquet"))

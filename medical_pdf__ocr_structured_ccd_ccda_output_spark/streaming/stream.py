@@ -34,8 +34,7 @@ TRANSCRIPT_SCHEMA = T.StructType([
 ])
 
 
-def extraction_stream(spark: SparkSession, input_dir: str,
-                      with_sections: bool = True) -> DataFrame:
+def extraction_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """readStream over a transcripts parquet directory -> streaming
     extracted-turns DataFrame (stateless: every operator is a projection)."""
     from ..operators.extract import extract_turns
@@ -45,7 +44,7 @@ def extraction_stream(spark: SparkSession, input_dir: str,
         .option("maxFilesPerTrigger", 8)
         .parquet(input_dir)
     )
-    return extract_turns(stream, with_sections=with_sections)
+    return extract_turns(stream, with_sections=True)
 
 
 def run_stream_to_parquet(spark: SparkSession, input_dir: str,

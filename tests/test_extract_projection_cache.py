@@ -2,8 +2,9 @@
 once per live SparkContext and reused by every later plan.
 
 Pins: a warm build reuses the cached Column objects and gives the same
-schema and rows as a fresh build; the four (with_sections,
-arrow_extractor) keys stay apart; a different SparkContext misses the
+schema and rows as a fresh build; the two with_sections keys stay
+apart, and both plans clean through the Arrow UDF; a different
+SparkContext misses the
 cache; a warm rebuild of assign_visits(extract_turns(t)) costs a few
 hundred py4j round trips at most instead of thousands.
 """
@@ -23,7 +24,6 @@ from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators import (
     sessionize,
 )
 
-KEYS = [(ws, arrow) for ws in (True, False) for arrow in (True, False)]
 
 
 @pytest.fixture(scope="module")
@@ -53,9 +53,9 @@ def test_warm_build_reuses_cached_columns(spark, transcripts, monkeypatch):
     windows = _counting(monkeypatch, sessionize, "_visit_columns")
 
     first = sessionize.assign_visits(extract.extract_turns(transcripts))
-    p1 = extract._projection(transcripts, True, True)
+    p1 = extract._projection(transcripts, True)
     second = sessionize.assign_visits(extract.extract_turns(transcripts))
-    p2 = extract._projection(transcripts, True, True)
+    p2 = extract._projection(transcripts, True)
     assert len(builds) == 1 and len(windows) == 1
     assert p1 is p2
     assert all(a[k] is b[k] for a, b in zip(p1, p2) for k in a)
@@ -64,29 +64,29 @@ def test_warm_build_reuses_cached_columns(spark, transcripts, monkeypatch):
     assert _rows(second) == _rows(first)
 
 
-def test_four_keys_do_not_collide(spark, transcripts, monkeypatch):
+def test_section_keys_do_not_collide(spark, transcripts, monkeypatch):
     monkeypatch.setattr(session, "_PER_CONTEXT", {})
-    projections = {k: extract._projection(transcripts, *k) for k in KEYS}
-    assert len({id(p) for p in projections.values()}) == 4
-    for (ws, arrow), groups in projections.items():
+    projections = {ws: extract._projection(transcripts, ws)
+                   for ws in (True, False)}
+    assert len({id(p) for p in projections.values()}) == 2
+    for ws, groups in projections.items():
         assert ("sections" in groups[-1]) == ws
-        out = extract.extract_turns(transcripts, with_sections=ws,
-                                    arrow_extractor=arrow)
+        out = extract.extract_turns(transcripts, with_sections=ws)
         assert ("sections" in out.columns) == ws
         plan = out._jdf.queryExecution().optimizedPlan().toString()
-        assert ("ArrowEvalPython" in plan) == arrow
+        assert "ArrowEvalPython" in plan
         # a second call with the same key is a hit on the same entry
-        assert extract._projection(transcripts, ws, arrow) is groups
+        assert extract._projection(transcripts, ws) is groups
 
 
 def test_other_spark_context_misses(spark, transcripts, monkeypatch):
     monkeypatch.setattr(session, "_PER_CONTEXT", {})
-    ours = extract._projection(transcripts, True, True)
+    ours = extract._projection(transcripts, True)
     want = _rows(extract.extract_turns(transcripts))
 
     other = type("OtherContext", (), {})()
     monkeypatch.setattr(session, "_context_of", lambda df: other)
-    theirs = extract._projection(transcripts, True, True)
+    theirs = extract._projection(transcripts, True)
     assert theirs is not ours
     # only the current context's entries are kept
     assert all(k[0] is other for k in session._PER_CONTEXT)

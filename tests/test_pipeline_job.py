@@ -32,8 +32,7 @@ def test_pipeline_shapes(result):
 
 def test_pipeline_validation_off(spark):
     df = fixtures.transcripts_spark_df(spark, 10, seed=7)
-    res = run_pipeline(spark, df, run_id="nv", with_validation=False,
-                       with_entities=False, with_xml=False)
+    res = run_pipeline(spark, df, run_id="nv", with_validation=False)
     assert res.quarantine is None
     assert res.documents.count() == 10
 

@@ -43,11 +43,21 @@ def test_extraction_shuffle_budget(spark, tmp_path):
 
 
 def test_extractor_variants_agree(spark):
+    """The Arrow extractor equals the JVM clean_text_expr reference the
+    clean_extract contract query runs, row for row."""
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.cleaning import (
+        clean_text_expr,
+    )
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.confidence import (
+        confidence_expr,
+    )
+
     df = fixtures.transcripts_spark_df(spark, 15, seed=3)
-    a = extract_turns(df, with_sections=False, arrow_extractor=True) \
+    a = extract_turns(df, with_sections=False) \
         .select("conv_id", "turn_idx", "text_clean", "confidence")
-    b = extract_turns(df, with_sections=False, arrow_extractor=False) \
-        .select("conv_id", "turn_idx", "text_clean", "confidence")
+    jvm_clean = clean_text_expr(F.col("text"))
+    b = df.select("conv_id", "turn_idx", jvm_clean.alias("text_clean"),
+                  confidence_expr(jvm_clean).alias("confidence"))
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
 

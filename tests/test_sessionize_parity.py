@@ -80,6 +80,51 @@ def test_document_rollup(golden, extracted):
         assert row["raw_ocr_text"] == g["doc"]["raw_ocr_text"], cid
 
 
+def test_confidence_means_match_oracle_in_any_layout(spark):
+    """The three per-group confidence means equal the oracle's turn-order
+    ``sum(confs) / len(confs)`` exactly, whatever the row layout.  At 200
+    conversations an F.avg sum in partition order rounds some 2-decimal
+    means to the other side of a tie (0.625 vs 0.6250000000000001)."""
+    from pyspark.sql import functions as F
+
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.rollups import (
+        data_quality_rollup,
+    )
+
+    n = 200
+    rows = fixtures.generate_transcripts(n, seed=42)
+    by_conv = {}
+    for r in rows:
+        by_conv.setdefault(r["conv_id"], []).append(r)
+    golden = {cid: reference_oracle.run_conversation(ts)
+              for cid, ts in by_conv.items()}
+    want_doc = {cid: g["doc"]["ocr_confidence_avg"] for cid, g in golden.items()}
+    want_visit = {(cid, v["visit_id"]): v["confidence"]
+                  for cid, g in golden.items() for v in g["visits"]}
+
+    extracted = extract_turns(fixtures.transcripts_spark_df(spark, n, seed=42))
+    layouts = {
+        "window": assign_visits(extracted),
+        "skew_aware": assign_visits_skew_aware(extracted, bucket_size=7),
+        "random": assign_visits(extracted).repartition(7, F.rand(1)),
+    }
+    for name, turns in layouts.items():
+        turns = turns.cache()
+        try:
+            docs = document_rollup(turns, include_combined_text=False)
+            got = {r["conv_id"]: r["ocr_confidence_avg"] for r in docs.collect()}
+            assert got == want_doc, name
+            dq = data_quality_rollup(turns)
+            got = {r["conv_id"]: r["confidence_score"] for r in dq.collect()}
+            assert got == want_doc, name
+            vr = visit_rollup(turns, include_raw_text=False)
+            got = {(r["conv_id"], r["visit_id"]): r["confidence"]
+                   for r in vr.collect()}
+            assert got == want_visit, name
+        finally:
+            turns.unpersist()
+
+
 def test_stage_metrics(extracted):
     m = {r["metric"]: r["value"] for r in stage_metrics(assign_visits(extracted)).collect()}
     assert m["conversations_total"] == N_CONVS
