@@ -294,9 +294,9 @@ def run_incremental_job(spark: SparkSession, batch: DataFrame, output: str,
     # instead of re-hashing every corpus signature into buckets (the
     # dominant per-admit cost measured on the x1280 index by
     # `git show 19ed140:tools/incremental_bench.py`).  Appends below
-    # keep it in step with exact_sigs_inc; a row-count check (one bounded action per admit)
-    # detects staleness — from a crash between the two appends or an
-    # older-code artifact — and rebuilds.
+    # keep it in step with exact_sigs_inc; a row-count check (one
+    # bounded action per admit) detects staleness — from a crash between
+    # the two appends or an older-code artifact — and rebuilds.
     n_bands = int(params["bands"])
     expected_bands = index.count() * n_bands
     cbands = None

@@ -77,11 +77,11 @@ def extract_turns(transcripts: DataFrame,
 
     The projection (the cleaning UDF and every Column expression) is
     built once per live SparkContext and ``with_sections`` value — see
-    ``session.context_cached``.  Building
-    it takes ~4,000 py4j round trips (~1 s of driver time on a 4-vCPU
-    host), which a hot loop of passes, the shards of ``job.main`` and
-    every streaming invocation would otherwise pay per plan; with it a
-    warm ``assign_visits(extract_turns(t))`` build sends 60
+    ``session.context_cached``.  Building it takes ~4,000 py4j round
+    trips (~1 s of driver time on a 4-vCPU host), which a hot loop of
+    passes, the shards of ``job.main`` and every streaming invocation
+    would otherwise pay per plan; with it a warm
+    ``assign_visits(extract_turns(t))`` build sends 60
     (``tools/plan_build_probe.py``).  The columns are applied as three
     ``withColumns`` projections, in dependency order, instead of nine
     ``withColumn`` analyses; schema, column order and values are
