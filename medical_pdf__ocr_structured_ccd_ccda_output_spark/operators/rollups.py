@@ -89,7 +89,8 @@ def turn_order_mean(col: str = "confidence",
     to 0.63, summed exactly to 0.62).  A sequential fold over the
     values sorted by turn is the oracle's ``sum(confs) / len(confs)``
     bit for bit, whatever the layout — the same fix as
-    ``mean_bigram_prob``.  The per-group state is the group's values,
+    ``mean_bigram_prob``.  (That holds while the oracle's ``sum`` adds
+    left to right, as CPython's does before 3.12.)  The per-group state is the group's values,
     like the combined-text collect_list beside it."""
     value = F.col(col)
     entry = F.when(value.isNotNull(), F.struct(order_col, value.alias("v")))
