@@ -78,10 +78,10 @@ def capped_ordered_concat(df: DataFrame, part_cols: list[str],
             full_len > F.lit(max_chars))
 
 
-def turn_order_mean(col: str = "confidence",
-                    order_col: str = "turn_idx") -> Column:
-    """Aggregate expression: the mean of ``col`` over the group, summed
-    in ``order_col`` order, skipping nulls (null when every value is).
+def turn_order_mean() -> Column:
+    """Aggregate expression: the mean ``confidence`` of the group,
+    summed in ``turn_idx`` order, skipping nulls (null when every value
+    is).
 
     ``F.avg``'s double sum adds in partition order, so its last ulp
     follows the row layout, and a 2-decimal ``bround`` over it can then
@@ -90,10 +90,11 @@ def turn_order_mean(col: str = "confidence",
     values sorted by turn is the oracle's ``sum(confs) / len(confs)``
     bit for bit, whatever the layout — the same fix as
     ``mean_bigram_prob``.  (That holds while the oracle's ``sum`` adds
-    left to right, as CPython's does before 3.12.)  The per-group state is the group's values,
-    like the combined-text collect_list beside it."""
-    value = F.col(col)
-    entry = F.when(value.isNotNull(), F.struct(order_col, value.alias("v")))
+    left to right, as CPython's does before 3.12.)  The per-group state
+    is the group's values, like the combined-text collect_list beside
+    it."""
+    value = F.col("confidence")
+    entry = F.when(value.isNotNull(), F.struct("turn_idx", value.alias("v")))
     total = F.aggregate(F.array_sort(F.collect_list(entry)), F.lit(0.0),
                         lambda acc, x: acc + x["v"])
     n = F.count(value)
