@@ -4,9 +4,9 @@ once per live SparkContext and reused by every later plan.
 Pins: a warm build reuses the cached Column objects and gives the same
 schema and rows as a fresh build; the two with_sections keys stay
 apart, and both plans clean through the Arrow UDF; a different
-SparkContext misses the
-cache; a warm rebuild of assign_visits(extract_turns(t)) costs a few
-hundred py4j round trips at most instead of thousands.
+SparkContext misses the cache; a warm rebuild of
+assign_visits(extract_turns(t)) costs a few hundred py4j round trips at
+most instead of thousands.
 """
 
 import threading
@@ -23,7 +23,6 @@ from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators import (
     extract,
     sessionize,
 )
-
 
 
 @pytest.fixture(scope="module")
