@@ -21,12 +21,13 @@ of resumability is therefore a *stage*:
 
 Each stage commits its output tables before the manifest marks it
 done; ``--resume`` skips completed stages and reads their materialized
-outputs back.  Sharding stage 1 by content_key (not doc_id) makes the
-exact-dedup groupBy complete *within* a shard — duplicate groups can't
-straddle shards — at the cost of re-scanning the input per shard
-(the same trade the extraction job makes for conv_id shards; a
-one-pass bucketed pre-write amortizes it when the input is re-run
-often).
+outputs back.  A stage's row count is the one its write observed
+(``sources.io.write_counted``); no table is read back to count it.
+Sharding stage 1 by content_key (not doc_id) makes the exact-dedup
+groupBy complete *within* a shard — duplicate groups can't straddle
+shards — at the cost of re-scanning the input per shard (the same
+trade the extraction job makes for conv_id shards; a one-pass
+bucketed pre-write amortizes it when the input is re-run often).
 
 Reference analog: dedup as a pipeline stage, ``main.py:170-174``;
 merge semantics, ``src/services/deduplication_service.py:101-480``.
@@ -44,7 +45,7 @@ from . import corpus_pipeline as cp
 from .operators import corpus, graph
 from .session import get_spark, tune_scan_splits
 from .sources import io as tio
-from .sources.manifest import StageManifest
+from .sources.manifest import StageManifest, manifest_location
 
 
 def _shard_filter(documents: DataFrame, shard: int, n_shards: int) -> DataFrame:
@@ -90,14 +91,8 @@ def run_corpus_job(spark: SparkSession, documents: DataFrame, output: str,
                    progress=print) -> dict[str, int]:
     """Run (or resume) the staged dedup DAG; returns per-stage row
     counts.  Separated from main() so tests can drive kill/resume."""
-    if manifest_dir is None:
-        if tio.is_iceberg_location(output):
-            raise ValueError(
-                "--output is an Iceberg catalog prefix; pass an explicit "
-                "filesystem --manifest-dir for the stage manifest"
-            )
-        manifest_dir = os.path.join(output, "_manifest")
-    manifest = StageManifest(spark, manifest_dir, run_id)
+    manifest = StageManifest(spark, manifest_location(output, manifest_dir),
+                             run_id)
     manifest.record_params({
         "num_hashes": num_hashes, "bands": bands, "shingle_n": shingle_n,
         "jaccard_threshold": jaccard_threshold, "hash_fn": hash_fn,
@@ -107,11 +102,21 @@ def run_corpus_job(spark: SparkSession, documents: DataFrame, output: str,
     counts: dict[str, int] = {}
     t0 = time.time()
 
+    def _skip(stage: str) -> bool:
+        if stage in done:
+            progress(f"[{stage}] already done, skipping")
+            return True
+        return False
+
+    def _commit(stage: str, n: int, what: str) -> None:
+        counts[stage] = n
+        manifest.mark_done(stage, n)
+        progress(f"[{stage}] {n} {what} committed")
+
     # ---- stage 1 (sharded): content keys, exact map, signatures ----
     for shard in range(shards):
         stage = f"signatures/shard={shard}"
-        if stage in done:
-            progress(f"[{stage}] already done, skipping")
+        if _skip(stage):
             continue
         part = (
             _shard_filter(documents, shard, shards)
@@ -150,18 +155,9 @@ def run_corpus_job(spark: SparkSession, documents: DataFrame, output: str,
             sigs.select(F.col("doc_id").alias("keep_doc_id"), "signature"),
             "keep_doc_id",
         )
-        tio.write_table(exact_sigs, output, f"exact_sigs_shard{shard}",
-                        "overwrite")
-        n = tio.read_table(spark, output, f"exact_sigs_shard{shard}").count()
-        counts[stage] = n
-        manifest.mark_done(stage, n)
-        progress(f"[{stage}] {n} distinct contents committed")
-
-    def _skip(stage: str) -> bool:
-        if stage in done:
-            progress(f"[{stage}] already done, skipping")
-            return True
-        return False
+        _commit(stage, tio.write_counted(exact_sigs, output,
+                                         f"exact_sigs_shard{shard}"),
+                "distinct contents")
 
     # ---- stage 2 (global): LSH banded pairs over survivor signatures ----
     exact_sigs = _read_shards(spark, output, "exact_sigs", shards)
@@ -177,11 +173,8 @@ def run_corpus_job(spark: SparkSession, documents: DataFrame, output: str,
             sigs, num_hashes, bands, jaccard_threshold, hash_fn,
             cache="none",
         )
-        tio.write_table(pairs, output, "near_dup_pairs", "overwrite")
-        n = tio.read_table(spark, output, "near_dup_pairs").count()
-        counts["pairs"] = n
-        manifest.mark_done("pairs", n)
-        progress(f"[pairs] {n} candidate pairs committed")
+        _commit("pairs", tio.write_counted(pairs, output, "near_dup_pairs"),
+                "candidate pairs")
 
     # ---- stage 3 (global): transitive closure + survivor choice ----
     if not _skip("clusters"):
@@ -195,11 +188,9 @@ def run_corpus_job(spark: SparkSession, documents: DataFrame, output: str,
         clusters = graph.near_dup_clusters(
             verts, pairs, len_col="text_len", pairs_cache="none"
         )
-        tio.write_table(clusters, output, "near_dup_clusters", "overwrite")
-        n = tio.read_table(spark, output, "near_dup_clusters").count()
-        counts["clusters"] = n
-        manifest.mark_done("clusters", n)
-        progress(f"[clusters] {n} clustered docs committed")
+        _commit("clusters",
+                tio.write_counted(clusters, output, "near_dup_clusters"),
+                "clustered docs")
 
     # ---- stage 4 (global): per-doc lineage + kept documents ----
     if not _skip("survivors"):
@@ -208,25 +199,20 @@ def run_corpus_job(spark: SparkSession, documents: DataFrame, output: str,
         decisions = cp.assemble_decisions(
             keyed, exact_sigs.select("content_key", "keep_doc_id"), clusters
         )
-        tio.write_table(decisions, output, "dedup_decisions", "overwrite")
+        n_dec = tio.write_counted(decisions, output, "dedup_decisions")
         kept = documents.join(
             tio.read_table(spark, output, "dedup_decisions")
             .filter("keep").select("doc_id"),
             "doc_id", "left_semi",
         )
-        tio.write_table(kept, output, "kept_documents", "overwrite")
-        n_dec = tio.read_table(spark, output, "dedup_decisions").count()
-        n_kept = tio.read_table(spark, output, "kept_documents").count()
-        metrics = spark.createDataFrame(
-            [("decisions", n_dec), ("kept_documents", n_kept)]
-            + [(k, v) for k, v in sorted(counts.items())],
-            "stage string, rows_out long",
+        n_kept = tio.write_counted(kept, output, "kept_documents")
+        metrics = tio.literal_rows(
+            spark, (("stage", "string"), ("rows_out", "long")),
+            [("decisions", n_dec), ("kept_documents", n_kept),
+             *sorted(counts.items())],
         )
         tio.write_table(metrics, output, "corpus_metrics", "overwrite")
-        counts["survivors"] = n_kept
-        manifest.mark_done("survivors", n_kept)
-        progress(f"[survivors] {n_kept} documents kept "
-                 f"({n_dec} decisions) committed")
+        _commit("survivors", n_kept, f"documents kept ({n_dec} decisions)")
 
     dt = time.time() - t0
     progress(f"run {run_id}: stages {sorted(counts)} in {dt:.1f}s")
@@ -254,14 +240,8 @@ def run_incremental_job(spark: SparkSession, batch: DataFrame, output: str,
     double-appending."""
     from . import corpus_incremental as ci
 
-    if manifest_dir is None:
-        if tio.is_iceberg_location(output):
-            raise ValueError(
-                "--output is an Iceberg catalog prefix; pass an explicit "
-                "filesystem --manifest-dir for the stage manifest"
-            )
-        manifest_dir = os.path.join(output, "_manifest")
-    manifest = StageManifest(spark, manifest_dir, base_run_id)
+    manifest = StageManifest(spark, manifest_location(output, manifest_dir),
+                             base_run_id)
     params = manifest.params()
     done = manifest.completed()
     if "survivors" not in done:
@@ -329,11 +309,11 @@ def run_incremental_job(spark: SparkSession, batch: DataFrame, output: str,
         broadcast_batch=broadcast_batch,
         corpus_bands=cbands,
     )
-    tio.write_table(res.decisions, output, f"inc_decisions_{inc_run_id}",
-                    "overwrite")
+    n_batch = tio.write_counted(res.decisions, output,
+                                f"inc_decisions_{inc_run_id}")
     decisions = tio.read_table(spark, output, f"inc_decisions_{inc_run_id}")
-    tio.write_table(res.survivors, output, f"inc_kept_{inc_run_id}",
-                    "overwrite")
+    # survivors are the batch rows of the keep=True decisions
+    n_kept = tio.write_counted(res.survivors, output, f"inc_kept_{inc_run_id}")
     # index append: same schema as exact_sigs (dup_count = this batch's
     # exact fan-in so index stats stay meaningful)
     fan_in = decisions.filter(
@@ -361,14 +341,6 @@ def run_incremental_job(spark: SparkSession, batch: DataFrame, output: str,
         int(params["num_hashes"]), n_bands, params["hash_fn"],
     ).select("doc_id", "band", "bucket")
     tio.write_table(new_bands, output, "corpus_bands", "append")
-    # one reporting action: kept + total from a single pass over the
-    # materialized decisions table (keep=True rows ARE the inc_kept
-    # table by construction — survivors is a semi-join on them)
-    rep = decisions.agg(
-        F.count("*").alias("n_batch"),
-        F.count(F.when(F.col("keep"), True)).alias("n_kept"),
-    ).first()
-    n_kept, n_batch = rep["n_kept"], rep["n_batch"]
     manifest.mark_done(stage, n_kept)
     progress(f"[{stage}] {n_kept} of {n_batch} batch docs kept, "
              f"keys+signatures appended to index")

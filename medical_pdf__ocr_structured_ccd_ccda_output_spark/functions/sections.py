@@ -33,7 +33,10 @@ def _prefilter_pattern() -> str:
         names.add(re.escape(name.replace(" ", "")))
     for raw, _ in rules.EXTRA_SECTION_HEADERS:
         names.add(re.escape(raw))
-    alts = "|".join(sorted(names, key=len, reverse=True))
+    # longest first, ties by name: a set's order follows the string
+    # hash, which changes from process to process, and the pattern must
+    # not (plans and compiled regexes stay reproducible across runs)
+    alts = "|".join(sorted(names, key=lambda n: (-len(n), n)))
     # engine_portable: the rules spec's \s is Python-unicode (a header
     # line indented with NBSP must still match under Java regex)
     return rules.java_portable(

@@ -16,7 +16,8 @@ Per shard, the driver and the cluster work at the same time:
      plan, several seconds of driver time cold) and persists the fused
      dedup output.
   3. Once extracted_turns is written: dedup_log alone, then the other
-     sinks concurrently, then the manifest row.
+     sinks concurrently, then the manifest row, with the row count the
+     extracted_turns write observed (sources.io.write_counted).
 dedup_log still waits for the turn cache and runs alone: it is the
 first reader of the dedup cache, and writes that race to fill one
 unfilled cache each run a Spark job of their own.
@@ -28,18 +29,17 @@ Packaging: `make zip` equivalent —
 from __future__ import annotations
 
 import argparse
-import os
 import time
 from concurrent.futures import Future, ThreadPoolExecutor, wait
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
 from .pipeline import build_outputs, prepare_turns
 from .session import get_spark, tune_scan_splits
 from .sources import io as tio
-from .sources.manifest import Manifest
+from .sources.manifest import Manifest, manifest_location
 
 
 # sink writes in flight at once; a small fixed pool bounds the driver
@@ -47,13 +47,11 @@ from .sources.manifest import Manifest
 SINK_WRITERS = 4
 
 
-def submit_write(pool: ThreadPoolExecutor, spark: SparkSession, df: DataFrame,
-                 location: str, name: str, mode: str) -> Future:
-    """tio.write_table(df, location, name, mode) on a pool thread, with
-    a copy of the calling thread's Spark local properties (job group,
-    description, scheduler pool) taken now."""
-    return pool.submit(inheritable_thread_target(spark)(tio.write_table),
-                       df, location, name, mode)
+def submit(pool: ThreadPoolExecutor, spark: SparkSession, fn, *args) -> Future:
+    """fn(*args) on a pool thread, with a copy of the calling thread's
+    Spark local properties (job group, description, scheduler pool)
+    taken now."""
+    return pool.submit(inheritable_thread_target(spark)(fn), *args)
 
 
 def raise_first_failure(futures: list[Future]) -> None:
@@ -92,6 +90,10 @@ def main(argv: list[str] | None = None) -> None:
                         "(reference semantics, unbounded at pathological "
                         "conversation sizes)")
     args = p.parse_args(argv)
+    try:
+        manifest_dir = manifest_location(args.output, args.manifest_dir)
+    except ValueError as e:
+        p.error(str(e))
 
     spark = get_spark("ccda_extraction_job")
     # local filesystem inputs: size scan splits to the corpus so the
@@ -99,13 +101,7 @@ def main(argv: list[str] | None = None) -> None:
     # (no-op for non-local URIs / inputs big enough for 128MB splits)
     tune_scan_splits(spark, args.input)
     transcripts = tio.read_table(spark, args.input, "transcripts")
-    if args.manifest_dir is None:
-        if tio.is_iceberg_location(args.output):
-            p.error("--output is an Iceberg catalog prefix; pass an "
-                    "explicit filesystem --manifest-dir for the shard "
-                    "manifest")
-        args.manifest_dir = os.path.join(args.output, "_manifest")
-    manifest = Manifest(spark, args.manifest_dir, args.run_id)
+    manifest = Manifest(spark, manifest_dir, args.run_id)
 
     shards = (
         manifest.pending(transcripts, args.shards)
@@ -154,15 +150,12 @@ def run_shard(spark: SparkSession, pool: ThreadPoolExecutor,
 
     try:
         persist(stage.to_persist)
-        # the committed row count rides on the write itself (a fresh
-        # Observation per shard: each observes one DataFrame only)
-        rows = Observation()
-        turns = stage.turns.observe(rows, F.count(F.lit(1)).alias("n"))
         # extracted_turns needs only the turn plan: it runs (and fills
         # the quality and turn caches) while this thread builds the
-        # other sinks' plans, which takes seconds and runs no Spark job
-        first = submit_write(pool, spark, turns, args.output,
-                             f"extracted_turns{suffix}", mode)
+        # other sinks' plans, which takes seconds and runs no Spark job.
+        # Its row count is the shard's committed turn count.
+        first = submit(pool, spark, tio.write_counted, stage.turns,
+                       args.output, f"extracted_turns{suffix}", mode)
         try:
             res = build_outputs(
                 spark, stage, run_id=args.run_id,
@@ -197,10 +190,11 @@ def run_shard(spark: SparkSession, pool: ThreadPoolExecutor,
             *((f"lineage_{step}", ldf) for step, ldf in res.lineage.items()),
         ]
         raise_first_failure([
-            submit_write(pool, spark, df, args.output, f"{name}{suffix}", mode)
+            submit(pool, spark, tio.write_table, df, args.output,
+                   f"{name}{suffix}", mode)
             for name, df in sinks if df is not None
         ])
-        n = rows.get["n"]
+        n = first.result()
         manifest.mark_done(shard, n, n_shards=args.shards)
     finally:
         for df in persisted:

@@ -153,12 +153,20 @@ def document_rollup(turns_with_visits: DataFrame,
 
 def stage_metrics(turns_with_visits: DataFrame) -> DataFrame:
     """Corpus-level per-stage metric rows (main.py:218-239 summary analog):
-    long-format (metric, value) for easy appending to a metrics table."""
+    long-format (metric, value) for easy appending to a metrics table.
+
+    avg_confidence sums the per-turn confidences (two decimals each) as
+    integer hundredths and divides once: exact, so it does not follow
+    the row layout the way a double sum (``F.avg``) does, and it scales
+    over all turns where a sorted fold (``turn_order_mean``) would
+    not."""
+    conf = F.col("confidence")
     agg = turns_with_visits.agg(
         F.count("*").alias("turns_total"),
         F.countDistinct("conv_id").alias("conversations_total"),
         F.sum(F.col("manual_review_required").cast("int")).alias("turns_needing_review"),
-        F.bround(F.avg("confidence"), 4).alias("avg_confidence"),
+        F.bround(F.sum(F.round(conf * 100).cast("long"))
+                 / (F.count(conf) * 100), 4).alias("avg_confidence"),
         F.sum(F.col("is_boundary").cast("int")).alias("boundary_turns"),
         F.sum(F.size("uncertain_tokens")).alias("uncertain_tokens_total"),
     )

@@ -216,11 +216,21 @@ def render_narrative(visits: DataFrame, sections: DataFrame | None = None,
         .agg(
             F.array_sort(
                 F.collect_list(F.struct(F.col("v.visit_id"),
-                                        visit_block.alias("b")))
+                                        visit_block.alias("b"),
+                                        F.col("v.confidence").alias("c")))
             ).alias("_vb"),
             F.count("*").alias("_n_visits"),
-            F.bround(F.avg("v.confidence"), 4).alias("_avg_conf"),
         )
+    )
+    # the mean visit confidence folded in visit_id order: a double sum
+    # in row order (F.avg) follows the partition layout
+    confs = F.filter(F.transform(F.col("_vb"), lambda s: s["c"]),
+                     lambda c: c.isNotNull())
+    avg_conf = F.bround(
+        F.when(F.size(confs) > 0,
+               F.aggregate(confs, F.lit(0.0), lambda acc, c: acc + c)
+               / F.size(confs)),
+        4,
     )
     numbered = F.array_join(
         F.transform(
@@ -259,8 +269,7 @@ def render_narrative(visits: DataFrame, sections: DataFrame | None = None,
         F.lit("PATIENT DEMOGRAPHICS\n"), demo_block, F.lit("\n\n"),
         numbered,
         F.lit("\n\nDATA QUALITY NOTES\n"),
-        F.format_string("OCR Confidence (Average): %.1f%%",
-                        F.col("_avg_conf") * 100),
+        F.format_string("OCR Confidence (Average): %.1f%%", avg_conf * 100),
         F.format_string("\nVisits Processed: %d", F.col("_n_visits")),
         F.lit("\n\n" + FOOTER),
     )

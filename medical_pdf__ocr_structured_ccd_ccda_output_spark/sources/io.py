@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 
 def is_iceberg_location(location: str) -> bool:
@@ -54,3 +54,26 @@ def write_table(df: DataFrame, location: str, name: str,
             raise ValueError(f"unsupported Iceberg write mode: {mode!r}")
         return
     df.write.mode(mode).parquet(os.path.join(location, f"{name}.parquet"))
+
+
+def write_counted(df: DataFrame, location: str, name: str,
+                  mode: str = "overwrite") -> int:
+    """write_table, returning the number of rows written: a fresh
+    Observation counts them on the write, so nothing is read back."""
+    rows = Observation()
+    write_table(df.observe(rows, F.count(F.lit(1)).alias("n")),
+                location, name, mode)
+    return rows.get["n"]
+
+
+def literal_rows(spark: SparkSession, columns: tuple[tuple[str, str], ...],
+                 rows: list[tuple]) -> DataFrame:
+    """`rows` of Python values as a one-partition DataFrame with
+    `columns` = (name, type) pairs, built in the JVM: a createDataFrame
+    over a Python list waits seconds for a Python worker to start."""
+    row_type = ", ".join(f"`{c}`: {t}" for c, t in columns)
+    structs = [F.struct(*[F.lit(v).cast(t).alias(c)
+                          for (c, t), v in zip(columns, row, strict=True)])
+               for row in rows]
+    return spark.range(1, numPartitions=1).select(
+        F.inline(F.array(*structs).cast(f"array<struct<{row_type}>>")))

@@ -11,7 +11,22 @@ scale (driver-side manifest, no Structured Streaming needed).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from .io import is_iceberg_location, literal_rows
+
+
+def manifest_location(output: str, manifest_dir: str | None) -> str:
+    """`manifest_dir`, else ``<output>/_manifest``; an Iceberg catalog
+    prefix has no directory to default into (ValueError)."""
+    if manifest_dir is not None:
+        return manifest_dir
+    if is_iceberg_location(output):
+        raise ValueError("--output is an Iceberg catalog prefix; pass an "
+                         "explicit filesystem --manifest-dir for the manifest")
+    return os.path.join(output, "_manifest")
 
 
 def shard_of(conv_id_col, n_shards: int):
@@ -50,14 +65,9 @@ class _RunRows:
         return df.filter(F.col("run_id") == self.run_id).collect()
 
     def _append(self, *values) -> None:
-        """Append the row (run_id, *values), built in the JVM: a
-        createDataFrame over a Python list becomes a Python RDD, whose
-        one task waits seconds for a Python worker to start."""
-        cols = [F.lit(self.run_id).cast("string").alias("run_id")] + [
-            F.lit(v).cast(t).alias(c)
-            for (c, t), v in zip(self.COLUMNS, values, strict=True)
-        ]
-        self.spark.range(1, numPartitions=1).select(*cols) \
+        """Append the row (run_id, *values)."""
+        literal_rows(self.spark, (("run_id", "string"), *self.COLUMNS),
+                     [(self.run_id, *values)]) \
             .write.mode("append").parquet(self.path)
 
 

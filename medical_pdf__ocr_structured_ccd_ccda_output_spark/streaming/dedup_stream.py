@@ -15,6 +15,8 @@ index and its survivors to the output.  The sink therefore records
 each applied epoch in an ``_applied_epochs`` marker table and SKIPS
 epochs already present (idempotent re-apply), which upgrades the sink
 to effectively-once.  Kept-document appends ride the same guard.
+The marker row and the empty bootstrap index are JVM-built
+(``sources.io.literal_rows``): no Python worker round trip.
 
 State is all on storage (index tables), not in executor memory —
 restarting the stream loses nothing and needs no state-store
@@ -28,12 +30,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import corpus_incremental as ci
+from ..sources.io import literal_rows
 
 DOCS_SCHEMA = "doc_id long, text string"
-
-
-def _sig_type(hash_fn: str) -> str:
-    return "array<string>" if hash_fn == "md5" else "array<bigint>"
 
 
 def _read_index(spark: SparkSession, index_dir: str, hash_fn: str):
@@ -46,9 +45,10 @@ def _read_index(spark: SparkSession, index_dir: str, hash_fn: str):
             idx.select("content_key", "keep_doc_id"),
             idx.select(F.col("keep_doc_id").alias("doc_id"), "signature"),
         )
+    sig = "array<string>" if hash_fn == "md5" else "array<bigint>"
     return (
-        spark.createDataFrame([], "content_key string, keep_doc_id long"),
-        spark.createDataFrame([], f"doc_id long, signature {_sig_type(hash_fn)}"),
+        literal_rows(spark, (("content_key", "string"), ("keep_doc_id", "long")), []),
+        literal_rows(spark, (("doc_id", "long"), ("signature", sig)), []),
     )
 
 
@@ -97,8 +97,8 @@ def make_dedup_sink(index_dir: str, output_dir: str, *,
         # repairable for the output tables by the epoch_id column on
         # decisions (drop rows of unmarked epochs on restart) — the
         # standard foreachBatch compensation contract.
-        spark.createDataFrame([(epoch_id,)], "epoch_id long") \
-            .coalesce(1).write.mode("append") \
+        literal_rows(spark, (("epoch_id", "long"),), [(epoch_id,)]) \
+            .write.mode("append") \
             .parquet(os.path.join(index_dir, "_applied_epochs.parquet"))
         progress(f"[epoch {epoch_id}] applied")
 

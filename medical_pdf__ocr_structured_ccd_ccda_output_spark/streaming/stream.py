@@ -247,7 +247,11 @@ def stateful_sessionize_ooo(extracted_stream: DataFrame,
     exactly-once).  Corollary: a corrupt out-of-range turn_idx in a
     flushed set raises the watermark past legitimate turns — guard
     turn_idx sanity upstream (the P1 ingest-validation stage), as the
-    batch pipeline does."""
+    batch pipeline does.
+
+    An ``availableNow`` query over it does not end by itself: the
+    processing-time timeout keeps scheduling no-data batches, so the
+    caller stops it once its input is consumed."""
 
     return (
         extracted_stream

@@ -196,3 +196,27 @@ def test_incremental_job_chain(spark, tmp_path):
     with pytest.raises(ValueError, match="not completed"):
         run_incremental_job(spark, b2, out, base_run_id="nonexistent",
                             inc_run_id="day3", progress=lambda *_: None)
+
+
+def test_admit_spark_job_budget(spark, spark_jobs, bench_corpus,
+                                bench_scan_splits, tmp_path):
+    """The admit of perfbench's seed-5 batch runs a pinned number of
+    Spark jobs, and its kept count is the committed inc_kept table's:
+    the counts come from the decisions and kept writes, with no
+    reporting pass over the decisions."""
+    out = str(tmp_path / "out")
+    run_corpus_job(spark, spark.read.parquet(bench_corpus["documents"]), out,
+                   run_id="base", progress=lambda *_: None)
+    log = []
+    got, jobs = spark_jobs(
+        run_incremental_job, spark, spark.read.parquet(bench_corpus["batch"]),
+        out, base_run_id="base", inc_run_id="b0", progress=log.append)
+    assert jobs == 84
+
+    def rows(name):
+        return spark.read.parquet(os.path.join(out, f"{name}.parquet")).count()
+
+    n_kept, n_batch = rows("inc_kept_b0"), rows("inc_decisions_b0")
+    assert got == {"incremental/b0": n_kept}
+    assert log == [f"[incremental/b0] {n_kept} of {n_batch} batch docs kept, "
+                   f"keys+signatures appended to index"]

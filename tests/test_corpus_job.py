@@ -69,6 +69,24 @@ def _decisions_map(df):
     return {r["doc_id"]: r.asDict() for r in df.collect()}
 
 
+def _assert_counts_committed(spark, out, counts, shards):
+    """The stage counts run_corpus_job returns and corpus_metrics holds
+    are the committed tables' row counts."""
+    def rows(name):
+        return spark.read.parquet(os.path.join(out, f"{name}.parquet")).count()
+
+    committed = {f"signatures/shard={i}": rows(f"exact_sigs_shard{i}")
+                 for i in range(shards)}
+    committed.update(pairs=rows("near_dup_pairs"),
+                     clusters=rows("near_dup_clusters"))
+    assert counts == {**committed, "survivors": rows("kept_documents")}
+    metrics = spark.read.parquet(os.path.join(out, "corpus_metrics.parquet"))
+    assert dict(map(tuple, metrics.collect())) == {
+        **committed, "decisions": rows("dedup_decisions"),
+        "kept_documents": rows("kept_documents"),
+    }
+
+
 @pytest.mark.parametrize("hash_fn", ["md5", "xxhash64"])
 def test_corpus_dedup_decisions(spark, hash_fn):
     docs = _crafted_docs(spark)
@@ -141,6 +159,20 @@ def test_staged_job_matches_lazy_composition(spark, tmp_path, sf_dir):
     assert kept.columns == docs.columns
     metrics = spark.read.parquet(os.path.join(out, "corpus_metrics.parquet"))
     assert metrics.count() >= 6
+    _assert_counts_committed(spark, out, counts, shards=3)
+
+
+def test_build_spark_job_budget(spark, spark_jobs, bench_corpus,
+                                bench_scan_splits, tmp_path):
+    """The build over perfbench's seed-5 corpus runs a pinned number of
+    Spark jobs: each stage learns its row count from its own write, so
+    a read-back count (a schema job and two count jobs) adds jobs."""
+    out = str(tmp_path / "out")
+    docs = spark.read.parquet(bench_corpus["documents"])
+    counts, jobs = spark_jobs(run_corpus_job, spark, docs, out,
+                              run_id="base", progress=lambda *_: None)
+    assert jobs == 54
+    _assert_counts_committed(spark, out, counts, shards=1)
 
 
 def test_job_kill_resume(spark, tmp_path):

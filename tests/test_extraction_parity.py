@@ -103,3 +103,25 @@ def test_confidence_unit_cases():
     got = [r[0] for r in df.select(confidence_expr(F.col("text_clean"))).collect()]
     want = [rules.score_confidence(c) for c in cases]
     assert got == want
+
+
+def test_section_prefilter_same_in_every_process():
+    """The section prefilter pattern does not follow the string hash
+    seed: processes with different PYTHONHASHSEEDs build the same
+    pattern, so plans and compiled regexes repeat from run to run."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = ("from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions"
+            ".sections import SECTION_PREFILTER; print(SECTION_PREFILTER)")
+
+    def pattern(seed):
+        return subprocess.run(
+            [sys.executable, "-c", code], cwd=root, capture_output=True,
+            text=True, check=True, timeout=120,
+            env={**os.environ, "PYTHONHASHSEED": seed},
+        ).stdout
+
+    assert pattern("1") == pattern("2")

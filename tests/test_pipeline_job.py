@@ -247,23 +247,15 @@ def test_failed_turns_write_unpersists_after_build(spark, small_input, tmp_path,
                     "run_0").completed_shards() == set()
 
 
-def test_job_spark_job_budget(spark, small_input, tmp_path):
+def test_job_spark_job_budget(spark, spark_jobs, small_input, tmp_path):
     """One job.main shard over the small fixture runs a pinned number of
     Spark jobs: a lost persist or a re-split dedup re-executes plans
     and adds jobs.  Pool threads inherit the caller's job group."""
-    import uuid
-
     from medical_pdf__ocr_structured_ccd_ccda_output_spark import job
 
-    sc = spark.sparkContext
-    group = f"budget-{uuid.uuid4()}"
-    sc.setJobGroup(group, "job.main Spark-job budget")
-    try:
-        job.main(["--input", small_input, "--output", str(tmp_path / "out")])
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 28
+    _, jobs = spark_jobs(job.main, ["--input", small_input,
+                                    "--output", str(tmp_path / "out")])
+    assert jobs == 28
 
 
 def test_manifest_refuses_shard_count_change(spark, tmp_path):
@@ -354,6 +346,30 @@ def test_io_location_dispatch(tmp_path):
     assert not is_iceberg_location("s3://bucket/prefix")
     assert not is_iceberg_location(str(tmp_path))        # existing dir
     assert is_iceberg_location("lake.db")                # catalog.namespace
+
+
+def test_iceberg_output_needs_manifest_dir(spark, small_input, tmp_path,
+                                          monkeypatch, capsys):
+    """An Iceberg catalog prefix has no directory for the manifest to
+    default into: all three entry points refuse one without an explicit
+    manifest directory."""
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark import job
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark.corpus_job import (
+        run_corpus_job,
+        run_incremental_job,
+    )
+
+    monkeypatch.chdir(tmp_path)  # "lake.db" must not exist as a directory
+    docs = spark.createDataFrame([(1, "text")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="--manifest-dir"):
+        run_corpus_job(spark, docs, "lake.db", run_id="r")
+    with pytest.raises(ValueError, match="--manifest-dir"):
+        run_incremental_job(spark, docs, "lake.db", base_run_id="r",
+                            inc_run_id="i")
+    with pytest.raises(SystemExit) as exc:
+        job.main(["--input", small_input, "--output", "lake.db"])
+    assert exc.value.code == 2
+    assert "--manifest-dir" in capsys.readouterr().err
 
 
 def test_tune_scan_splits_widens_small_corpus(spark, tmp_path):

@@ -125,6 +125,48 @@ def test_confidence_means_match_oracle_in_any_layout(spark):
             turns.unpersist()
 
 
+def _three_layouts(df, key):
+    """df in one partition in `key` order, in one partition in reverse
+    order, and in seven random partitions."""
+    from pyspark.sql import functions as F
+
+    return {
+        "forward": df.orderBy(key).coalesce(1),
+        "backward": df.orderBy(F.desc(key)).coalesce(1),
+        "random": df.repartition(7, F.rand(1)),
+    }
+
+
+def test_stage_and_narrative_means_in_any_layout(spark):
+    """stage_metrics' avg_confidence (integer hundredths, divided once)
+    and the narrative's average visit confidence (a fold in visit_id
+    order) do not follow the row layout.  The values are picked so that
+    a double sum front to back and back to front rounds differently:
+    the exact mean 0.73375 rounds half-even to 0.7338, and the narrative
+    mean 0.65745 folded in visit order to 0.6574 (65.7%)."""
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark.renderers.text import (
+        render_narrative,
+    )
+
+    confs = [0.94, 0.64, 0.85, 0.6, 0.68, 0.85, 0.63, 0.68]
+    turns = spark.createDataFrame(
+        [(i, f"c{i}", False, c, False, []) for i, c in enumerate(confs)],
+        "i int, conv_id string, manual_review_required boolean, "
+        "confidence double, is_boundary boolean, uncertain_tokens array<string>",
+    )
+    visit_confs = [0.7502, 0.3712, 0.3856, 0.8757, 0.4871, 0.8271, 0.8167, 0.746]
+    visits = spark.createDataFrame(
+        [("c1", f"visit_{i + 1:03d}", None, c) for i, c in enumerate(visit_confs)],
+        "conv_id string, visit_id string, visit_date date, confidence double",
+    )
+    for name, layout in _three_layouts(turns, "i").items():
+        m = {r["metric"]: r["value"] for r in stage_metrics(layout).collect()}
+        assert m["avg_confidence"] == 0.7338, name
+    for name, layout in _three_layouts(visits, "visit_id").items():
+        doc = render_narrative(layout).first()["narrative"]
+        assert "OCR Confidence (Average): 65.7%" in doc, name
+
+
 def test_stage_metrics(extracted):
     m = {r["metric"]: r["value"] for r in stage_metrics(assign_visits(extracted)).collect()}
     assert m["conversations_total"] == N_CONVS
