@@ -155,7 +155,7 @@ def run_shard(spark: SparkSession, pool: ThreadPoolExecutor,
         # other sinks' plans, which takes seconds and runs no Spark job.
         # Its row count is the shard's committed turn count.
         first = submit(pool, spark, tio.write_counted, stage.turns,
-                       args.output, f"extracted_turns{suffix}", mode)
+                       args.output, f"extracted_turns{suffix}")
         try:
             res = build_outputs(
                 spark, stage, run_id=args.run_id,

@@ -56,13 +56,12 @@ def write_table(df: DataFrame, location: str, name: str,
     df.write.mode(mode).parquet(os.path.join(location, f"{name}.parquet"))
 
 
-def write_counted(df: DataFrame, location: str, name: str,
-                  mode: str = "overwrite") -> int:
-    """write_table, returning the number of rows written: a fresh
-    Observation counts them on the write, so nothing is read back."""
+def write_counted(df: DataFrame, location: str, name: str) -> int:
+    """write_table (overwrite), returning the number of rows written: a
+    fresh Observation counts them on the write, so nothing is read back."""
     rows = Observation()
     write_table(df.observe(rows, F.count(F.lit(1)).alias("n")),
-                location, name, mode)
+                location, name, "overwrite")
     return rows.get["n"]
 
 
