@@ -197,11 +197,11 @@ _QUERY_ORDER = [
     # ann_lsh_md5 (three md5 twins of prod corpus tiers; the corpus
     # family keeps five scored rows incl. minhash_lsh_md5 and the
     # end-to-end corpus_dedup_pipeline, and the ANN family keeps
-    # ann_ivf_oracle + emb_near_dups); section_spans (sections_expr
-    # runs with identical semantics inside the scored
-    # transcript_pipeline via extract_turns(with_sections=True),
-    # pipeline.py:129, and section_headers — the same dictionary and
-    # boundary validation — stays scored); unclear_chars (A4/A5 counts
+    # ann_ivf_oracle + emb_near_dups); section_spans (the same section
+    # rules, rules.extract_sections, run inside the scored
+    # transcript_pipeline via extract_turns(with_sections=True), and
+    # section_headers — the same dictionary and boundary validation —
+    # stays scored); unclear_chars (A4/A5 counts
     # ride inside the scored document_rollup, whose row carries
     # unclear_marker_count + total_chars, rollups.py:121).
     # Last round-5 rotation: the three corpus-hygiene operators added
@@ -220,9 +220,9 @@ _QUERY_ORDER = [
     # human_doc/ccd_xml renderers, which build their per-document
     # strings through the same ordered text aggregation).  top_ngrams
     # (the corpus-wide heavy-hitters miner, new this round) took
-    # clean_extract's slot: the S5 extractor it ran is exercised
-    # verbatim by TWO still-scored queries — transcript_pipeline calls
-    # the same extract_turns stage, and streaming_extract replays the
+    # clean_extract's slot: the S5 cleaning rules its JVM twin runs are
+    # exercised by TWO still-scored queries — transcript_pipeline calls
+    # the extract_turns stage, and streaming_extract replays the
     # identical per-turn extraction through a real stream.
     # salient_terms (per-doc tf*N/df keywords, round-5) lands past the
     # cut — every remaining in-window row is the SOLE driver evidence

@@ -196,23 +196,27 @@ def main():
         timings[name] = round(dt, 3)
 
     # Per-turn equality pass rate (the north metric's correctness half):
-    # the JVM expression extractor vs the Arrow UDF that runs
-    # rules.clean_text (the pure-Python rule spec), over the whole
-    # corpus — two independent implementations of the extraction rules.
+    # the JVM expression extractor vs extract_turns' Arrow UDF, which
+    # runs rules.py (the pure-Python rule spec), over the whole corpus —
+    # two independent implementations of the extraction rules.
     from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.cleaning import (
         clean_text_expr,
-        clean_text_pandas_udf,
     )
     from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.confidence import (
         confidence_expr,
     )
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.extract import (
+        extract_turns,
+    )
 
-    jvm_clean = clean_text_expr(F.col("text"))
-    py_clean = clean_text_pandas_udf()(F.col("text"))
-    eq = transcripts.agg(
-        F.avg((jvm_clean == py_clean).cast("double")).alias("txt"),
+    jvm_clean = F.col("jvm_clean")
+    eq = extract_turns(
+        transcripts.withColumn("jvm_clean", clean_text_expr(F.col("text"))),
+        with_sections=False,
+    ).agg(
+        F.avg((jvm_clean == F.col("text_clean")).cast("double")).alias("txt"),
         F.avg(
-            (confidence_expr(jvm_clean) == confidence_expr(py_clean)).cast("double")
+            (confidence_expr(jvm_clean) == F.col("confidence")).cast("double")
         ).alias("conf"),
     ).collect()[0]
     equality = {

@@ -1,12 +1,11 @@
-"""Main-content extraction: one production implementation of
-rules.clean_text and one JVM reference twin (tested equal per turn).
+"""Main-content extraction: the JVM reference twin of rules.clean_text
+(tested equal per turn), plus the whitespace helpers other stages use.
 
-* ``clean_text_pandas_udf`` — THE extractor (``extract_turns``): an
-  Arrow-batched pandas UDF running ``rules.clean_text`` itself.
-* ``clean_text_expr`` — the pure-JVM twin built from higher-order array
-  functions (whole-stage codegen, no Python).  It is the reference the
-  ``clean_extract`` contract query, ``bench.py`` and the parity tests
-  use; no pipeline stage runs it.
+Production cleans text in ``operators/extract.py``'s Arrow UDF, which
+runs ``rules.clean_text`` itself.  ``clean_text_expr`` and
+``layout_hints_expr`` are the pure-JVM twins built from higher-order
+array functions; the contract queries (``clean_extract`` and others),
+``bench.py`` and the parity tests run them; no pipeline stage does.
 
 Note on regex dialects: where rules.py uses Python `\\s` (unicode-aware
 on str patterns), the Spark expressions use the PY_WS class below —
@@ -15,7 +14,6 @@ Java `\\s` is ASCII-only and would diverge on NBSP/NEL/Z* whitespace.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -60,20 +58,6 @@ def clean_text_expr(text: Column) -> Column:
         .when(~stripped.rlike(PY_NONWS), F.lit(rules.EMPTY_EXTRACTION_MARKER))
         .otherwise(stripped)
     )
-
-
-def clean_text_pandas_udf():
-    """Arrow-batched extractor UDF, the one ``extract_turns`` runs (same
-    semantics as clean_text_expr — tested equal).  Shares
-    rules.clean_text with the pytest oracle, and the ArrowEvalPython
-    node doubles as a materialization barrier for the expensive
-    cleaning step (see operators/extract.py)."""
-    from pyspark.sql import types as T
-
-    def _clean(s: pd.Series) -> pd.Series:
-        return s.map(rules.clean_text)
-
-    return F.pandas_udf(_clean, T.StringType())
 
 
 def layout_hints_expr(text: Column) -> Column:

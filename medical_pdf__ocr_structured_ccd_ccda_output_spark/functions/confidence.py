@@ -1,4 +1,7 @@
-"""Confidence estimator as a single JVM column expression.
+"""Confidence estimator as a single JVM column expression — the
+reference twin of rules.score_confidence, which extraction itself runs
+in operators/extract.py's Arrow UDF.  The contract queries and the
+parity tests run this one.
 
 Bit-identical to rules.score_confidence (ocr_service.py:304-364
 semantics): same float64 operation order, banker's rounding via

@@ -1,4 +1,7 @@
-"""Date extraction + visit boundary detection as column expressions.
+"""Date extraction + visit boundary detection as column expressions:
+reference twins of rules.extract_date / is_visit_boundary, which
+extraction itself runs in operators/extract.py's Arrow UDF.  The
+contract queries and the parity and streaming tests run these.
 
 Mirrors rules.extract_date (chunking_service.py:119-156): three patterns
 tried in order, first *match* per pattern, invalid parse falls through

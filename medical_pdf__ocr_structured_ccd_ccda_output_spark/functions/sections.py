@@ -1,4 +1,7 @@
-"""Clinical section segmentation as JVM array expressions.
+"""Clinical section segmentation as JVM array expressions: the reference
+twin of rules.extract_sections, which extraction itself runs in
+operators/extract.py's Arrow UDF.  The contract queries (section and
+entity queries over injected text) and the parity tests run it.
 
 Mirrors rules.extract_sections: a header line opens a span; the span
 ends on the line before the next header (or EOF).  Built with

@@ -1,9 +1,12 @@
-"""Uncertain-token extraction + review flags/reasons as JVM expressions.
+"""Uncertain-token extraction + review flags/reasons as JVM expressions:
+reference twins of rules.extract_uncertain_tokens / needs_review /
+review_reasons (ocr_service.py:366-471), which extraction itself runs
+in operators/extract.py's Arrow UDF.  The contract queries and the
+parity tests run these.
 
-Mirrors rules.extract_uncertain_tokens / needs_review / review_reasons
-(ocr_service.py:366-471).  Built entirely with higher-order array
-functions: three ordered passes over the line array, concatenated, then
-capped at 20 — no explode, no shuffle, no Python.
+Built entirely with higher-order array functions: three ordered passes
+over the line array, concatenated, then capped at 20 — no explode, no
+shuffle, no Python.
 """
 
 from __future__ import annotations

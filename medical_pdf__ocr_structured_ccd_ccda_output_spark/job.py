@@ -131,7 +131,7 @@ def run_shard(spark: SparkSession, pool: ThreadPoolExecutor,
     count.  Every sink derives from the persisted frames (quality
     aggregate, extract+sessionize plan, dedup output); without a persist
     each of the ~15 write actions re-executes the scan, the Arrow
-    cleaning UDF, the conv_id shuffle and the grouped dedup.  They are
+    extraction UDF, the conv_id shuffle and the grouped dedup.  They are
     persisted in dependency order, so each cached plan reads the caches
     before it.  MEMORY_AND_DISK: a shard that outgrows executor memory
     spills instead of recomputing.  Unpersisted on every way out, but

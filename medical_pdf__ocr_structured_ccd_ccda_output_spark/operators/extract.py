@@ -1,54 +1,95 @@
 """Extraction stage: transcripts -> extracted_turns.
 
-``text_clean`` comes from the Arrow-batched cleaning UDF: one
-ArrowEvalPython node running ``rules.clean_text``, the same code the
-pytest oracle runs.  Every other column is a JVM expression over
-``text_clean`` (whole-stage codegen; no Python).  The pure-JVM
-``clean_text_expr`` twin is a reference only (the ``clean_extract``
-contract query and the parity tests); extraction never uses it.
+Every per-turn field comes from one Arrow UDF: a single ArrowEvalPython
+node that runs ``reference_oracle.extract_turn`` — the rules.py
+extractor the pytest oracle runs — over each batch of ``text`` and
+returns one struct, from which the nine columns are selected.  The JVM
+expressions in ``functions/`` (``clean_text_expr``, ``confidence_expr``,
+``sections_expr``, ...) are references only: the contract queries,
+``bench.py`` and the parity tests run them; extraction does not.
 This is the narrow, embarrassingly-parallel stage — it runs before any
 shuffle, so Catalyst keeps it pipelined with the parquet scan and the
-`text` column is pruned as soon as `text_clean` is derived.
+`text` column is pruned as soon as the struct is derived.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+import datetime
 
-from ..functions.cleaning import clean_text_pandas_udf, layout_hints_expr
-from ..functions.confidence import confidence_expr
-from ..functions.dates import extracted_date_expr, is_visit_boundary_expr
-from ..functions.sections import sections_expr
-from ..functions.tokens import (
-    needs_review_expr,
-    review_reasons_expr,
-    uncertain_tokens_expr,
-)
+# module level, not inside _build_projection: PySpark resolves the UDF's
+# ``pa.Array`` hints from the module's globals
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_type
+
+from .. import reference_oracle
 from ..session import context_cached
+
+_TOKEN = T.StructType([
+    T.StructField("line_number", T.IntegerType(), False),
+    T.StructField("token", T.StringType(), False),
+    T.StructField("context", T.StringType(), False),
+    T.StructField("reason", T.StringType(), False),
+])
+_SECTION = T.StructType([
+    T.StructField("section", T.StringType()),
+    T.StructField("start_line", T.IntegerType()),
+    T.StructField("end_line", T.IntegerType()),
+    T.StructField("text", T.StringType()),
+])
+# the output columns in order, typed as the JVM references type them;
+# selected from a Python UDF's result, every column is nullable (the
+# references' layout_hints and review_reasons were not)
+FIELDS = T.StructType([
+    T.StructField("text_clean", T.StringType()),
+    T.StructField("confidence", T.DoubleType()),
+    T.StructField("layout_hints", T.StructType([
+        T.StructField("has_tables", T.BooleanType()),
+        T.StructField("has_handwriting", T.BooleanType()),
+    ])),
+    T.StructField("uncertain_tokens", T.ArrayType(_TOKEN, False)),
+    T.StructField("manual_review_required", T.BooleanType()),
+    T.StructField("review_reasons", T.ArrayType(T.StringType(), False)),
+    T.StructField("is_boundary", T.BooleanType()),
+    T.StructField("extracted_date", T.DateType()),
+    T.StructField("sections", T.ArrayType(_SECTION, False)),
+])
+
+# the struct column the UDF fills; dropped once its fields are selected
+_STRUCT = "_extracted"
+
+
+def _return_type(with_sections: bool) -> T.StructType:
+    if with_sections:
+        return FIELDS
+    return T.StructType([f for f in FIELDS.fields if f.name != "sections"])
+
+
+def extract_batch(text: pa.Array, with_sections: bool) -> pa.Array:
+    """``reference_oracle.extract_turn`` over one Arrow batch, as a
+    struct array of the extraction fields."""
+    rows = []
+    for t in text.to_pylist():
+        row = reference_oracle.extract_turn(t, with_sections=with_sections)
+        if row["extracted_date"] is not None:
+            row["extracted_date"] = datetime.date.fromisoformat(
+                row["extracted_date"])
+        rows.append(row)
+    return pa.array(rows, type=to_arrow_type(_return_type(with_sections)))
 
 
 def _build_projection(with_sections: bool) -> tuple[dict[str, Column], ...]:
-    """The extraction columns as dependency-ordered groups: each group
-    reads only columns an earlier group (or the input) defines."""
-    text_clean = clean_text_pandas_udf()(F.col("text"))
-    c = F.col("text_clean")
-    conf, unc = F.col("confidence"), F.col("uncertain_tokens")
-    derived = {
-        "manual_review_required": needs_review_expr(conf, unc),
-        "review_reasons": review_reasons_expr(conf, unc, c),
-        "is_boundary": is_visit_boundary_expr(c),
-        "extracted_date": extracted_date_expr(c),
-    }
-    if with_sections:
-        derived["sections"] = sections_expr(c)
+    """The extraction columns as dependency-ordered groups: the UDF's
+    struct, then its fields."""
+    def extract(text: pa.Array) -> pa.Array:
+        return extract_batch(text, with_sections)
+
+    return_type = _return_type(with_sections)
+    udf = F.arrow_udf(extract, return_type)
+    struct = F.col(_STRUCT)
     return (
-        {"text_clean": text_clean},
-        {
-            "confidence": confidence_expr(c),
-            "layout_hints": layout_hints_expr(c),
-            "uncertain_tokens": uncertain_tokens_expr(c),
-        },
-        derived,
+        {_STRUCT: udf(F.col("text"))},
+        {f: struct[f] for f in return_type.names},
     )
 
 
@@ -65,28 +106,23 @@ def extract_turns(transcripts: DataFrame,
     """Per-turn extraction: clean text, confidence, uncertainty, review
     flags, layout hints, boundary flag, extracted date, section spans.
 
-    The boilerplate-strip pass runs as an Arrow-batched pandas UDF over
-    ``rules.clean_text``, the implementation the pytest oracle runs.
-    Its ArrowEvalPython node materializes text_clean as a real column,
-    so the dozen downstream expressions read an attribute instead of
-    having the cleaning expression inlined into each of them by
-    CollapseProject.  It is also the node perfbench's tracer attributes
-    to this stage.  The pure-JVM ``clean_text_expr`` twin (tested equal)
-    measured no faster on ``extract_hot`` (BENCH.md §16), so it is kept
-    only as the reference.
+    One Arrow UDF (``extract_batch``) computes every field with
+    ``rules.py`` through ``reference_oracle.extract_turn``, the
+    implementation the pytest oracle runs; ``with_sections=False``
+    skips the section spans.  Its ArrowEvalPython node evaluates the
+    UDF once per row, not once per selected field, and it is the node
+    perfbench's tracer attributes to this stage.  The JVM twins in
+    ``functions/`` evaluate the same fields as about 4,000 expression
+    nodes whose higher-order lambdas run interpreted; on ``extract_hot``
+    they cost more than the whole Python extractor (BENCH.md §18), so
+    they are kept only as references.
 
-    The projection (the cleaning UDF and every Column expression) is
-    built once per live SparkContext and ``with_sections`` value — see
-    ``session.context_cached``.  Building it takes ~4,000 py4j round
-    trips (~1 s of driver time on a 4-vCPU host), which a hot loop of
-    passes, the shards of ``job.main`` and every streaming invocation
-    would otherwise pay per plan; with it a warm
-    ``assign_visits(extract_turns(t))`` build sends 60
-    (``tools/plan_build_probe.py``).  The columns are applied as three
-    ``withColumns`` projections, in dependency order, instead of nine
-    ``withColumn`` analyses; schema, column order and values are
-    unchanged."""
+    The projection (the UDF and the field Columns) is built once per
+    live SparkContext and ``with_sections`` value — see
+    ``session.context_cached``.  It is applied as two ``withColumns``
+    projections, the struct and then its fields, and the struct and
+    ``text`` are dropped; the columns keep their order and values."""
     df = transcripts
     for group in _projection(transcripts, with_sections):
         df = df.withColumns(group)
-    return df.drop("text")
+    return df.drop("text", _STRUCT)

@@ -2,7 +2,8 @@
 entities (+dedup log), doc rollups, metrics, lineage, CCD XML.
 
 Shuffle budget (the thing that matters at 100 TB):
-  stage 1  narrow extraction (scan-pipelined, codegen, zero Python)
+  stage 1  narrow extraction: one Arrow UDF running rules.py per
+           batch, pipelined with the scan (operators/extract.py)
   stage 2  ONE shuffle on conv_id for the ordering window (or the
            skew-aware bucketed variant's (conv_id,bucket) shuffles)
   stage 3  groupBy rollups reuse the conv_id partitioning where

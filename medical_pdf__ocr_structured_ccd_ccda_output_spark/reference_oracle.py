@@ -12,12 +12,13 @@ from __future__ import annotations
 from . import rules
 
 
-def extract_turn(text: str) -> dict:
-    """Per-turn extraction result (analog of ocr_service.py:273-282)."""
+def extract_turn(text: str, with_sections: bool = True) -> dict:
+    """Per-turn extraction result (analog of ocr_service.py:273-282).
+    ``with_sections=False`` leaves out the section spans."""
     clean = rules.clean_text(text)
     conf = rules.score_confidence(clean)
     tokens = rules.extract_uncertain_tokens(clean)
-    return {
+    out = {
         "text_clean": clean,
         "confidence": conf,
         "layout_hints": rules.layout_hints(clean),
@@ -26,8 +27,10 @@ def extract_turn(text: str) -> dict:
         "review_reasons": rules.review_reasons(conf, tokens, clean),
         "is_boundary": rules.is_visit_boundary(clean),
         "extracted_date": rules.extract_date(clean),
-        "sections": rules.extract_sections(clean),
     }
+    if with_sections:
+        out["sections"] = rules.extract_sections(clean)
+    return out
 
 
 def sessionize(turns: list[dict]) -> list[dict]:

@@ -48,6 +48,11 @@ def get_spark(app_name: str = "ccda_extraction_engine",
         # shuffles wide enough to exceed 200 partitions — any real
         # cluster job — never used the bypass path anyway.
         .config("spark.shuffle.sort.bypassMergeThreshold", "8")
+        # One job.main shard generates about 215 distinct whole-stage
+        # classes; the default 100-entry codegen cache would evict them
+        # before they repeat, and every later shard, stream batch or
+        # pipeline in the same JVM would compile them all again
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
@@ -135,7 +140,7 @@ def context_cached(df: DataFrame, key: Hashable, build: Callable[[], T]) -> T:
     """``build()``'s result, built once per live SparkContext.
 
     For Column trees that are identical on every call: building one
-    costs a py4j round trip per ``F.*`` node, thousands for the
+    costs a py4j round trip per ``F.*`` node, hundreds for the
     extraction projection, while reusing a JVM Column in a new plan
     costs none (Columns are immutable and get their own analysis in
     every plan).  The entry is keyed on the SparkContext object itself,

@@ -3,19 +3,22 @@ once per live SparkContext and reused by every later plan.
 
 Pins: a warm build reuses the cached Column objects and gives the same
 schema and rows as a fresh build; the two with_sections keys stay
-apart, and both plans clean through the Arrow UDF; a different
-SparkContext misses the cache; a warm rebuild of
-assign_visits(extract_turns(t)) costs a few hundred py4j round trips at
-most instead of thousands.
+apart, and both plans extract through the Arrow UDF; the executed plan
+runs that one UDF and none of the JVM feature expressions; the
+unsectioned variant never segments sections; a different SparkContext
+misses the cache; a warm rebuild of assign_visits(extract_turns(t))
+costs a few hundred py4j round trips at most.
 """
 
 import threading
 import time
 
+import pyarrow as pa
 import pytest
 from py4j import clientserver
+from pyspark.sql import functions as F
 
-from medical_pdf__ocr_structured_ccd_ccda_output_spark import session
+from medical_pdf__ocr_structured_ccd_ccda_output_spark import rules, session
 from medical_pdf__ocr_structured_ccd_ccda_output_spark.fixtures import (
     transcripts_spark_df,
 )
@@ -78,6 +81,69 @@ def test_section_keys_do_not_collide(spark, transcripts, monkeypatch):
         assert extract._projection(transcripts, ws) is groups
 
 
+def _plan_nodes(plan):
+    """(node, expression class names) for every node of a physical plan."""
+    def expression_classes(e):
+        kids = e.children()
+        yield e.getClass().getSimpleName()
+        for i in range(kids.size()):
+            yield from expression_classes(kids.apply(i))
+
+    exprs = plan.expressions()
+    names = [n for i in range(exprs.size())
+             for n in expression_classes(exprs.apply(i))]
+    yield plan, names
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+@pytest.mark.parametrize("with_sections", [True, False])
+def test_plan_runs_one_udf_and_no_jvm_features(spark, transcripts,
+                                               with_sections):
+    """Every field comes from one ArrowEvalPython node with one Python
+    UDF, evaluated once; none of the functions/* twins' higher-order
+    lambdas or regexes runs."""
+    out = extract.extract_turns(transcripts, with_sections=with_sections)
+    out.write.format("noop").mode("overwrite").save()
+    nodes = list(_plan_nodes(out._jdf.queryExecution().executedPlan()))
+    arrow = [n for n, _ in nodes if n.nodeName() == "ArrowEvalPython"]
+    assert len(arrow) == 1
+    assert arrow[0].udfs().size() == 1
+    assert arrow[0].evalType() == 250  # SQL_SCALAR_ARROW_UDF
+    classes = {c for _, names in nodes for c in names}
+    assert "PythonUDF" in classes
+    assert not classes & {"ArrayTransform", "ArrayFilter", "ZipWith",
+                          "RLike", "RegExpReplace", "RegExpExtract"}
+
+
+def test_unsectioned_variant_never_segments(spark, monkeypatch):
+    """The with_sections=False UDF never calls rules.extract_sections;
+    the sectioned one does."""
+    built = {}
+    arrow_udf = F.arrow_udf
+
+    def capture(fn, return_type):
+        built[return_type] = fn
+        return arrow_udf(fn, return_type)
+
+    monkeypatch.setattr(F, "arrow_udf", capture)
+    for ws in (True, False):
+        extract._build_projection(ws)
+    monkeypatch.undo()
+
+    calls = []
+    monkeypatch.setattr(rules, "extract_sections",
+                        lambda text: calls.append(text) or [])
+    text = pa.array(["MEDICATIONS:\n- aspirin 81 mg", None])
+    unsectioned = built[extract._return_type(False)](text)
+    assert calls == []
+    assert "sections" not in [f.name for f in unsectioned.type]
+    sectioned = built[extract._return_type(True)](text)
+    assert len(calls) == 2
+    assert "sections" in [f.name for f in sectioned.type]
+
+
 def test_other_spark_context_misses(spark, transcripts, monkeypatch):
     monkeypatch.setattr(session, "_PER_CONTEXT", {})
     ours = extract._projection(transcripts, True)
@@ -112,8 +178,9 @@ def test_warm_rebuild_py4j_round_trips(spark, transcripts, monkeypatch):
                         send_command)
     build()
     monkeypatch.undo()
-    # a cold build of the same plan sends ~4,500
-    assert 0 < len(sent) < 500, len(sent)
+    # a cold build of the same plan sends ~370 (UDF, field Columns and
+    # window Columns)
+    assert 0 < len(sent) < 200, len(sent)
 
 
 def test_concurrent_callers_build_once(monkeypatch):

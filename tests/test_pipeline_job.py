@@ -258,6 +258,36 @@ def test_job_spark_job_budget(spark, spark_jobs, small_input, tmp_path):
     assert jobs == 28
 
 
+def test_repeat_pipeline_compiles_almost_nothing(spark, small_input):
+    """A second identical run_pipeline write finds its whole-stage
+    classes in the codegen cache.  One pipeline generates more distinct
+    classes than the default 100-entry cache holds, so before
+    session.get_spark sized it (spark.sql.codegen.cache.maxEntries) the
+    LRU evicted them and the repeat compiled almost all of them again.
+    Read from the JVM's CodegenMetrics, which runs no Spark job."""
+    from dataclasses import fields
+
+    from pyspark.sql import DataFrame
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+
+    def write_all():
+        res = run_pipeline(spark, spark.read.parquet(
+            os.path.join(small_input, "transcripts.parquet")))
+        sinks = [getattr(res, f.name) for f in fields(res)]
+        for df in [s for s in sinks if isinstance(s, DataFrame)] + \
+                list(res.lineage.values()):
+            df.write.format("noop").mode("overwrite").save()
+        return compiles.getCount()
+
+    before = compiles.getCount()
+    first = write_all() - before
+    second = write_all() - before - first
+    assert first > 100, first
+    assert second <= 5, (first, second)
+
+
 def test_manifest_refuses_shard_count_change(spark, tmp_path):
     """Round-3 review fix: pmod(hash, n) bucketing is not stable across
     n, so resuming with a different --shards would silently skip every
