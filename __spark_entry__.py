@@ -4,7 +4,10 @@ queries() covers the operator inventory from SURVEY.md §2 two ways:
   * extraction-rule operators (clean/confidence/layout/dates/sections/
     normalize) run over the `documents` table's text column so DuckDB
     can oracle them with the identical rule expressed in its SQL
-    dialect (RE2 regex, 'g'-flag regexp_replace, try_strptime);
+    dialect (RE2 regex, 'g'-flag regexp_replace, try_strptime); the
+    Spark side runs the rules.py functions themselves through
+    operators.extract.rules_udf, the Arrow UDF extract_turns is built
+    on, so the oracles check the code production runs;
   * relational primitives (agg/join/window/top-k/sessionize) run over
     the TPC-H-ish tables; money sums go through decimal casts so both
     engines aggregate exactly (no float-order drift).
@@ -44,28 +47,18 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
 from medical_pdf__ocr_structured_ccd_ccda_output_spark import rules
-from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.cleaning import (
-    clean_text_expr,
-    layout_hints_expr,
-)
-from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.confidence import (
-    confidence_expr,
-)
-from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.dates import (
-    extracted_date_expr,
-    is_visit_boundary_expr,
-)
-from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.sections import (
-    sections_expr,
-)
 from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators import (
     corpus,
     graph,
     multimodal,
     similarity,
+)
+from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.extract import (
+    FIELDS,
+    rules_udf,
 )
 from medical_pdf__ocr_structured_ccd_ccda_output_spark.renderers.xml import (
     HL7_NAMESPACE,
@@ -220,8 +213,8 @@ _QUERY_ORDER = [
     # human_doc/ccd_xml renderers, which build their per-document
     # strings through the same ordered text aggregation).  top_ngrams
     # (the corpus-wide heavy-hitters miner, new this round) took
-    # clean_extract's slot: the S5 cleaning rules its JVM twin runs are
-    # exercised by TWO still-scored queries — transcript_pipeline calls
+    # clean_extract's slot: the S5 cleaning rule it runs, rules.clean_text,
+    # is exercised by TWO still-scored queries — transcript_pipeline calls
     # the extract_turns stage, and streaming_extract replays the
     # identical per-turn extraction through a real stream.
     # salient_terms (per-doc tf*N/df keywords, round-5) lands past the
@@ -276,6 +269,12 @@ _QUERY_ORDER = [
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _sections(text: Column) -> Column:
+    """rules.extract_sections over a text column, typed as
+    extract_turns types its sections field."""
+    return rules_udf(rules.extract_sections, FIELDS["sections"].dataType)(text)
 
 
 def _docs_as_transcripts(spark: SparkSession, sf: str) -> DataFrame:
@@ -349,41 +348,33 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ---- extraction rules over documents.text (oracled) ----
     def q_clean_extract(spark, sf):
         d = _read(spark, sf, "documents")
-        return d.select("doc_id", clean_text_expr(F.col("text")).alias("text_clean"))
+        clean = rules_udf(rules.clean_text, T.StringType())
+        return d.select("doc_id", clean(F.col("text")).alias("text_clean"))
     q["clean_extract"] = q_clean_extract
 
     def q_confidence(spark, sf):
         d = _read(spark, sf, "documents")
-        return d.select(
-            "doc_id",
-            confidence_expr(F.col("text"), rounded=False).alias("confidence_raw"),
-        )
+        conf = rules_udf(rules.raw_confidence, T.DoubleType())
+        return d.select("doc_id", conf(F.col("text")).alias("confidence_raw"))
     q["confidence"] = q_confidence
 
     def q_layout_hints(spark, sf):
         d = _read(spark, sf, "documents")
-        h = layout_hints_expr(F.col("text"))
-        return d.select(
-            "doc_id",
-            h["has_tables"].alias("has_tables"),
-            h["has_handwriting"].alias("has_handwriting"),
-        )
+        hints = rules_udf(rules.layout_hints, FIELDS["layout_hints"].dataType)
+        return d.select("doc_id", hints(F.col("text")).alias("h")).select(
+            "doc_id", "h.has_tables", "h.has_handwriting")
     q["layout_hints"] = q_layout_hints
 
     def q_boundary_flags(spark, sf):
         d = _read(spark, sf, "documents")
-        return d.select(
-            "doc_id", is_visit_boundary_expr(F.col("text")).alias("is_boundary")
-        )
+        boundary = rules_udf(rules.is_visit_boundary, T.BooleanType())
+        return d.select("doc_id", boundary(F.col("text")).alias("is_boundary"))
     q["boundary_flags"] = q_boundary_flags
 
     def q_extract_date(spark, sf):
         d = _read(spark, sf, "documents")
-        return d.select(
-            "doc_id",
-            F.date_format(extracted_date_expr(F.col("text")), "yyyy-MM-dd")
-            .alias("extracted_date"),
-        )
+        date = rules_udf(rules.extract_date, T.StringType())
+        return d.select("doc_id", date(F.col("text")).alias("extracted_date"))
     q["extract_date"] = q_extract_date
 
     def q_normalize(spark, sf):
@@ -394,7 +385,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_section_headers(spark, sf):
         d = _read(spark, sf, "documents")
         return d.select(
-            "doc_id", F.size(sections_expr(F.col("text"))).alias("n_sections")
+            "doc_id", F.size(_sections(F.col("text"))).alias("n_sections")
         )
     q["section_headers"] = q_section_headers
 
@@ -422,7 +413,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.lit(" and "), F.lit("\nPLAN\n"),
         )
         s = d.select(
-            "doc_id", F.explode(sections_expr(injected)).alias("sp")
+            "doc_id", F.explode(_sections(injected)).alias("sp")
         )
         return s.select(
             "doc_id",
@@ -438,18 +429,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         cap 20, ocr_service.py:366-420): markers injected
         deterministically so all passes fire; structs exploded with
         their capped-list position."""
-        from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.tokens import (
-            uncertain_tokens_expr,
-        )
         d = _read(spark, sf, "documents")
         injected = F.replace(
             F.replace(F.col("text"),
                       F.lit(" spark "), F.lit(" MS [UNCLEAR: spark?] possibly ")),
             F.lit(" data "), F.lit(" BS ~~~ "),
         )
+        tokens = rules_udf(rules.extract_uncertain_tokens,
+                           FIELDS["uncertain_tokens"].dataType)
         ex = d.select(
             "doc_id",
-            F.posexplode(uncertain_tokens_expr(injected)).alias("pos", "tok"),
+            F.posexplode(tokens(injected)).alias("pos", "tok"),
         )
         return ex.select(
             "doc_id",
@@ -1398,7 +1388,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             mark_unclear_expr,
         )
         d = _read(spark, sf, "documents")
-        conf = confidence_expr(F.col("text"), rounded=False)
+        conf = rules_udf(rules.raw_confidence, T.DoubleType())(F.col("text"))
         # Python .split()[0] semantics: unicode strip + PY_WS split
         guess = F.element_at(F.split(strip_ws(F.col("text")), f"{PY_WS}+"), 1)
         return d.select(
@@ -1778,7 +1768,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_vitals_extract(spark, sf):
         """Vitals extraction with BloodPressure range validation
         (canonical_schema.py:64-94): synthesized vitals sections with
-        doc-varying BP values run through the real sections_expr +
+        doc-varying BP values run through rules.extract_sections +
         extract_vitals operators; the unknown Glucose label and the
         slashless-BP form are dropped by the grammar."""
         from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators import entities
@@ -1795,7 +1785,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.concat(F.lit("c"), F.col("doc_id").cast("string")).alias("conv_id"),
             F.lit("visit_001").alias("visit_id"),
             F.col("doc_id").cast("int").alias("turn_idx"),
-            sections_expr(txt).alias("sections"),
+            _sections(txt).alias("sections"),
         )
         return entities.extract_vitals(turns).select(
             "conv_id", "vital_name", "value", "systolic", "diastolic",
@@ -1820,7 +1810,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.concat(F.lit("c"), F.col("doc_id").cast("string")).alias("conv_id"),
             F.lit("visit_001").alias("visit_id"),
             F.col("doc_id").cast("int").alias("turn_idx"),
-            sections_expr(txt).alias("sections"),
+            _sections(txt).alias("sections"),
         )
         al = entities.extract_allergies(turns).select(
             "conv_id", F.lit("allergy").alias("kind"),
@@ -2108,7 +2098,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         first-match keyword scan; injected markers exercise each enum
         value while the oracle replicates the full chain over the same
         text (robust to keywords already present in the corpus)."""
-        from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.sections import (
+        from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.sessionize import (
             encounter_type_expr,
         )
         d = _read(spark, sf, "documents")
@@ -2146,7 +2136,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         turns = d.select(
             F.col("source").alias("conv_id"),
             F.col("doc_id").cast("int").alias("turn_idx"),
-            sections_expr(injected).alias("sections"),
+            _sections(injected).alias("sections"),
         )
         out = rollups.data_quality_rollup(turns, include_confidence=False)
         return out.select(
@@ -2429,7 +2419,7 @@ _DATE_SQL = _date_sql()
 
 
 def _section_match_sql(line_expr: str) -> str:
-    """CASE expression mirroring functions/sections.section_name_expr."""
+    """CASE expression mirroring rules.match_section_header."""
     whens = []
     for name, pat in rules.SECTION_RULES:
         p = rules.engine_portable(pat).replace("'", "''")
@@ -3004,8 +2994,9 @@ JOIN seq s ON s.source = c.source AND s.doc_id = c.doc_id
 
 def _uncertain_tokens_sql() -> str:
     """F7 three-pass uncertain-token extraction with cap 20, exploded
-    with capped-list position — mirrors functions/tokens.py expr-for-
-    expr (pos/rel/close arithmetic, strip semantics, pass order)."""
+    with capped-list position — mirrors rules.extract_uncertain_tokens
+    step for step (find/close arithmetic, strip semantics, pass
+    order)."""
     abbrevs = "[" + ", ".join(
         "{'abbrev': '%s', 'reason': 'ambiguous_abbreviation: %s'}"
         % (a, m.replace("'", "''"))

@@ -196,32 +196,34 @@ def main():
         timings[name] = round(dt, 3)
 
     # Per-turn equality pass rate (the north metric's correctness half):
-    # the JVM expression extractor vs extract_turns' Arrow UDF, which
-    # runs rules.py (the pure-Python rule spec), over the whole corpus —
-    # two independent implementations of the extraction rules.
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.cleaning import (
-        clean_text_expr,
-    )
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.confidence import (
-        confidence_expr,
-    )
+    # extract_turns' Arrow UDF vs reference_oracle.extract_turn, the
+    # pure-Python rule spec run in this process, over the whole
+    # corpus, turn by turn under (conv_id, turn_idx).
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark import reference_oracle
     from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.extract import (
         extract_turns,
     )
 
-    jvm_clean = F.col("jvm_clean")
-    eq = extract_turns(
-        transcripts.withColumn("jvm_clean", clean_text_expr(F.col("text"))),
-        with_sections=False,
-    ).agg(
-        F.avg((jvm_clean == F.col("text_clean")).cast("double")).alias("txt"),
-        F.avg(
-            (confidence_expr(jvm_clean) == F.col("confidence")).cast("double")
-        ).alias("conf"),
-    ).collect()[0]
+    key = ["conv_id", "turn_idx"]
+    got = {
+        (r["conv_id"], r["turn_idx"]): r
+        for r in extract_turns(transcripts, with_sections=False)
+        .select(*key, "text_clean", "confidence").collect()
+    }
+    want = {
+        (r["conv_id"], r["turn_idx"]):
+            reference_oracle.extract_turn(r["text"], with_sections=False)
+        for r in transcripts.select(*key, "text").collect()
+    }
+
+    def pass_rate(field):
+        same = sum(k in got and got[k][field] == w[field]
+                   for k, w in want.items())
+        return round(same / len(want), 6)
+
     equality = {
-        "text_pass_rate": round(eq["txt"], 6),
-        "confidence_pass_rate": round(eq["conf"], 6),
+        "text_pass_rate": pass_rate("text_clean"),
+        "confidence_pass_rate": pass_rate("confidence"),
         "n_turns": n_turns,
     }
 

@@ -1,11 +1,8 @@
-"""Main-content extraction: the JVM reference twin of rules.clean_text
-(tested equal per turn), plus the whitespace helpers other stages use.
+"""Whitespace helpers other stages use, in the regex dialect Java and
+DuckDB's RE2 share, plus the input-filename sanitizer.
 
-Production cleans text in ``operators/extract.py``'s Arrow UDF, which
-runs ``rules.clean_text`` itself.  ``clean_text_expr`` and
-``layout_hints_expr`` are the pure-JVM twins built from higher-order
-array functions; the contract queries (``clean_extract`` and others),
-``bench.py`` and the parity tests run them; no pipeline stage does.
+Cleaning itself runs ``rules.clean_text`` in ``operators/extract.py``'s
+Arrow UDF.
 
 Note on regex dialects: where rules.py uses Python `\\s` (unicode-aware
 on str patterns), the Spark expressions use the PY_WS class below —
@@ -34,37 +31,6 @@ def strip_ws(col: Column) -> Column:
     """Python str.strip() analog (full unicode whitespace, both ends)."""
     return F.regexp_replace(
         F.regexp_replace(col, f"^{PY_WS}+", ""), f"{PY_WS}+$", ""
-    )
-
-
-def clean_text_expr(text: Column) -> Column:
-    lines = F.split(text, "\n")
-    # engine_portable: the boilerplate spec's \s/\S are Python-unicode;
-    # a '\xa0===' ruler line must still be dropped under Java regex
-    kept = F.filter(
-        lines,
-        lambda l: ~l.rlike(rules.java_portable(rules.BOILERPLATE_COMBINED)),
-    )
-    # PY_WS, not \s: rules.clean_text trims with Python re (unicode-
-    # aware), so an NBSP-padded line end must strip here too
-    trimmed = F.transform(kept, lambda l: F.regexp_replace(l, f"{PY_WS}+$", ""))
-    joined = F.array_join(trimmed, "\n")
-    collapsed = F.regexp_replace(joined, r"\n{3,}", "\n\n")
-    stripped = F.regexp_replace(
-        F.regexp_replace(collapsed, r"^\n+", ""), r"\n+$", ""
-    )
-    return (
-        F.when(text.isNull(), F.lit(rules.EMPTY_EXTRACTION_MARKER))
-        .when(~stripped.rlike(PY_NONWS), F.lit(rules.EMPTY_EXTRACTION_MARKER))
-        .otherwise(stripped)
-    )
-
-
-def layout_hints_expr(text: Column) -> Column:
-    """struct<has_tables,has_handwriting> (ocr_service.py:473-488)."""
-    return F.struct(
-        (text.contains("|") | text.contains("      ")).alias("has_tables"),
-        text.contains("[UNCLEAR").alias("has_handwriting"),
     )
 
 

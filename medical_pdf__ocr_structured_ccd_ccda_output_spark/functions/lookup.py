@@ -161,8 +161,7 @@ def mark_unclear_expr(best_guess: Column, confidence: Column) -> Column:
 
 
 def variant_lookup(terms: DataFrame, term_col: str,
-                   dictionary: list[str] | None = None,
-                   confidence_col: str | None = None) -> DataFrame:
+                   dictionary: list[str] | None = None) -> DataFrame:
     """Attach TextVariant fields (variant_preservation.py:126-168):
     alternatives from the known-variants map + difflib close matches
     against `dictionary`, order-preserving case-insensitive dedup,
@@ -225,11 +224,6 @@ def variant_lookup(terms: DataFrame, term_col: str,
             F.lit("raw_preserved")
         ),
     )
-    if confidence_col:
-        out = out.withColumn(
-            "unclear_marked",
-            mark_unclear_expr(F.col(term_col), F.col(confidence_col)),
-        )
     return out
 
 
@@ -238,11 +232,7 @@ def variant_lookup(terms: DataFrame, term_col: str,
 # ---------------------------------------------------------------------------
 
 
-def variant_audit_report(variants: DataFrame,
-                         confidence_col: str | None = None) -> DataFrame:
-    """Counts by decision (+ avg confidence when present) — the rollup in
+def variant_audit_report(variants: DataFrame) -> DataFrame:
+    """Counts by decision — the rollup in
     variant_preservation.py:187-216."""
-    aggs = [F.count("*").alias("n_terms")]
-    if confidence_col:
-        aggs.append(F.avg(confidence_col).alias("avg_confidence"))
-    return variants.groupBy("decision").agg(*aggs)
+    return variants.groupBy("decision").agg(F.count("*").alias("n_terms"))

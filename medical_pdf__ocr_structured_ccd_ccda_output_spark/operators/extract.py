@@ -3,10 +3,10 @@
 Every per-turn field comes from one Arrow UDF: a single ArrowEvalPython
 node that runs ``reference_oracle.extract_turn`` — the rules.py
 extractor the pytest oracle runs — over each batch of ``text`` and
-returns one struct, from which the nine columns are selected.  The JVM
-expressions in ``functions/`` (``clean_text_expr``, ``confidence_expr``,
-``sections_expr``, ...) are references only: the contract queries,
-``bench.py`` and the parity tests run them; extraction does not.
+returns one struct, from which the nine columns are selected.
+``rules_udf`` is the one way the per-turn rules of ``rules.py`` run in
+Spark: extraction builds its UDF on it, and the extraction-rule
+contract queries call single rules through it.
 This is the narrow, embarrassingly-parallel stage — it runs before any
 shuffle, so Catalyst keeps it pipelined with the parquet scan and the
 `text` column is pruned as soon as the struct is derived.
@@ -15,8 +15,10 @@ shuffle, so Catalyst keeps it pipelined with the parquet scan and the
 from __future__ import annotations
 
 import datetime
+from collections.abc import Callable
+from functools import partial
 
-# module level, not inside _build_projection: PySpark resolves the UDF's
+# module level, not inside rules_udf: PySpark resolves the UDF's
 # ``pa.Array`` hints from the module's globals
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F, types as T
@@ -37,9 +39,8 @@ _SECTION = T.StructType([
     T.StructField("end_line", T.IntegerType()),
     T.StructField("text", T.StringType()),
 ])
-# the output columns in order, typed as the JVM references type them;
-# selected from a Python UDF's result, every column is nullable (the
-# references' layout_hints and review_reasons were not)
+# the output columns in order; selected from a Python UDF's result,
+# every column is nullable
 FIELDS = T.StructType([
     T.StructField("text_clean", T.StringType()),
     T.StructField("confidence", T.DoubleType()),
@@ -65,27 +66,35 @@ def _return_type(with_sections: bool) -> T.StructType:
     return T.StructType([f for f in FIELDS.fields if f.name != "sections"])
 
 
-def extract_batch(text: pa.Array, with_sections: bool) -> pa.Array:
-    """``reference_oracle.extract_turn`` over one Arrow batch, as a
-    struct array of the extraction fields."""
-    rows = []
-    for t in text.to_pylist():
-        row = reference_oracle.extract_turn(t, with_sections=with_sections)
-        if row["extracted_date"] is not None:
-            row["extracted_date"] = datetime.date.fromisoformat(
-                row["extracted_date"])
-        rows.append(row)
-    return pa.array(rows, type=to_arrow_type(_return_type(with_sections)))
+def rules_udf(fn: Callable[[str | None], object],
+              return_type: T.DataType) -> Callable[[Column], Column]:
+    """A scalar Arrow UDF that maps ``fn`` (a ``rules.py`` function of
+    one text) over each Arrow batch of a text column: one Python call
+    per row, one ``pa.array`` per batch.  Nulls reach ``fn`` as None."""
+    arrow_type = to_arrow_type(return_type)
+
+    def run(text: pa.Array) -> pa.Array:
+        return pa.array([fn(t) for t in text.to_pylist()], type=arrow_type)
+
+    return F.arrow_udf(run, return_type)
+
+
+def extract_row(text: str | None, with_sections: bool) -> dict:
+    """``reference_oracle.extract_turn`` with the date as a
+    ``datetime.date``."""
+    row = reference_oracle.extract_turn(text, with_sections=with_sections)
+    if row["extracted_date"] is not None:
+        row["extracted_date"] = datetime.date.fromisoformat(
+            row["extracted_date"])
+    return row
 
 
 def _build_projection(with_sections: bool) -> tuple[dict[str, Column], ...]:
     """The extraction columns as dependency-ordered groups: the UDF's
     struct, then its fields."""
-    def extract(text: pa.Array) -> pa.Array:
-        return extract_batch(text, with_sections)
-
     return_type = _return_type(with_sections)
-    udf = F.arrow_udf(extract, return_type)
+    udf = rules_udf(partial(extract_row, with_sections=with_sections),
+                    return_type)
     struct = F.col(_STRUCT)
     return (
         {_STRUCT: udf(F.col("text"))},
@@ -106,16 +115,12 @@ def extract_turns(transcripts: DataFrame,
     """Per-turn extraction: clean text, confidence, uncertainty, review
     flags, layout hints, boundary flag, extracted date, section spans.
 
-    One Arrow UDF (``extract_batch``) computes every field with
-    ``rules.py`` through ``reference_oracle.extract_turn``, the
-    implementation the pytest oracle runs; ``with_sections=False``
+    One Arrow UDF (``rules_udf`` over ``extract_row``) computes every
+    field with ``rules.py`` through ``reference_oracle.extract_turn``,
+    the implementation the pytest oracle runs; ``with_sections=False``
     skips the section spans.  Its ArrowEvalPython node evaluates the
     UDF once per row, not once per selected field, and it is the node
-    perfbench's tracer attributes to this stage.  The JVM twins in
-    ``functions/`` evaluate the same fields as about 4,000 expression
-    nodes whose higher-order lambdas run interpreted; on ``extract_hot``
-    they cost more than the whole Python extractor (BENCH.md §18), so
-    they are kept only as references.
+    perfbench's tracer attributes to this stage.
 
     The projection (the UDF and the field Columns) is built once per
     live SparkContext and ``with_sections`` value — see

@@ -31,12 +31,23 @@ Two implementations with identical output:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .. import rules
 from ..session import context_cached
 from .rollups import capped_ordered_concat, turn_order_mean
 
 TURN_ORDER = ["turn_idx", "ts"]
+
+
+def encounter_type_expr(text: Column) -> Column:
+    """Ordered first-match keyword scan -> EncounterType enum value
+    (rules.ENCOUNTER_TYPE_RULES; 'unknown' default per enums.py:16-22)."""
+    low = F.lower(text)
+    expr = F.lit("unknown")
+    for key, enc in reversed(rules.ENCOUNTER_TYPE_RULES):
+        expr = F.when(low.contains(key), F.lit(enc)).otherwise(expr)
+    return expr
 
 
 def _boundary_int() -> F.Column:
@@ -186,8 +197,6 @@ def visit_rollup(turns_with_visits: DataFrame,
         # EncounterType (enums.py:16-22): first non-unknown per-turn
         # keyword guess in turn order, 'unknown' otherwise — same
         # min-over-struct trick as visit_date (no extra shuffle)
-        from ..functions.sections import encounter_type_expr
-
         guess = encounter_type_expr(F.col("text_clean"))
         aggs.append(
             F.coalesce(

@@ -1,9 +1,12 @@
 """Shared deterministic rule spec — the single source of truth.
 
-Every constant and pure-Python function here defines the *semantics* that
-both (a) the pure-Python reference oracle (pytest golden producer) and
-(b) the Spark column-expression / pandas-UDF implementations must satisfy.
-The per-row invariant of the project is per-turn equality between the two.
+Every constant and pure-Python function here defines the *semantics* of
+both the pure-Python reference oracle (pytest golden producer) and the
+Spark pipeline.  The per-turn extraction rules run in Spark as written,
+through operators/extract.py's Arrow UDF; the other rules (entities,
+dedup, lookups) have Spark column-expression or pandas-UDF
+implementations, tested equal to the functions here.  The per-row
+invariant of the project is per-turn equality with the oracle.
 
 Rule provenance (reference repo, studied for behavior only — no code reuse):
   - confidence estimator      -> src/services/ocr_service.py:304-364
@@ -36,8 +39,8 @@ from difflib import SequenceMatcher
 
 # One pattern per boilerplate family.  A line is dropped when ANY pattern
 # *searches* true (unanchored semantics except explicit ^/$).  Patterns are
-# written in the Java/Python common regex subset so one string serves both
-# re.search and Spark's rlike.
+# written in the regex subset Python, Java and RE2 share, so one string
+# serves re.search and, through engine_portable(), the DuckDB oracles.
 BOILERPLATE_LINE_PATTERNS: list[str] = [
     r"^\s*-{2,}\s*Page\s+\d+\s*-{2,}\s*$",          # --- Page 7 ---
     r"^\s*={3,}\s*$",                                # ======= rules
@@ -107,8 +110,8 @@ EMPTY_EXTRACTION_MARKER = "[UNCLEAR: no extractable content]"
 def clean_text(text: str) -> str:
     """Deterministic main-content extraction for one turn payload.
 
-    Steps (mirrored exactly by the Spark column expression in
-    functions/cleaning.py):
+    Steps (the clean_extract contract query's DuckDB oracle repeats
+    them in SQL):
       1. split on '\\n'
       2. drop boilerplate lines
       3. strip trailing whitespace per line (keep leading indentation —
@@ -147,23 +150,23 @@ def round2(x: float) -> float:
     """Round to 2 decimals, HALF_EVEN on the shortest decimal repr.
 
     This matches Spark's bround (BigDecimal.valueOf(double) == shortest
-    round-trip string) so the JVM expression and this oracle agree
-    bit-for-bit.  It deviates from CPython round() only on knife-edge
-    doubles whose shortest repr is an exact half (e.g. 0.7*0.85 ->
-    repr '0.595' -> 0.60 here, 0.59 under CPython round which uses the
-    exact binary value 0.59499...).  Text extraction — the project's
-    per-row invariant — is unaffected.
+    round-trip string) and the DuckDB oracles' exact integer form, so
+    the engines agree bit-for-bit.  It deviates from CPython round()
+    only on knife-edge doubles whose shortest repr is an exact half
+    (e.g. 0.7*0.85 -> repr '0.595' -> 0.60 here, 0.59 under CPython
+    round which uses the exact binary value 0.59499...).  Text
+    extraction — the project's per-row invariant — is unaffected.
     """
     from decimal import ROUND_HALF_EVEN, Decimal
 
     return float(Decimal(repr(x)).quantize(Decimal("0.01"), ROUND_HALF_EVEN))
 
 
-def score_confidence(text: str) -> float:
-    """Confidence heuristic; must stay bit-identical to the Spark expr.
+def raw_confidence(text: str) -> float:
+    """Confidence heuristic before rounding.
 
-    Sequential float64 updates in this exact order; final round is
-    banker's (Python round == Spark bround).
+    Sequential float64 updates in this exact order: the DuckDB oracles
+    of the confidence contract queries repeat it step for step.
     """
     if not text or len(text) < 10:
         return 0.0
@@ -198,7 +201,12 @@ def score_confidence(text: str) -> float:
         c -= 0.05
 
     cap = 0.85 if "[UNCLEAR" not in text else 0.75
-    return round2(min(cap, max(0.15, c)))
+    return min(cap, max(0.15, c))
+
+
+def score_confidence(text: str) -> float:
+    """raw_confidence rounded HALF_EVEN to 2 decimals (round2)."""
+    return round2(raw_confidence(text))
 
 
 # ---------------------------------------------------------------------------

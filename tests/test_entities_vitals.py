@@ -307,7 +307,7 @@ def test_extract_visit_texts(turns):
 
 
 def test_encounter_type_inference(spark):
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.sections import (
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.sessionize import (
         encounter_type_expr,
     )
     texts = ["Discharge summary for patient", "seen in clinic today",

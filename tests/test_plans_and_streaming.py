@@ -62,26 +62,6 @@ def test_extraction_shuffle_budget(spark, tmp_path):
     assert shuffle_exchange_count(out) == 1
 
 
-def test_extractor_variants_agree(spark):
-    """The Arrow extractor equals the JVM clean_text_expr reference the
-    clean_extract contract query runs, row for row."""
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.cleaning import (
-        clean_text_expr,
-    )
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.confidence import (
-        confidence_expr,
-    )
-
-    df = fixtures.transcripts_spark_df(spark, 15, seed=3)
-    a = extract_turns(df, with_sections=False) \
-        .select("conv_id", "turn_idx", "text_clean", "confidence")
-    jvm_clean = clean_text_expr(F.col("text"))
-    b = df.select("conv_id", "turn_idx", jvm_clean.alias("text_clean"),
-                  confidence_expr(jvm_clean).alias("confidence"))
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-
 def test_streaming_extraction(spark, tmp_path):
     from medical_pdf__ocr_structured_ccd_ccda_output_spark.streaming.stream import (
         run_stream_to_parquet,
@@ -112,9 +92,6 @@ def test_stateful_sessionize_cross_batch(spark, tmp_path):
     the batch W2 running sum on the full data."""
     import time
 
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.dates import (
-        is_visit_boundary_expr,
-    )
     from medical_pdf__ocr_structured_ccd_ccda_output_spark.streaming.stream import (
         TRANSCRIPT_SCHEMA,
         stateful_sessionize,
@@ -141,9 +118,9 @@ def test_stateful_sessionize_cross_batch(spark, tmp_path):
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(in_dir))
-        .withColumn("is_boundary", is_visit_boundary_expr(F.col("text")))
-        .select("conv_id", "turn_idx", "is_boundary")
     )
+    stream = extract_turns(stream, with_sections=False) \
+        .select("conv_id", "turn_idx", "is_boundary")
     out = stateful_sessionize(stream)
     q = (
         out.writeStream.format("memory").queryName("sess_out")
@@ -159,9 +136,8 @@ def test_stateful_sessionize_cross_batch(spark, tmp_path):
         for r in spark.table("sess_out").collect()
     }
     # batch oracle over the full data
-    full = spark.createDataFrame(rows + rows2, TRANSCRIPT_SCHEMA).withColumn(
-        "is_boundary", is_visit_boundary_expr(F.col("text"))
-    )
+    full = extract_turns(spark.createDataFrame(rows + rows2, TRANSCRIPT_SCHEMA),
+                         with_sections=False)
     exp = {
         (r["conv_id"], r["turn_idx"]): r["visit_id"]
         for r in assign_visits(full).collect()
@@ -256,9 +232,6 @@ def test_stateful_sessionize_out_of_order(spark, tmp_path):
     """stateful_sessionize_ooo: micro-batches deliver turns SHUFFLED
     across batch boundaries; the reorder buffer must still reproduce
     the batch W2 numbering exactly (round-2 VERDICT item 7)."""
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.dates import (
-        is_visit_boundary_expr,
-    )
     from medical_pdf__ocr_structured_ccd_ccda_output_spark.streaming.stream import (
         TRANSCRIPT_SCHEMA,
         stateful_sessionize_ooo,
@@ -290,9 +263,9 @@ def test_stateful_sessionize_out_of_order(spark, tmp_path):
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(in_dir))
-        .withColumn("is_boundary", is_visit_boundary_expr(F.col("text")))
-        .select("conv_id", "turn_idx", "is_boundary")
     )
+    stream = extract_turns(stream, with_sections=False) \
+        .select("conv_id", "turn_idx", "is_boundary")
     q = (
         stateful_sessionize_ooo(stream).writeStream.format("memory")
         .queryName("ooo_out").outputMode("append")
@@ -307,9 +280,9 @@ def test_stateful_sessionize_out_of_order(spark, tmp_path):
         (r["conv_id"], r["turn_idx"]): r["visit_id"]
         for r in spark.table("ooo_out").collect()
     }
-    full = spark.createDataFrame(
+    full = extract_turns(spark.createDataFrame(
         [t for rows in batches for t in rows], TRANSCRIPT_SCHEMA
-    ).withColumn("is_boundary", is_visit_boundary_expr(F.col("text")))
+    ), with_sections=False)
     exp = {
         (r["conv_id"], r["turn_idx"]): r["visit_id"]
         for r in assign_visits(full).collect()

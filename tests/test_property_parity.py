@@ -1,8 +1,11 @@
-"""Property-based (hypothesis) parity: the JVM column-expression
-extractor must agree with the pure-Python rule spec (`rules.py`) on
-ADVERSARIAL generated text, not just the curated fixtures — the same
-dual-implementation invariant bench.py measures over the corpus
-(per-turn equality), pushed into the weird corners of the input space.
+"""Property-based (hypothesis) parity: the Spark operators must agree
+with the pure-Python rule spec (`rules.py`) on ADVERSARIAL generated
+text, not just the curated fixtures — the per-turn equality bench.py
+measures over the corpus, pushed into the weird corners of the input
+space.  extract_turns is checked row by row against
+reference_oracle.extract_turn; the column-expression operators
+(encounter type, entities, lookups, ...) against their rules.py
+functions.
 
 Each hypothesis example is a BATCH of strings run through one Spark
 job (per-example jobs would be pathologically slow), so shrinking
@@ -12,7 +15,7 @@ import string
 
 from hypothesis import HealthCheck, example, given, settings, strategies as st
 
-from medical_pdf__ocr_structured_ccd_ccda_output_spark import rules
+from medical_pdf__ocr_structured_ccd_ccda_output_spark import reference_oracle, rules
 
 # alphabet biased toward the rule grammar's trigger characters:
 # whitespace runs, page-banner/pipe/table chars, UNCLEAR markers,
@@ -35,6 +38,24 @@ _DOC = st.lists(st.one_of(_RAW, _FRAGMENTS), min_size=0, max_size=12).map(
 )
 
 
+def _extracted(spark, docs):
+    """extract_turns over docs, one row per doc in docs' order, each in
+    the oracle's plain-Python form (the date as an ISO string)."""
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.extract import (
+        extract_turns,
+    )
+
+    df = spark.createDataFrame(list(enumerate(docs)), "turn_idx int, text string")
+    rows = []
+    for r in extract_turns(df).orderBy("turn_idx").collect():
+        d = r.asDict(recursive=True)
+        del d["turn_idx"]
+        if d["extracted_date"] is not None:
+            d["extracted_date"] = d["extracted_date"].isoformat()
+        rows.append(d)
+    return rows
+
+
 @settings(max_examples=12, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
 @given(st.lists(_DOC, min_size=16, max_size=16))
@@ -55,34 +76,19 @@ _DOC = st.lists(st.one_of(_RAW, _FRAGMENTS), min_size=0, max_size=12).map(
     + [""] * 13,
 )
 def test_extractor_parity_on_generated_text(docs):
-    from pyspark.sql import functions as F
-
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.cleaning import (
-        clean_text_expr,
-    )
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.confidence import (
-        confidence_expr,
-    )
     from medical_pdf__ocr_structured_ccd_ccda_output_spark.session import (
         get_spark,
     )
 
     spark = get_spark("prop", shuffle_partitions=4)
-    df = spark.createDataFrame([(d,) for d in docs], "text string")
-    got = df.select(
-        clean_text_expr(F.col("text")).alias("clean"),
-        confidence_expr(clean_text_expr(F.col("text"))).alias("conf"),
-    ).collect()
-    for doc, row in zip(docs, got):
-        want_clean = rules.clean_text(doc)
-        assert row["clean"] == want_clean, repr(doc)
-        assert row["conf"] == rules.score_confidence(want_clean), repr(doc)
+    for doc, row in zip(docs, _extracted(spark, docs), strict=True):
+        assert row == reference_oracle.extract_turn(doc), repr(doc)
 
 
 # ---------------------------------------------------------------------------
 # Omnibus: date / boundary / layout / sections / uncertain tokens /
-# review flags+reasons / encounter type — every doc-level JVM expression
-# against its rules.py twin in ONE Spark job per example.
+# review flags+reasons through extract_turns, and the encounter type
+# column expression, against rules.py.
 # ---------------------------------------------------------------------------
 
 # line-shaped fragments biased toward every rule family's triggers:
@@ -129,59 +135,20 @@ _DOC_LINES = st.lists(st.one_of(_RAW, _LINES), min_size=0, max_size=10).map(
 def test_rule_surface_parity_on_generated_text(docs):
     from pyspark.sql import functions as F
 
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.cleaning import (
-        layout_hints_expr,
-    )
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.confidence import (
-        confidence_expr,
-    )
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.dates import (
-        extracted_date_expr,
-        is_visit_boundary_expr,
-    )
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.sections import (
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.sessionize import (
         encounter_type_expr,
-        sections_expr,
-    )
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.tokens import (
-        needs_review_expr,
-        review_reasons_expr,
-        uncertain_tokens_expr,
     )
     from medical_pdf__ocr_structured_ccd_ccda_output_spark.session import (
         get_spark,
     )
 
     spark = get_spark("prop", shuffle_partitions=4)
+    for doc, row in zip(docs, _extracted(spark, docs), strict=True):
+        assert row == reference_oracle.extract_turn(doc), repr(doc)
     df = spark.createDataFrame([(d,) for d in docs], "text string")
-    t = F.col("text")
-    conf = confidence_expr(t)
-    toks = uncertain_tokens_expr(t)
-    got = df.select(
-        F.date_format(extracted_date_expr(t), "yyyy-MM-dd").alias("date"),
-        is_visit_boundary_expr(t).alias("boundary"),
-        layout_hints_expr(t).alias("layout"),
-        sections_expr(t).alias("sections"),
-        toks.alias("tokens"),
-        needs_review_expr(conf, toks).alias("needs_review"),
-        review_reasons_expr(conf, toks, t).alias("review_reasons"),
-        encounter_type_expr(t).alias("enc"),
-    ).collect()
-    for doc, row in zip(docs, got):
-        d = row.asDict(recursive=True)
-        assert d["date"] == rules.extract_date(doc), repr(doc)
-        assert d["boundary"] == rules.is_visit_boundary(doc), repr(doc)
-        assert d["layout"] == rules.layout_hints(doc), repr(doc)
-        assert d["sections"] == rules.extract_sections(doc), repr(doc)
-        toks_py = rules.extract_uncertain_tokens(doc)
-        assert d["tokens"] == toks_py, repr(doc)
-        conf_py = rules.score_confidence(doc)
-        assert d["needs_review"] == rules.needs_review(conf_py, toks_py), \
-            repr(doc)
-        assert d["review_reasons"] == rules.review_reasons(
-            conf_py, toks_py, doc
-        ), repr(doc)
-        assert d["enc"] == rules.infer_encounter_type(doc), repr(doc)
+    got = df.select(encounter_type_expr(F.col("text")).alias("enc")).collect()
+    for doc, row in zip(docs, got, strict=True):
+        assert row["enc"] == rules.infer_encounter_type(doc), repr(doc)
 
 
 # ---------------------------------------------------------------------------
@@ -303,7 +270,7 @@ def test_scalar_expr_parity(tuples):
 
 
 # ---------------------------------------------------------------------------
-# Entity extraction end-to-end: sections_expr -> extract_vitals /
+# Entity extraction end-to-end: rules.extract_sections -> extract_vitals /
 # extract_allergies / extract_plan_items vs the Python composition
 # extract_sections + parse_vital_line / parse_allergy_line /
 # parse_plan_line over the same generated documents.
@@ -353,11 +320,6 @@ def _py_entities(doc):
           suppress_health_check=[HealthCheck.too_slow])
 @given(st.lists(_ENTITY_DOC, min_size=8, max_size=8))
 def test_entity_extraction_parity_on_generated_text(docs):
-    from pyspark.sql import functions as F
-
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.sections import (
-        sections_expr,
-    )
     from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.entities import (
         extract_allergies,
         extract_plan_items,
@@ -369,9 +331,11 @@ def test_entity_extraction_parity_on_generated_text(docs):
 
     spark = get_spark("prop", shuffle_partitions=4)
     turns = spark.createDataFrame(
-        [(f"c{i}", "visit_1", i, d) for i, d in enumerate(docs)],
-        "conv_id string, visit_id string, turn_idx int, text string",
-    ).withColumn("sections", sections_expr(F.col("text")))
+        [(f"c{i}", "visit_1", i, rules.extract_sections(d))
+         for i, d in enumerate(docs)],
+        "conv_id string, visit_id string, turn_idx int, sections array<"
+        "struct<section:string, start_line:int, end_line:int, text:string>>",
+    )
 
     vit = extract_vitals(turns).collect()
     alg = extract_allergies(turns).collect()

@@ -37,7 +37,7 @@ def rows_to_multiset(cols, rows):
     return Counter(tuple(norm_val(r[i]) for i in order) for r in rows)
 
 
-def driver_surface_issues(name, spark_pdf, duck_pdf):
+def pandas_surface_failures(spark_pdf, duck_pdf):
     """Replicate the two failure modes of the driver's pandas-level
     canonicalizer that fetchall()-based value compare cannot see
     (CORRECTNESS_r01 regressions):
@@ -67,9 +67,50 @@ def driver_surface_issues(name, spark_pdf, duck_pdf):
     return issues
 
 
-def main():
+def duckdb_views(sf_dir):
+    """A DuckDB connection with one view per test-data table at sf_dir."""
     import duckdb
 
+    con = duckdb.connect()
+    for t in TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(path):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
+
+
+def check_query(spark, con, fn, sf_dir, oracle):
+    """Run one contract query on Spark and its oracle SQL (None for a
+    rows-only query) on DuckDB: (Spark row count, failure or None)."""
+    try:
+        sdf = fn(spark, sf_dir)
+        s_cols = sdf.columns
+        s_rows = [[r[c] for c in s_cols] for r in sdf.collect()]
+    except Exception as e:
+        return None, f"SPARK ERROR: {e}"
+    if oracle is None:
+        return len(s_rows), None
+    try:
+        res = con.execute(oracle)
+        d_cols = [d[0] for d in res.description]
+        d_rows = res.fetchall()
+    except Exception as e:
+        return len(s_rows), f"DUCKDB ERROR: {e}"
+    if sorted(s_cols) != sorted(d_cols):
+        return len(s_rows), f"cols {sorted(s_cols)} vs {sorted(d_cols)}"
+    if len(s_rows) != len(d_rows):
+        return len(s_rows), f"rowcount {len(s_rows)} vs {len(d_rows)}"
+    ms = rows_to_multiset(s_cols, s_rows)
+    md = rows_to_multiset(d_cols, d_rows)
+    if ms != md:
+        diff_s = list((ms - md).items())[:3]
+        diff_d = list((md - ms).items())[:3]
+        return len(s_rows), f"values spark-only={diff_s} duck-only={diff_d}"
+    found = pandas_surface_failures(sdf.toPandas(), con.execute(oracle).fetchdf())
+    return len(s_rows), "; ".join(found) or None
+
+
+def main():
     import __spark_entry__ as entry_mod
     from medical_pdf__ocr_structured_ccd_ccda_output_spark.session import get_spark
 
@@ -77,60 +118,21 @@ def main():
     only = set(sys.argv[2:])
 
     spark = get_spark("oracle_check")
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-
+    con = duckdb_views(sf_dir)
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        try:
-            sdf = fn(spark, sf_dir)
-            s_cols = sdf.columns
-            s_rows = [[r[c] for c in s_cols] for r in sdf.collect()]
-        except Exception as e:
-            failures.append((name, f"SPARK ERROR: {e}"))
-            print(f"[FAIL] {name}: spark error {str(e)[:200]}")
-            continue
-        if name not in oracles:
-            print(f"[rows-only] {name}: {len(s_rows)} rows")
-            continue
-        try:
-            res = con.execute(oracles[name])
-            d_cols = [d[0] for d in res.description]
-            d_rows = res.fetchall()
-        except Exception as e:
-            failures.append((name, f"DUCKDB ERROR: {e}"))
-            print(f"[FAIL] {name}: duckdb error {str(e)[:200]}")
-            continue
-        ok = True
-        if sorted(s_cols) != sorted(d_cols):
-            failures.append((name, f"cols {sorted(s_cols)} vs {sorted(d_cols)}"))
-            ok = False
-        elif len(s_rows) != len(d_rows):
-            failures.append((name, f"rowcount {len(s_rows)} vs {len(d_rows)}"))
-            ok = False
+        n, failure = check_query(spark, con, fn, sf_dir, oracles.get(name))
+        if failure:
+            failures.append((name, failure))
+            print(f"[FAIL] {name}: {failure[:200]}")
+        elif name not in oracles:
+            print(f"[rows-only] {name}: {n} rows")
         else:
-            ms = rows_to_multiset(s_cols, s_rows)
-            md = rows_to_multiset(d_cols, d_rows)
-            if ms != md:
-                diff_s = list((ms - md).items())[:3]
-                diff_d = list((md - ms).items())[:3]
-                failures.append((name, f"values spark-only={diff_s} duck-only={diff_d}"))
-                ok = False
-            else:
-                issues = driver_surface_issues(
-                    name, sdf.toPandas(), con.execute(oracles[name]).fetchdf()
-                )
-                if issues:
-                    failures.append((name, "; ".join(issues)))
-                    ok = False
-        print(f"[{'OK  ' if ok else 'FAIL'}] {name}: {len(s_rows)} rows")
+            print(f"[OK  ] {name}: {n} rows")
     print()
     if failures:
         print(f"{len(failures)} FAILURES:")
