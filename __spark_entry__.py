@@ -2434,7 +2434,7 @@ SELECT doc_id,
 FROM documents
 """
 
-_STOPWORDS_SQL = "[" + ", ".join(f"'{s}'" for s in corpus.STOPWORDS) + "]"
+_STOPWORDS_SQL = "[" + ", ".join(f"'{s}'" for s in rules.STOPWORDS) + "]"
 
 _QUALITY_SQL = f"""
 WITH t AS (
@@ -3261,7 +3261,8 @@ words AS (
 
 
 def _shingle_cte(n: int, out: str = "shingles") -> str:
-    """Distinct word n-grams per doc (word_shingles semantics)."""
+    """Distinct word n-grams per doc (the SQL restatement of
+    rules.shingles)."""
     return f"""sh AS (
   SELECT doc_id,
     list_distinct(

@@ -1,5 +1,5 @@
 """Dictionary lookups, variant preservation, name parsing (SURVEY F3,
-F8-F11, A13).
+F8-F11).
 
 Reference semantics:
   * F8 variant lookup — reference/src/services/variant_preservation.py:126-168:
@@ -225,14 +225,3 @@ def variant_lookup(terms: DataFrame, term_col: str,
         ),
     )
     return out
-
-
-# ---------------------------------------------------------------------------
-# A13: variant audit report
-# ---------------------------------------------------------------------------
-
-
-def variant_audit_report(variants: DataFrame) -> DataFrame:
-    """Counts by decision — the rollup in
-    variant_preservation.py:187-216."""
-    return variants.groupBy("decision").agg(F.count("*").alias("n_terms"))

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-SUPPORTED_SCHEMA_VERSION = "2.0"
+from ..rules import SUPPORTED_SCHEMA_VERSION
 
 
 def visit_warnings_expr(visit_id: Column, confidence: Column,

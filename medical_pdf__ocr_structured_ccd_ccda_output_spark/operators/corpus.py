@@ -4,8 +4,10 @@
 These are the large-scale pipeline primitives beyond the reference's
 own operator set: deduplication (exact / minhash-LSH / simhash /
 n-gram-Jaccard), text quality scoring, language id, token counting and
-document fingerprinting.  Hot paths are JVM
-expressions or Arrow-batched pandas UDFs; no per-row Python anywhere.
+document fingerprinting.  Hot paths are JVM expressions; the word-text
+rules (shingles, n-gram counts, quality signals) are ``rules.py``
+functions run per Arrow batch through ``extract.rules_udf``, the one
+implementation the DuckDB oracles check.
 
 Scale notes per operator are in each docstring — the common theme:
 candidate generation via hash buckets (band join / min-shingle join)
@@ -14,8 +16,12 @@ so the pairwise work is O(candidates), never O(n²) on the corpus.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from functools import partial
+
+from pyspark.sql import DataFrame, Window, functions as F, types as T
+
+from .. import rules
+from .extract import rules_udf
 
 # ---------------------------------------------------------------------------
 # normalization + shingles
@@ -23,73 +29,23 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 def norm_text(col):
     """Null-safe lowercase + ASCII-whitespace collapse + space trim —
-    the corpus ops' shared normalization (NULL text == '' so every doc
-    emits a row from every operator, matching the Arrow shingler's
-    `(t or '')`)."""
+    the JVM form of ``rules.norm_words`` (joined by spaces) for the
+    JVM-only operators (NULL text == '' so every doc emits a row from
+    every operator)."""
     return F.trim(
         F.regexp_replace(F.lower(F.coalesce(col, F.lit(""))), r"\s+", " ")
     )
 
 
-def word_shingles_from_words(words, n: int = 3):
-    """word_shingles over an already-computed words-array column.  Use
-    this form with ``words`` STAGED as a real column whenever the text
-    feeding the split is itself an expensive expression (a redaction
-    chain, a normalization pipeline): the transform lambda re-evaluates
-    any non-attribute subtree once per gram (the fingerprints()
-    evaluation trap), turning an O(n) shingle pass into O(n x cost) —
-    an attribute reference is free to re-evaluate."""
-    k = F.size(words) - (n - 1)
-    grams = F.when(
-        k > 0,
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-            lambda i: F.array_join(F.slice(words, i, n), " "),
-        ),
-    ).otherwise(F.array(F.array_join(words, " ")))
-    return F.array_distinct(grams)
+def shingles_udf(n: int):
+    """text -> array<string>: ``rules.shingles(text, n)``."""
+    return rules_udf(partial(rules.shingles, n=n), T.ArrayType(T.StringType()))
 
 
-def word_shingles(col, n: int = 3):
-    """Distinct word n-gram strings (order-normalized via array_sort for
-    set semantics downstream).  JVM expression — exact engine-portable
-    semantics for the DuckDB-oracled ngram_jaccard; for bulk sketching
-    prefer word_shingles_udf (the transform/sequence/slice HOF chain is
-    evaluated interpreted: measured 4.5 s vs 0.4 s at sf0.1).  If
-    ``col`` is anything but a cheap column reference, stage the split
-    and call word_shingles_from_words instead (see its docstring)."""
-    return word_shingles_from_words(F.split(norm_text(col), " "), n)
-
-
-def word_shingles_udf(n: int = 3):
-    """Arrow-batched shingler: same normalization + n-gram semantics as
-    word_shingles, built with Python string ops (no interpreted
-    expression tree).  Returns pandas_udf text -> array<string> of
-    distinct shingles (first-occurrence order, matching array_distinct)."""
-    import re as _re
-
-    from pyspark.sql.functions import pandas_udf
-
-    # Java-\s ASCII class + space-only strip: mirrors norm_text's
-    # F.regexp_replace(\s)+F.trim EXACTLY.  Python re \s / str.strip()
-    # are unicode-aware and would diverge from the expression tier (and
-    # the [\s\x0b] DuckDB oracle) on NBSP/NEL/Z* whitespace.
-    ws = _re.compile("[ \t\n\x0b\f\r]+")
-
-    @pandas_udf("array<string>")
-    def _shingles(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            words = ws.sub(" ", (t or "").lower()).strip(" ").split(" ")
-            if len(words) - (n - 1) > 0:
-                grams = [" ".join(words[i:i + n])
-                         for i in range(len(words) - n + 1)]
-            else:
-                grams = [" ".join(words)]
-            out.append(list(dict.fromkeys(grams)))
-        return pd.Series(out)
-
-    return _shingles
+def gram_counts_udf(n: int):
+    """text -> map<string,long>: ``rules.gram_counts(text, n)``."""
+    return rules_udf(partial(rules.gram_counts, n=n),
+                     T.MapType(T.StringType(), T.LongType()))
 
 
 # ---------------------------------------------------------------------------
@@ -135,10 +91,9 @@ def minhash_signatures(documents: DataFrame, num_hashes: int = 32,
     component, re-shingling the text ~256× per row: 231 s.)  The
     groupBy shuffles (doc_id, 32 longs) AFTER map-side partial min —
     at 100 TB the shuffle volume is one row per (doc × task), key
-    distribution uniform on doc_id, no skew.  Shingles come from the
-    Arrow-batched shingler (same semantics as word_shingles; the JVM
-    HOF form is interpreted and ~10x slower)."""
-    sh = word_shingles_udf(shingle_n)(F.col("text"))
+    distribution uniform on doc_id, no skew.  Shingles are
+    ``rules.shingles`` run per Arrow batch (``shingles_udf``)."""
+    sh = shingles_udf(shingle_n)(F.col("text"))
     exploded = documents.select("doc_id", F.explode(sh).alias("shingle"))
     if hash_fn == "md5":
         # Lexicographic min over hex digests — engine-portable (DuckDB
@@ -271,19 +226,14 @@ def lsh_pairs_from_signatures(sigs: DataFrame, num_hashes: int = 32,
     * ``"local"`` (default) — lazy ``localCheckpoint``; right for
       derived plans (in-process pipelines, the incremental path's
       batch signatures) where recomputation is the expensive scan.
-    * ``"reliable"`` — lazy reliable ``checkpoint`` (requires
-      ``spark.sparkContext.setCheckpointDir``); survives executor
-      loss at the cost of a checkpoint-dir write.
     * ``"none"`` — no checkpoint; right when ``sigs`` is already a
       cheap re-readable scan (a parquet stage table, as in
       ``corpus_job.py`` stage 2): the three consumers each rescan,
       and fault recovery recomputes from storage as usual."""
     if cache == "local":
         sigs = sigs.localCheckpoint(eager=False)
-    elif cache == "reliable":
-        sigs = sigs.checkpoint(eager=False)
     elif cache != "none":
-        raise ValueError(f"cache must be local|reliable|none, got {cache!r}")
+        raise ValueError(f"cache must be local|none, got {cache!r}")
     cand = _banded_candidates(sigs, num_hashes, bands, hash_fn)
     est = est_jaccard_expr(F.col("sig_a"), F.col("sig_b"), num_hashes)
     sa = sigs.select(F.col("doc_id").alias("doc_a"),
@@ -438,14 +388,15 @@ def ngram_jaccard_pairs(documents: DataFrame, shingle_n: int = 3,
         / F.size(F.array_union("a.shingles", "b.shingles"))
     )
     out_jac = F.round(jac, round_to) if round_to is not None else jac
+    if candidate not in ("banded", "min_shingle"):
+        raise ValueError(f"unknown candidate tier: {candidate}")
+    # rules.shingles per Arrow batch; the self-join evaluates its input
+    # plan on both sides, so the shingler's cost counts twice
+    sh = documents.select(
+        "doc_id",
+        F.array_sort(shingles_udf(shingle_n)(F.col("text"))).alias("shingles"),
+    )
     if candidate == "banded":
-        # Arrow shingler on the production tier (the interpreted JVM HOF
-        # chain is ~10x slower; semantics identical — tested equal)
-        sh = documents.select(
-            "doc_id",
-            F.array_sort(word_shingles_udf(shingle_n)(F.col("text")))
-            .alias("shingles"),
-        )
         sigs = minhash_signatures(documents, num_hashes, shingle_n, hash_fn)
         cand = _banded_candidates(sigs, num_hashes, bands, hash_fn)
         pairs = (
@@ -456,20 +407,7 @@ def ngram_jaccard_pairs(documents: DataFrame, shingle_n: int = 3,
             pairs.select("doc_a", "doc_b", out_jac.alias("jaccard"))
             .filter(F.col("jaccard") >= threshold)
         )
-    if candidate != "min_shingle":
-        raise ValueError(f"unknown candidate tier: {candidate}")
-    # Arrow shingler here too (pytest-pinned byte-equal to the JVM
-    # word_shingles, same ASCII-\s normalization the DuckDB oracle
-    # mirrors): the interpreted JVM HOF chain cost ~3.4 s per join
-    # side at sf0.1 even fully staged, and the self-join evaluates its
-    # input plan on BOTH sides — 18 s for the query where the Arrow
-    # form measures ~1 s.  The md5 min-shingle key stays a JVM
-    # expression over the materialized array.
-    sh = documents.select(
-        "doc_id",
-        F.array_sort(word_shingles_udf(shingle_n)(F.col("text")))
-        .alias("shingles"),
-    )
+    # the md5 min-shingle key is a JVM expression over the shingle array
     keyed = sh.select(
         "doc_id", "shingles",
         F.array_min(F.transform(F.col("shingles"), lambda s: F.md5(s)))
@@ -495,128 +433,38 @@ def ngram_jaccard_pairs(documents: DataFrame, shingle_n: int = 3,
 # 5. text quality scoring
 # ---------------------------------------------------------------------------
 
-STOPWORDS = [
-    "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
-    "for", "on", "with", "as", "by", "at", "this", "that",
-]
+# the fields of rules.quality_signals, in order
+SIGNALS = T.StructType([
+    T.StructField("n_chars", T.IntegerType()),
+    T.StructField("n_words", T.IntegerType()),
+    T.StructField("n_tokens", T.LongType()),
+    T.StructField("stopword_ratio", T.DoubleType()),
+    T.StructField("punct_ratio", T.DoubleType()),
+    T.StructField("mean_word_len", T.DoubleType()),
+    T.StructField("quality_score", T.DoubleType()),
+])
 
 
-def quality_exprs(text) -> dict:
-    """Named quality expressions over an arbitrary text column —
-    shared by quality_scores and curate_corpus so the composed
-    pipeline's score is definitionally the standalone operator's
-    (pinned by test_curation_matches_standalone_ops).  All values are
-    int/int divisions in a fixed op order — bit-identical across
-    engines unrounded."""
-    words = F.split(norm_text(text), " ")
-    n_words = F.size(words)
-    n_chars = F.length(text)
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    n_stop = F.size(F.filter(words, lambda w: F.array_contains(stop_arr, w)))
-    n_punct = n_chars - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
-    mean_wlen = F.when(
-        n_words > 0,
-        F.aggregate(words, F.lit(0), lambda a, w: a + F.length(w)).cast("double") / n_words,
-    ).otherwise(F.lit(0.0))
-    stop_ratio = F.when(n_words > 0, n_stop.cast("double") / n_words).otherwise(0.0)
-    punct_ratio = F.when(n_chars > 0, n_punct.cast("double") / n_chars).otherwise(0.0)
-    score = (
-        F.least(F.lit(1.0), n_words.cast("double") / 100)
-        * F.when((mean_wlen >= 3) & (mean_wlen <= 10), 1.0).otherwise(0.5)
-        * F.when(punct_ratio < 0.2, 1.0).otherwise(0.5)
-        * F.when(stop_ratio > 0.05, 1.0).otherwise(0.8)
-    )
-    return {
-        "n_chars": n_chars,
-        "n_words": n_words,
-        "stopword_ratio": stop_ratio,
-        "punct_ratio": punct_ratio,
-        "mean_word_len": mean_wlen,
-        "quality_score": score,
-    }
-
-
-def signal_scores_udf():
-    """Arrow-batched curation signals: the SAME values as
-    ``ws_token_expr`` + ``quality_exprs``'s quality_score over the same
-    text, built with Python string ops (pytest-pinned equal,
-    tests/test_curation.py).
-
-    Exists because the two JVM expression families CONTEND when
-    evaluated in one interpreted projection at high thread counts:
-    measured at local[16] on the ×64 probe corpus, quality_score alone
-    takes 1.95 s and ws_tokens alone 0.87 s, but the combined
-    projection takes 10.7 s — and burns 3.5× the CPU cycles of the
-    same work at local[4] (which shows NO blowup: 12.9 s ≈ the sum of
-    its parts).  The contention is intra-JVM: the identical combined
-    projection on the same 16 cores as 4 separate executor JVMs
-    (local-cluster[4,4]) runs in 5.4 s.  Regex-only combinations
-    (redact+digest, 2.6 s at 16) are immune — the shared bottleneck
-    is the interpreted higher-order-function machinery.  Per-process
-    Python workers sidestep it the way a real cluster's 4-8-core
-    executors do, and the vectorized string ops are faster besides
-    (the word_shingles_udf precedent).  BENCH.md round-5 §11 carries
-    the measurements.
-
-    Returns pandas_udf: text -> struct<n_tokens:long,
-    quality_score:double>.
-    """
-    import re as _re
-
-    from pyspark.sql.functions import pandas_udf
-
-    # Java-\s ASCII class + space-only strip mirrors norm_text exactly
-    # (the word_shingles_udf convention); Java [^\w\s] == Python
-    # [^\w\s] under re.ASCII (both \w=[A-Za-z0-9_], \s=[ \t\n\x0b\f\r])
-    ws = _re.compile("[ \t\n\x0b\f\r]+")
-    punct = _re.compile(r"[^\w\s]", _re.ASCII)
-    stopset = frozenset(STOPWORDS)
-
-    @pandas_udf("struct<n_tokens: long, quality_score: double>")
-    def _scores(texts: pd.Series) -> pd.DataFrame:
-        toks, scores = [], []
-        for t in texts:
-            t = t or ""
-            # ws_token_expr is DEFINED as len(text.split()) semantics
-            toks.append(len(t.split()))
-            words = ws.sub(" ", t.lower()).strip(" ").split(" ")
-            n_words = len(words)           # norm '' -> [''] -> 1, as F.split
-            n_chars = len(t)
-            n_stop = sum(1 for w in words if w in stopset)
-            n_punct = n_chars - len(punct.sub("", t))
-            mean_wlen = (sum(len(w) for w in words) / n_words
-                         if n_words > 0 else 0.0)
-            stop_ratio = n_stop / n_words if n_words > 0 else 0.0
-            punct_ratio = n_punct / n_chars if n_chars > 0 else 0.0
-            scores.append(
-                min(1.0, n_words / 100)
-                * (1.0 if 3 <= mean_wlen <= 10 else 0.5)
-                * (1.0 if punct_ratio < 0.2 else 0.5)
-                * (1.0 if stop_ratio > 0.05 else 0.8)
-            )
-        return pd.DataFrame({"n_tokens": toks, "quality_score": scores})
-
-    return _scores
+def signals_udf():
+    """text -> struct SIGNALS: ``rules.quality_signals(text)``."""
+    return rules_udf(rules.quality_signals, SIGNALS)
 
 
 def quality_scores(documents: DataFrame, round_to: int | None = 6) -> DataFrame:
     """Length / punctuation / stopword / word-length heuristics plus a
-    composite [0,1] score.  Pure projections — fully scan-pipelined.
-    round_to=None emits raw doubles (bit-identical across engines since
-    every ratio is an int/int division in a fixed op order)."""
-    e = quality_exprs(F.col("text"))
-
-    def _r(c):
-        return F.round(c, round_to) if round_to is not None else c
+    composite [0,1] score (``rules.quality_signals``).  round_to=None
+    emits raw doubles (bit-identical across engines since every ratio
+    is an int/int division in a fixed op order)."""
+    def _r(f):
+        c = F.col(f"_sc.{f}")
+        return (F.round(c, round_to) if round_to is not None else c).alias(f)
 
     return documents.select(
-        "doc_id",
-        e["n_chars"].alias("n_chars"),
-        e["n_words"].alias("n_words"),
-        _r(e["stopword_ratio"]).alias("stopword_ratio"),
-        _r(e["punct_ratio"]).alias("punct_ratio"),
-        _r(e["mean_word_len"]).alias("mean_word_len"),
-        _r(e["quality_score"]).alias("quality_score"),
+        "doc_id", signals_udf()(F.col("text")).alias("_sc")
+    ).select(
+        "doc_id", "_sc.n_chars", "_sc.n_words",
+        *[_r(f) for f in ("stopword_ratio", "punct_ratio", "mean_word_len",
+                          "quality_score")],
     )
 
 
@@ -664,34 +512,16 @@ def language_id(documents: DataFrame) -> DataFrame:
 TOKEN_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s\x0b]"
 
 
-def ws_token_expr(text):
-    """Whitespace token count with Python len(text.split()) semantics
-    over an arbitrary text column — shared by token_counts and
-    curate_corpus.
-
-    The strip must cover the FULL Python whitespace set before the
-    split (round-3 review fix): F.trim strips only spaces, so
-    'a\\n'.split-ish counting via trim+split yielded a phantom empty
-    token for any text with leading/trailing \\n or \\t — i.e. an
-    off-by-one on most real documents."""
-    from ..functions.cleaning import PY_WS, strip_ws
-
-    t = F.coalesce(text, F.lit(""))
-    stripped = strip_ws(t)
-    return F.when(stripped == "", F.lit(0)).otherwise(
-        F.size(F.split(stripped, f"{PY_WS}+"))
-    )
-
-
 def token_counts(documents: DataFrame) -> DataFrame:
-    """Whitespace tokens (Python len(text.split()) semantics) + BPE-ish
-    regex tokens (letters / digits / single punctuation), both as plain
-    projections."""
+    """Whitespace tokens (``rules.ws_tokens``, Python len(text.split())
+    semantics) + BPE-ish regex tokens (letters / digits / single
+    punctuation, a JVM projection)."""
     text = F.coalesce(F.col("text"), F.lit(""))
     bpe = F.size(F.regexp_extract_all(text, F.lit(TOKEN_REGEX), 0))
     return documents.select(
         "doc_id",
-        ws_token_expr(F.col("text")).cast("int").alias("ws_tokens"),
+        rules_udf(rules.ws_tokens, T.IntegerType())(F.col("text"))
+        .alias("ws_tokens"),
         bpe.cast("int").alias("bpe_tokens"),
     )
 
@@ -955,32 +785,19 @@ def decontaminate(documents: DataFrame, eval_docs: DataFrame,
       length.
     * the final left join marks non-hit documents; AQE converts it to
       a broadcast join at runtime when the hit table is small (the
-      normal case).  Shingling reuses the engine-portable
-      word_shingles (distinct grams per doc — multiplicity is
-      irrelevant to a contamination flag).
+      normal case).  Both sides shingle with ``rules.shingles``
+      (``shingles_udf``; distinct grams per doc — multiplicity is
+      irrelevant to a contamination flag).  The Python UDF reads its
+      input column once per row, so an expensive text expression
+      (curate_corpus' redaction chain) is evaluated once, not per gram.
     """
-    # words staged as a real column on both sides: the shingle lambda
-    # re-evaluates non-attribute subtrees per gram, so feeding the
-    # split inline turns an expensive text expression (e.g. curate's
-    # redaction chain) into O(grams x chain) per doc — the
-    # fingerprints() evaluation trap (measured on curate_corpus:
-    # 5.3 s -> 1.5 s at sf0.1 from this staging alone)
+    sh = shingles_udf(shingle_n)
     doc_sh = documents.select(
-        "doc_id", F.split(norm_text(F.col(text)), " ").alias("_words")
-    ).select(
-        "doc_id",
-        F.explode_outer(
-            word_shingles_from_words(F.col("_words"), shingle_n)
-        ).alias("gram"),
+        "doc_id", F.explode_outer(sh(F.col(text))).alias("gram"),
     ).select("doc_id", F.md5("gram").alias("g"))
     ev_sh = eval_docs.select(
         F.col(eval_id).alias("eval_id"),
-        F.split(norm_text(F.col(text)), " ").alias("_words"),
-    ).select(
-        "eval_id",
-        F.explode_outer(
-            word_shingles_from_words(F.col("_words"), shingle_n)
-        ).alias("gram"),
+        F.explode_outer(sh(F.col(text))).alias("gram"),
     ).select("eval_id", F.md5("gram").alias("g")).dropDuplicates(
         ["eval_id", "g"]
     )
@@ -1163,38 +980,6 @@ def redact_exprs(text):
 # 11. corpus-wide heavy hitters (frequent n-grams)
 # ---------------------------------------------------------------------------
 
-def word_gram_counts_udf(n: int):
-    """Arrow-batched per-document word n-gram COUNTER: text ->
-    map<ngram, count> with multiplicity (the counting twin of
-    word_shingles_udf's distinct-set emitter).  Counting inside the
-    batch means downstream explodes carry one pre-reduced row per
-    (doc, gram) instead of one per occurrence.  Normalization mirrors
-    norm_text exactly (Java-\\s ASCII class + space-only strip), so
-    the DuckDB '[\\s\\x0b]+' oracles and the expression tier agree on
-    NBSP/NEL/Z* whitespace.  Docs shorter than n words emit an empty
-    map; for n=1 an empty/null doc emits {'': 1} — callers filter the
-    empty gram."""
-    import re as _re
-
-    from pyspark.sql.functions import pandas_udf
-
-    ws = _re.compile("[ \t\n\x0b\f\r]+")
-
-    @pandas_udf("map<string,long>")
-    def _gram_counts(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            words = ws.sub(" ", (t or "").lower()).strip(" ").split(" ")
-            counts: dict = {}
-            for i in range(len(words) - n + 1):
-                g = " ".join(words[i:i + n])
-                counts[g] = counts.get(g, 0) + 1
-            out.append(counts)
-        return pd.Series(out)
-
-    return _gram_counts
-
-
 def top_ngrams(documents: DataFrame, n: int = 3, k: int = 100,
                min_docs: int = 2, text: str = "text") -> DataFrame:
     """Corpus-wide frequent word n-grams: the k most common n-grams
@@ -1205,9 +990,9 @@ def top_ngrams(documents: DataFrame, n: int = 3, k: int = 100,
     (ocr_service.py:366-420 counts KNOWN handwriting/abbreviation
     markers) to discovering the corpus's own repeated phrases.
 
-    Normalization and n-gram construction share word_shingles' exact
-    semantics (lower + ASCII-whitespace collapse, space-joined word
-    windows); docs shorter than n words contribute nothing.  Rows with
+    Per-document counts are ``rules.gram_counts`` (the normalization
+    and word windows of ``rules.shingles``); docs shorter than n words
+    contribute nothing.  Rows with
     doc_freq < min_docs are dropped (a phrase repeated only inside one
     document is repetition_stats' signal, not a corpus-wide one).
 
@@ -1221,13 +1006,11 @@ def top_ngrams(documents: DataFrame, n: int = 3, k: int = 100,
     one partial row for "of the and" regardless of its local count.
     The top-k is orderBy+limit, which Spark executes as
     TakeOrderedAndProject: a per-partition k-heap merged on the
-    driver, never a global sort.  The gram emitter is Arrow-batched
-    for the same reason word_shingles_udf exists (the interpreted
-    transform/sequence/slice HOF chain is ~10x slower at width).
+    driver, never a global sort.
     """
     return (
         documents
-        .select(F.explode(word_gram_counts_udf(n)(F.col(text)))
+        .select(F.explode(gram_counts_udf(n)(F.col(text)))
                 .alias("ngram", "cnt"))
         .groupBy("ngram")
         .agg(
@@ -1264,7 +1047,7 @@ def salient_terms(documents: DataFrame, k: int = 5,
     terms are unique per document).
 
     100 TB notes: three bounded shuffles. (1) Per-doc term counts come
-    pre-reduced out of the Arrow batch (word_gram_counts_udf(1)) — no
+    pre-reduced out of the Arrow batch (``gram_counts_udf(1)``) — no
     per-occurrence explode.  (2) df = groupBy(term): Zipf-hot keys,
     but each doc contributes at most ONE row per term and map-side
     partial counts collapse those to ~one row per distinct term per
@@ -1280,7 +1063,7 @@ def salient_terms(documents: DataFrame, k: int = 5,
     tf = (
         documents
         .select(F.col("doc_id"),
-                F.explode(word_gram_counts_udf(1)(F.col(text)))
+                F.explode(gram_counts_udf(1)(F.col(text)))
                 .alias("term", "tf"))
         .filter(F.col("term") != "")
     )
@@ -1350,8 +1133,7 @@ def containment_pairs(documents: DataFrame, k: int = 5, window: int = 4,
     scan and fault recovery matters; ``"local"`` lazily
     localCheckpoints the exploded table so winnowing computes at most
     once — right for expensive derived input plans (lineage is
-    truncated: an executor loss fails the job instead of recomputing);
-    ``"reliable"`` checkpoints to the configured checkpoint dir.
+    truncated: an executor loss fails the job instead of recomputing).
     """
     fp = fingerprints(documents, k=k, window=window, hash_fn=hash_fn)
     # explode_outer, NOT explode: InferFiltersFromGenerate adds a
@@ -1368,10 +1150,8 @@ def containment_pairs(documents: DataFrame, k: int = 5, window: int = 4,
     )
     if cache == "local":
         ex = ex.localCheckpoint(eager=False)
-    elif cache == "reliable":
-        ex = ex.checkpoint(eager=False)
     elif cache != "none":
-        raise ValueError(f"cache must be local|reliable|none, got {cache!r}")
+        raise ValueError(f"cache must be local|none, got {cache!r}")
     if max_df is not None:
         keep = (
             ex.groupBy("fp").agg(F.count(F.lit(1)).alias("_df"))
@@ -1800,9 +1580,10 @@ def curate_corpus(documents: DataFrame, eval_docs: DataFrame | None = None,
     100 TB notes:
 
     * redaction, token/quality scoring, digest, and split assignment
-      are ONE scan-pipelined projection — zero Python, zero shuffle —
-      and the TEXT never leaves it: every downstream exchange carries
-      only the narrow signal row (doc_id, key, flags, counts, digest).
+      are ONE scan-pipelined stage — JVM expressions around one Arrow
+      UDF (``rules.quality_signals``), zero shuffle — and the TEXT
+      never leaves it: every downstream exchange carries only the
+      narrow signal row (doc_id, key, flags, counts, digest).
     * the canonical-id table is one groupBy on the uniform md5 digest
       (map-side partials) joined back on the digest — the exact-dedup
       shape, on 32-char keys, never on text.
@@ -1813,13 +1594,9 @@ def curate_corpus(documents: DataFrame, eval_docs: DataFrame | None = None,
       its hit table — small by construction — joins back to the
       signal rows on uniform doc_id, AQE-broadcast in the normal case.
     * reuses redact_exprs / deterministic ``hash_split`` /
-      ``decontaminate`` verbatim; the token + quality signals come
-      from ONE Arrow batch (``signal_scores_udf``), pytest-pinned
-      value-identical to the standalone quality_exprs / ws_token_expr
-      tier (test_curation_matches_standalone_ops + the hypothesis
-      parity fuzz) — adopted after measuring that the two JVM
-      expression families contend intra-JVM when combined in one
-      interpreted projection (see signal_scores_udf and BENCH.md §11).
+      ``decontaminate`` verbatim; the token + quality signals are the
+      ``rules.quality_signals`` that ``quality_scores`` and
+      ``token_counts`` run.
     """
     red, _, has_pii = redact_exprs(F.col(text))
     base = documents.select(
@@ -1828,14 +1605,9 @@ def curate_corpus(documents: DataFrame, eval_docs: DataFrame | None = None,
         red.alias("_red"),
         has_pii.alias("has_pii"),
     )
-    # token + quality signals via the Arrow UDF (pytest-pinned equal to
-    # ws_token_expr/quality_exprs): evaluating both JVM families in one
-    # interpreted projection contends intra-JVM at high thread counts —
-    # see signal_scores_udf's docstring for the measurements.  The
-    # regex-only redact + digest expressions stay JVM (measured immune).
     sig = base.select(
         "doc_id", split_key, "has_pii",
-        signal_scores_udf()(F.col("_red")).alias("_sc"),
+        signals_udf()(F.col("_red")).alias("_sc"),
         # keyed on the exact text the signals score: a norm_text key
         # would group whitespace variants whose punct_ratio differs, so
         # a failing canonical could drop a passing twin as 'duplicate'

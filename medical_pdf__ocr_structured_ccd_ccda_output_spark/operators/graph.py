@@ -30,12 +30,10 @@ Scale notes (the whole point of this operator):
   long-chain case (e.g. shingled boilerplate families).
 * ``localCheckpoint(eager=True)`` truncates lineage every iteration —
   without it the plan doubles per iteration and Catalyst analysis time
-  explodes (the classic iterative-Spark failure mode).  On a real
-  cluster with unreliable executors, pass ``use_reliable_checkpoint``
-  and set ``spark.sparkContext.setCheckpointDir`` to an HDFS/S3 path.
+  explodes (the classic iterative-Spark failure mode).
 * **Superseded checkpoints are unpersisted as the loop advances** —
   iteration k's label table is dead the moment iteration k+1's is
-  materialized, but a (local)checkpoint's blocks otherwise live until
+  materialized, but a local checkpoint's blocks otherwise live until
   the driver GCs the RDD reference (ContextCleaner), which on a long
   job means every iteration's full label table accumulates in the
   block store.  Measured here: ×320 probe reps in one JVM grew
@@ -69,15 +67,13 @@ MIN_ROWS_PER_PARTITION = 50_000
 
 
 class _CkptTracker:
-    """Frees superseded (local)checkpoints by block-store RDD id.
+    """Frees superseded local checkpoints by block-store RDD id.
 
     ``DataFrame.unpersist()`` cannot free checkpoint blocks — they are
     registered on the plan's internal RDD, not in the catalog cache —
     so the tracker diffs ``SparkContext.getPersistentRDDs`` around each
     checkpoint call to learn which block-store entries belong to it,
     and drops exactly those once the caller declares the table dead.
-    Reliable ``checkpoint()`` stores to the checkpoint dir rather than
-    the block store; ``drop`` is then simply a no-op for its ids.
 
     ASSUMES A SINGLE-THREADED DRIVER between ``ckpt``/``mark`` calls:
     the before/after id diff attributes every RDD persisted in that
@@ -92,9 +88,8 @@ class _CkptTracker:
     DataFrame's own RDD graph.
     """
 
-    def __init__(self, spark, use_reliable: bool):
+    def __init__(self, spark):
         self._jsc = spark.sparkContext._jsc
-        self._use_reliable = use_reliable
 
     def _ids(self) -> set[int]:
         return {
@@ -104,11 +99,7 @@ class _CkptTracker:
 
     def ckpt(self, df: DataFrame) -> tuple[DataFrame, set[int]]:
         before = self._ids()
-        out = (
-            df.checkpoint(eager=True)
-            if self._use_reliable
-            else df.localCheckpoint(eager=True)
-        )
+        out = df.localCheckpoint(eager=True)
         return out, self._ids() - before
 
     def mark(self, df: DataFrame) -> tuple[DataFrame, set[int]]:
@@ -120,11 +111,7 @@ class _CkptTracker:
         registered persistent at mark time, so the id diff is valid
         immediately."""
         before = self._ids()
-        out = (
-            df.checkpoint(eager=False)
-            if self._use_reliable
-            else df.localCheckpoint(eager=False)
-        )
+        out = df.localCheckpoint(eager=False)
         return out, self._ids() - before
 
     def drop(self, ids: set[int]) -> None:
@@ -142,7 +129,6 @@ def connected_components(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iter: int = 30,
-    use_reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Label every vertex with the minimum vertex id reachable from it.
 
@@ -182,7 +168,7 @@ def connected_components(
     """
 
     spark = vertices.sparkSession
-    tr = _CkptTracker(spark, use_reliable_checkpoint)
+    tr = _CkptTracker(spark)
 
     # checkpoint the initial labels too: `vertices` usually sits on top
     # of the full corpus DAG (digest scan + exact-map join), and an
@@ -330,20 +316,15 @@ def near_dup_clusters(
     # periodic ContextCleaner GC once the caller's plan is dropped.
     # pairs_cache: "local" (default) eager localCheckpoint — lineage is
     # truncated into non-recomputable blocks, so an executor loss fails
-    # the job; "reliable" eager checkpoint (needs setCheckpointDir) —
-    # survives executor loss; "none" — skip, right when `pairs` is
+    # the job; "none" — skip, right when `pairs` is
     # already a materialized stage table (corpus_job.py stage 3 reads
     # pairs back from parquet) so the three consumers just rescan
     # cheap, fault-recoverable storage.
     pairs = pairs.select(src_col, dst_col)
     if pairs_cache == "local":
         pairs = pairs.localCheckpoint(eager=True)
-    elif pairs_cache == "reliable":
-        pairs = pairs.checkpoint(eager=True)
     elif pairs_cache != "none":
-        raise ValueError(
-            f"pairs_cache must be local|reliable|none, got {pairs_cache!r}"
-        )
+        raise ValueError(f"pairs_cache must be local|none, got {pairs_cache!r}")
     edge_ids = (
         pairs.select(F.col(src_col).alias(id_col))
         .union(pairs.select(F.col(dst_col).alias(id_col)))

@@ -524,15 +524,12 @@ def semantic_dedup(cells: DataFrame, threshold: float = 0.95,
       a cheap expression over a re-readable scan (the md5 tier);
       ``"local"`` lazily localCheckpoints — right for derived plans
       whose cell assignment is an expensive UDF (the IVF tier), with
-      the documented lineage-truncation trade; ``"reliable"`` uses a
-      reliable checkpoint (needs setCheckpointDir).
+      the documented lineage-truncation trade.
     """
     if cache == "local":
         cells = cells.localCheckpoint(eager=False)
-    elif cache == "reliable":
-        cells = cells.checkpoint(eager=False)
     elif cache != "none":
-        raise ValueError(f"cache must be local|reliable|none, got {cache!r}")
+        raise ValueError(f"cache must be local|none, got {cache!r}")
     a, b = cells.alias("a"), cells.alias("b")
     score = cosine(F.col("a.embedding"), F.col("b.embedding"))
     pairs = (
@@ -616,5 +613,5 @@ def semantic_dedup_ivf(embeddings: DataFrame, centroids,
     # within-cell exact-fold scoring dominates, ~3 s at sf0.1 either
     # way); at corpus scale the assignment is a full distance matmul
     # per vector and triple evaluation would be real money.  Pass
-    # "none"/"reliable" per the core's cache contract.
+    # "none" per the core's cache contract.
     return semantic_dedup(c, threshold, round_to, cache=cache)

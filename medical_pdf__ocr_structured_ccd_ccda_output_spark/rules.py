@@ -2,11 +2,12 @@
 
 Every constant and pure-Python function here defines the *semantics* of
 both the pure-Python reference oracle (pytest golden producer) and the
-Spark pipeline.  The per-turn extraction rules run in Spark as written,
-through operators/extract.py's Arrow UDF; the other rules (entities,
-dedup, lookups) have Spark column-expression or pandas-UDF
-implementations, tested equal to the functions here.  The per-row
-invariant of the project is per-turn equality with the oracle.
+Spark pipeline.  The per-turn extraction rules and the corpus word-text
+rules run in Spark as written, through operators/extract.py's Arrow UDF
+(``rules_udf``); the other rules (entities, dedup, lookups) have Spark
+column-expression or pandas-UDF implementations, tested equal to the
+functions here.  The per-row invariant of the project is per-turn
+equality with the oracle.
 
 Rule provenance (reference repo, studied for behavior only — no code reuse):
   - confidence estimator      -> src/services/ocr_service.py:304-364
@@ -446,6 +447,88 @@ def extract_sections(text: str) -> list[dict]:
             "text": "\n".join(lines[idx:end + 1]),
         })
     return spans
+
+
+# ---------------------------------------------------------------------------
+# 8b. Corpus word text: normalized words, shingles, n-gram counts, quality
+#     signals (this project's own corpus-operator spec)
+# ---------------------------------------------------------------------------
+
+# Java's ASCII \s class: the DuckDB oracles normalize with '[\s\x0b]+',
+# and Python's unicode-aware \s / str.strip() would split on NBSP/NEL/Z*
+_ASCII_WS_RE = re.compile("[ \t\n\x0b\f\r]+")
+# under re.ASCII, \w = [A-Za-z0-9_] and \s = [ \t\n\x0b\f\r], as in Java
+_PUNCT_RE = re.compile(r"[^\w\s]", re.ASCII)
+
+STOPWORDS = [
+    "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
+    "for", "on", "with", "as", "by", "at", "this", "that",
+]
+_STOPSET = frozenset(STOPWORDS)
+
+
+def norm_words(text: str | None) -> list[str]:
+    """Lowercase, collapse ASCII whitespace runs to one space, strip
+    spaces, split on spaces.  A null or blank text gives ``['']``."""
+    return _ASCII_WS_RE.sub(" ", (text or "").lower()).strip(" ").split(" ")
+
+
+def _grams(words: list[str], n: int) -> list[str]:
+    return [" ".join(words[i:i + n]) for i in range(len(words) - n + 1)]
+
+
+def shingles(text: str | None, n: int) -> list[str]:
+    """Distinct word n-grams in first-occurrence order; a text shorter
+    than n words is one shingle of all its words."""
+    words = norm_words(text)
+    grams = _grams(words, n) if len(words) >= n else [" ".join(words)]
+    return list(dict.fromkeys(grams))
+
+
+def gram_counts(text: str | None, n: int) -> dict[str, int]:
+    """Word n-gram -> occurrences; empty for a text shorter than n
+    words (for n=1 a blank text counts the empty word once)."""
+    counts: dict[str, int] = {}
+    for g in _grams(norm_words(text), n):
+        counts[g] = counts.get(g, 0) + 1
+    return counts
+
+
+def ws_tokens(text: str | None) -> int:
+    """Whitespace tokens: ``len(text.split())``."""
+    return len((text or "").split())
+
+
+def quality_signals(text: str | None) -> dict:
+    """Length / punctuation / stopword / word-length heuristics and the
+    composite [0,1] quality score of one text.  ``n_chars`` is None for
+    a null text (SQL ``length(NULL)``); every other signal reads it as
+    empty.  The ratios are int/int divisions in a fixed order, so any
+    engine gets the same doubles."""
+    t = text or ""
+    words = norm_words(t)
+    n_words = len(words)  # >= 1: a blank text is one empty word
+    n_chars = len(t)
+    n_stop = sum(1 for w in words if w in _STOPSET)
+    n_punct = n_chars - len(_PUNCT_RE.sub("", t))
+    mean_wlen = sum(len(w) for w in words) / n_words
+    stop_ratio = n_stop / n_words
+    punct_ratio = n_punct / n_chars if n_chars > 0 else 0.0
+    score = (
+        min(1.0, n_words / 100)
+        * (1.0 if 3 <= mean_wlen <= 10 else 0.5)
+        * (1.0 if punct_ratio < 0.2 else 0.5)
+        * (1.0 if stop_ratio > 0.05 else 0.8)
+    )
+    return {
+        "n_chars": None if text is None else n_chars,
+        "n_words": n_words,
+        "n_tokens": ws_tokens(t),
+        "stopword_ratio": stop_ratio,
+        "punct_ratio": punct_ratio,
+        "mean_word_len": mean_wlen,
+        "quality_score": score,
+    }
 
 
 # ---------------------------------------------------------------------------

@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from medical_pdf__ocr_structured_ccd_ccda_output_spark import rules
 from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators import corpus, multimodal, similarity
 
 
@@ -92,7 +93,7 @@ def test_quality_scores_python_oracle(spark, docs):
     for r in sample.collect():
         words = _norm(r["text"]).split(" ")
         n_words = len(words)
-        n_stop = sum(1 for w in words if w in corpus.STOPWORDS)
+        n_stop = sum(1 for w in words if w in rules.STOPWORDS)
         n_punct = len(r["text"]) - len(re.sub(r"[^\w\s]", "", r["text"]))
         g = got[r["doc_id"]]
         assert g["n_words"] == n_words

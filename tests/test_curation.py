@@ -3,18 +3,21 @@
 The composed pipeline's full decision table is value-hash-oracled
 through the driver contract (`corpus_curation`); this file pins the
 composition semantics: signal parity with the standalone operators
-(the refactored shared expressions make drift impossible by
-construction — these tests keep it that way), the first-failing-rule
+(all three run rules.quality_signals / rules.ws_tokens — these tests
+keep it that way), the signals UDF on hand-checked edge rows and
+against direct rules.quality_signals calls, the first-failing-rule
 priority order, the duplicate-group survivor invariant, decontamination
 wiring, and totality.
 """
 
 from pyspark.sql import functions as F
 
+from medical_pdf__ocr_structured_ccd_ccda_output_spark import rules
 from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.corpus import (
     curate_corpus,
     quality_scores,
     redact_pii,
+    signals_udf,
     token_counts,
 )
 
@@ -123,54 +126,55 @@ def test_decontamination_wiring_and_reason_order(spark):
     assert not out[3]["contaminated"] and out[3]["keep"]
 
 
-def test_signal_udf_matches_jvm_exprs(spark):
-    # the Arrow signals UDF must be value-identical to the JVM
-    # expression tier on edge cases: null, empty, whitespace-padded,
-    # punct-heavy, unicode NBSP/NEL (where both sides use the ASCII
-    # \s class), long text, stopword-free, every ASCII-\s separator
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.corpus import (
-        quality_exprs,
-        signal_scores_udf,
-        ws_token_expr,
-    )
+def test_signal_udf_edge_rows(spark):
+    # rules.quality_signals through the Spark UDF on edge cases: null,
+    # empty, whitespace-only, one word, long text, punct-heavy, unicode
+    # NBSP/NEL (Python split() splits on them, the ASCII word class
+    # does not), mixed case, stopword-free, every ASCII-\s separator.
+    # Expected score = min(1, n_words/100) x word-length factor x
+    # punct factor x stopword factor, worked out by hand per row.
     rows = [
-        (1, None), (2, ""), (3, "   \n\t  "), (4, "one"),
-        (5, "a b c d e f g h i j " * 30),
-        (6, "!!! ??? ... ;;; ::: @@@"),
-        (7, "the nbsp staysnel here"),
-        (8, "mixed CASE Text with the and of words"),
-        (9, "zz qq ww ee rr tt yy uu"),
-        (10, "tab\tsep\nnewline\x0bvtab\fff\rcr end"),
+        # null and blank texts: one empty word (mean length 0), no
+        # punctuation, no stopwords
+        (1, None, 0, 0.01 * 0.5 * 1.0 * 0.8),
+        (2, "", 0, 0.01 * 0.5 * 1.0 * 0.8),
+        (3, "   \n\t  ", 0, 0.01 * 0.5 * 1.0 * 0.8),
+        # one 3-letter word
+        (4, "one", 1, 0.01 * 1.0 * 1.0 * 0.8),
+        # 300 one-letter words, 30 of them "a" (stopword ratio 0.1)
+        (5, "a b c d e f g h i j " * 30, 300, 1.0 * 0.5 * 1.0 * 1.0),
+        # 6 three-char words, punct 18/23
+        (6, "!!! ??? ... ;;; ::: @@@", 6, 0.06 * 1.0 * 0.5 * 0.8),
+        # 5 tokens but 3 words (NBSP/NEL join words), mean 21/3,
+        # punct 2/23 (NBSP and NEL are neither ASCII \w nor \s)
+        (7, "the nbsp\xa0stays\x85nel here", 5, 0.03 * 1.0 * 1.0 * 1.0),
+        # 8 words, 4 stopwords, mean 30/8
+        (8, "mixed CASE Text with the and of words", 8,
+         0.08 * 1.0 * 1.0 * 1.0),
+        # 8 two-letter words
+        (9, "zz qq ww ee rr tt yy uu", 8, 0.08 * 0.5 * 1.0 * 0.8),
+        # 7 words split by \t \n \x0b \f \r and a space, mean 24/7
+        (10, "tab\tsep\nnewline\x0bvtab\fff\rcr end", 7,
+         0.07 * 1.0 * 1.0 * 0.8),
     ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    sc = signal_scores_udf()(F.col("text"))
-    udf_out = {r["doc_id"]: r for r in d.select(
+    d = spark.createDataFrame([r[:2] for r in rows], "doc_id long, text string")
+    sc = signals_udf()(F.col("text"))
+    got = {r["doc_id"]: r for r in d.select(
         "doc_id", sc["n_tokens"].alias("nt"), sc["quality_score"].alias("q")
     ).collect()}
-    jvm_out = {r["doc_id"]: r for r in d.select(
-        "doc_id",
-        ws_token_expr(F.col("text")).cast("long").alias("nt"),
-        quality_exprs(F.col("text"))["quality_score"].alias("q"),
-    ).collect()}
-    for i, _ in rows:
-        assert udf_out[i]["nt"] == jvm_out[i]["nt"], i
-        assert udf_out[i]["q"] == jvm_out[i]["q"], i
+    for i, _, n_tokens, score in rows:
+        assert got[i]["nt"] == n_tokens, i
+        assert got[i]["q"] == score, i
 
 
 def test_signal_udf_property_parity(spark):
-    # hypothesis fuzz over the PY_WS/unicode parity surface (the
+    # hypothesis fuzz over the PY_WS/unicode surface (the
     # test_property_parity idiom: batch per example so shrinking still
-    # isolates one string): the Arrow UDF and the JVM tier must agree
-    # on generated adversarial text, not just curated cases
+    # isolates one string): the Spark UDF returns exactly what a direct
+    # rules.quality_signals call returns, row by row
     import string
 
     from hypothesis import HealthCheck, given, settings, strategies as st
-
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.corpus import (
-        quality_exprs,
-        signal_scores_udf,
-        ws_token_expr,
-    )
 
     raw = st.text(
         alphabet=string.ascii_letters + string.digits + string.punctuation
@@ -188,18 +192,10 @@ def test_signal_udf_property_parity(spark):
     def check(texts):
         d = spark.createDataFrame(
             list(enumerate(texts)), "doc_id long, text string")
-        sc = signal_scores_udf()(F.col("text"))
-        u = {r["doc_id"]: r for r in d.select(
-            "doc_id", sc["n_tokens"].alias("nt"),
-            sc["quality_score"].alias("q")).collect()}
-        j = {r["doc_id"]: r for r in d.select(
-            "doc_id",
-            ws_token_expr(F.col("text")).cast("long").alias("nt"),
-            quality_exprs(F.col("text"))["quality_score"].alias("q"),
-        ).collect()}
+        got = {r["doc_id"]: r["sc"].asDict() for r in d.select(
+            "doc_id", signals_udf()(F.col("text")).alias("sc")).collect()}
         for i, t in enumerate(texts):
-            assert u[i]["nt"] == j[i]["nt"], (i, repr(t))
-            assert u[i]["q"] == j[i]["q"], (i, repr(t))
+            assert got[i] == rules.quality_signals(t), (i, repr(t))
 
     check()
 

@@ -1,4 +1,4 @@
-"""Parity tests for functions/lookup.py (SURVEY F3, F8-F11, A13)
+"""Parity tests for functions/lookup.py (SURVEY F3, F8-F11)
 against the pure-Python reference rules (rules.py), which mirror
 reference/src/renderers/xml_renderer_v2.py:653-676 and
 reference/src/services/variant_preservation.py:126-216.
@@ -107,18 +107,6 @@ def test_variant_lookup_parity(spark):
         exp = rules.term_variants(t, DICTIONARY)
         assert list(rows[t]["alternatives"]) == exp["alternatives"], t
         assert rows[t]["decision"] == exp["decision"], t
-
-
-def test_variant_audit_report(spark):
-    df = spark.createDataFrame([(t,) for t in TERMS], ["term"])
-    out = lookup.variant_lookup(df, "term", dictionary=DICTIONARY)
-    report = {
-        r["decision"]: r["n_terms"]
-        for r in lookup.variant_audit_report(out).collect()
-    }
-    exp_decisions = [rules.term_variants(t, DICTIONARY)["decision"] for t in TERMS]
-    assert report.get("multiple_variants", 0) == exp_decisions.count("multiple_variants")
-    assert report.get("raw_preserved", 0) == exp_decisions.count("raw_preserved")
 
 
 def test_similarity_udf_parity(spark):
