@@ -140,16 +140,16 @@ def main():
     # number, and rounds 2/3 both recorded co-tenant capacity swings on
     # unchanged code.  Gate each measurement window on a spin-probe
     # available-core ratio + rep spread; on a dirty window, sleep and
-    # re-measure (min across attempts — contention only inflates).
+    # re-measure.
     n_reps = 5  # shared vCPUs are noisy; min-of-5 damps co-tenant spikes
     # Round-4 postmortem: a window that skimmed the old limits (spread
     # 1.376 vs 1.4) understated the headline by a third vs the same
-    # code minutes later.  The gate is therefore tighter (spread <=
-    # 1.2, more retries), and the headline is the min over ALL
-    # attempts' reps — a dirty window can only fail the gate, never
-    # slow the recorded number below the best rep actually observed.
+    # code minutes later, so the gate is tight (spread <= 1.2).  The
+    # headline is the min of the accepted window's reps alone, so a busy
+    # host (up to five windows) and an idle one (one window) take a min
+    # over the same number of reps.  When no window is clean, the last
+    # one's min is reported and the result says "contended": true.
     attempts = []
-    dt = None
     for attempt in range(5):
         probe = _contention_probe(CPUS)
         dts = [_timed(_extraction_job, spark, transcripts)[1]
@@ -157,12 +157,12 @@ def main():
         spread = max(dts) / min(dts)
         attempts.append({**probe, "reps_sec": [round(x, 3) for x in dts],
                          "spread": round(spread, 3)})
-        dt = min(dts) if dt is None else min(dt, min(dts))
         ratio = probe["avail_core_ratio"]
         clean_window = (ratio is None or ratio >= 0.75) and spread <= 1.2
         if clean_window:
             break
         time.sleep(15)
+    dt = min(dts)
     timings["extraction_pipeline"] = round(dt, 3)
     throughput = n_turns / dt if dt else 0.0
 
@@ -238,6 +238,8 @@ def main():
         "per_turn_equality": equality,
         "contention": {"attempts": attempts, "clean_window": clean_window},
     }
+    if not clean_window:
+        result["contended"] = True
 
     if os.environ.get("SPARK_GRAFT_SCALING") == "1":
         # Same job, two parallelism levels, same input -> scaling

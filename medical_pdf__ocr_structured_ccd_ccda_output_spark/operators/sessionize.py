@@ -3,8 +3,11 @@
 Mirrors chunking_service.py:44-103: a turn opens a new visit when its
 (cleaned) text matches a boundary pattern, unless it is the first turn
 of the conversation.  visit_seq = 1 + running count of boundary turns
-after the first turn — a prefix sum over Window.partitionBy(conv_id)
-.orderBy(turn_idx, ts).
+after the first turn.  With b = 1 on a boundary turn and 0 otherwise,
+that is 1 + sum(b) - first(b) over ONE running frame,
+Window.partitionBy(conv_id).orderBy(turn_idx, ts) from the first row to
+the current one: both aggregates share the frame, so the plan has one
+Window operator and no row_number.
 
 Two implementations with identical output:
 
@@ -54,32 +57,30 @@ def _boundary_int() -> F.Column:
     return F.col("is_boundary").cast("int")
 
 
-def _visit_columns() -> tuple[F.Column, F.Column, F.Column]:
-    """(_rn, visit_seq, visit_id) — each reads the column before it."""
-    w_order = Window.partitionBy("conv_id").orderBy(*TURN_ORDER)
-    w_run = w_order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    rn = F.row_number().over(w_order)
-    visit_seq = F.lit(1) + F.sum(
-        F.when(F.col("is_boundary") & (F.col("_rn") > 1), 1).otherwise(0)
-    ).over(w_run)
+def _visit_columns() -> tuple[F.Column, F.Column]:
+    """(visit_seq, visit_id) — visit_id reads visit_seq."""
+    w_run = (
+        Window.partitionBy("conv_id").orderBy(*TURN_ORDER)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    # 0, not null, on a null flag: first(b) must never be null
+    b = F.when(F.col("is_boundary"), 1).otherwise(0)
+    visit_seq = F.lit(1) + F.sum(b).over(w_run) - F.first(b).over(w_run)
     return (
-        rn,
         visit_seq.cast("int"),
         F.format_string("visit_%03d", F.col("visit_seq")),
     )
 
 
 def assign_visits(extracted: DataFrame) -> DataFrame:
-    """Single-window visit assignment (one shuffle on conv_id).  The
-    window Columns are built once per live SparkContext
-    (``session.context_cached``)."""
-    rn, visit_seq, visit_id = context_cached(
+    """Single-window visit assignment (one shuffle on conv_id, one
+    Window operator).  The window Columns are built once per live
+    SparkContext (``session.context_cached``)."""
+    visit_seq, visit_id = context_cached(
         extracted, "assign_visits", _visit_columns)
     return (
-        extracted.withColumn("_rn", rn)
-        .withColumn("visit_seq", visit_seq)
+        extracted.withColumn("visit_seq", visit_seq)
         .withColumn("visit_id", visit_id)
-        .drop("_rn")
     )
 
 

@@ -1,5 +1,6 @@
 """Physical-plan inspection helpers — used by tests to pin the plan
-shapes that matter at 100 TB (pushdown, broadcast, shuffle count)."""
+shapes that matter at 100 TB (pushdown, broadcast, shuffle and window
+operator counts)."""
 
 from __future__ import annotations
 
@@ -22,6 +23,15 @@ def shuffle_exchange_count(df: DataFrame) -> int:
     return sum(
         1 for line in plan.splitlines()
         if line.lstrip("+-: ").startswith("Exchange")
+    )
+
+
+def window_operator_count(df: DataFrame) -> int:
+    """Number of Window operators in the physical plan."""
+    plan = formatted_plan(df)
+    return sum(
+        1 for line in plan.splitlines()
+        if line.lstrip("+-: ").startswith("Window (")
     )
 
 

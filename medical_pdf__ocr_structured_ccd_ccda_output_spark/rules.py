@@ -31,6 +31,7 @@ deterministic layout/boilerplate pass per BASELINE.json's north star.
 
 from __future__ import annotations
 
+import datetime
 import re
 from difflib import SequenceMatcher
 
@@ -39,9 +40,11 @@ from difflib import SequenceMatcher
 # ---------------------------------------------------------------------------
 
 # One pattern per boilerplate family.  A line is dropped when ANY pattern
-# *searches* true (unanchored semantics except explicit ^/$).  Patterns are
-# written in the regex subset Python, Java and RE2 share, so one string
-# serves re.search and, through engine_portable(), the DuckDB oracles.
+# matches it.  Every pattern is anchored at the line start (^), so
+# clean_text applies them with re.match, which then equals re.search
+# (tests/test_rules_pinned.py).  Patterns are written in the regex subset
+# Python, Java and RE2 share, so one string serves re.match and, through
+# engine_portable(), the DuckDB oracles.
 BOILERPLATE_LINE_PATTERNS: list[str] = [
     r"^\s*-{2,}\s*Page\s+\d+\s*-{2,}\s*$",          # --- Page 7 ---
     r"^\s*={3,}\s*$",                                # ======= rules
@@ -106,6 +109,7 @@ def java_portable(pat: str) -> str:
     return "(?d)" + engine_portable(pat)
 
 EMPTY_EXTRACTION_MARKER = "[UNCLEAR: no extractable content]"
+_BLANK_RUN_RE = re.compile(r"\n{3,}")
 
 
 def clean_text(text: str) -> str:
@@ -123,15 +127,9 @@ def clean_text(text: str) -> str:
     """
     if text is None:
         return EMPTY_EXTRACTION_MARKER
-    kept = [
-        re.sub(r"\s+$", "", ln)
-        for ln in text.split("\n")
-        if not _BOILER_RE.search(ln)
-    ]
-    joined = "\n".join(kept)
-    joined = re.sub(r"\n{3,}", "\n\n", joined)
-    joined = re.sub(r"^\n+", "", joined)
-    joined = re.sub(r"\n+$", "", joined)
+    # rstrip() strips exactly the str.isspace() set, which is Python-re \s
+    kept = [ln.rstrip() for ln in text.split("\n") if not _BOILER_RE.match(ln)]
+    joined = _BLANK_RUN_RE.sub("\n\n", "\n".join(kept)).strip("\n")
     if not joined.strip():
         return EMPTY_EXTRACTION_MARKER
     return joined
@@ -343,12 +341,25 @@ DATE_PATTERNS = [
 ]
 
 
+_DATE_RES = [re.compile(p) for p in DATE_PATTERNS]
+
+
+def _parse_date(year: str, month: str, day: str) -> datetime.date:
+    """The date ``strptime(f"{year}-{month}-{day}", "%Y-%m-%d")`` gives,
+    or ValueError where it raises.  On the 4-digit year and 1-2 digit
+    month and day the patterns capture, ``datetime.date`` accepts and
+    rejects the same ASCII digits; strptime's own grammar still decides
+    for other Unicode digits (re \\d matches them, int() reads them)."""
+    if (year + month + day).isascii():
+        return datetime.date(int(year), int(month), int(day))
+    return datetime.datetime.strptime(f"{year}-{month}-{day}",
+                                      "%Y-%m-%d").date()
+
+
 def extract_date(text: str) -> str | None:
     """First pattern whose first match parses wins -> 'YYYY-MM-DD' or None."""
-    from datetime import datetime
-
-    for i, pat in enumerate(DATE_PATTERNS):
-        m = re.search(pat, text)
+    for i, rx in enumerate(_DATE_RES):
+        m = rx.search(text)
         if not m:
             continue
         g = m.groups()
@@ -360,7 +371,7 @@ def extract_date(text: str) -> str | None:
             month, day, yy = g
             year = f"20{yy}" if int(yy) < 50 else f"19{yy}"
         try:
-            d = datetime.strptime(f"{year}-{month}-{day}", "%Y-%m-%d")
+            d = _parse_date(year, month, day)
         except ValueError:
             continue
         # Explicit zero-padded ISO instead of strftime('%Y-%m-%d'):
@@ -413,15 +424,23 @@ def _section_rules() -> list[tuple[str, str]]:
 
 
 SECTION_RULES = _section_rules()
-_SECTION_RES = [(name, re.compile(pat)) for name, pat in SECTION_RULES]
+# One alternation of every rule, in priority order, one named group per
+# rule: at the line start the regex engine tries the branches left to
+# right, so the first branch that matches is the first rule that does.
+# Every rule is ^-anchored, so .match equals the rule's re.search
+# (tests/test_rules_pinned.py); each is (?i), so the flag is set once.
+_SECTION_NAMES = {f"r{i}": name for i, (name, _) in enumerate(SECTION_RULES)}
+_SECTION_RE = re.compile(
+    "|".join(f"(?P<r{i}>{pat.removeprefix('(?i)')})"
+             for i, (_, pat) in enumerate(SECTION_RULES)),
+    re.IGNORECASE,
+)
 
 
 def match_section_header(line: str) -> str | None:
     """First matching rule wins (priority = dictionary order)."""
-    for name, rx in _SECTION_RES:
-        if rx.search(line):
-            return name
-    return None
+    m = _SECTION_RE.match(line)
+    return _SECTION_NAMES[m.lastgroup] if m else None
 
 
 def extract_sections(text: str) -> list[dict]:
@@ -432,11 +451,8 @@ def extract_sections(text: str) -> list[dict]:
     included).
     """
     lines = text.split("\n")
-    headers: list[tuple[int, str]] = []
-    for idx, line in enumerate(lines):
-        name = match_section_header(line)
-        if name is not None:
-            headers.append((idx, name))
+    headers = [(idx, name) for idx, line in enumerate(lines)
+               if (name := match_section_header(line))]
     spans = []
     for j, (idx, name) in enumerate(headers):
         end = (headers[j + 1][0] - 1) if j + 1 < len(headers) else len(lines) - 1

@@ -178,7 +178,7 @@ def test_warm_rebuild_py4j_round_trips(spark, transcripts, monkeypatch):
                         send_command)
     build()
     monkeypatch.undo()
-    # a cold build of the same plan sends ~370 (UDF, field Columns and
+    # a cold build of the same plan sends ~340 (UDF, field Columns and
     # window Columns)
     assert 0 < len(sent) < 200, len(sent)
 

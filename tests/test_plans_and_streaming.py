@@ -15,6 +15,7 @@ from medical_pdf__ocr_structured_ccd_ccda_output_spark.plans.inspect import (
     has_pushed_filters,
     read_schema_columns,
     shuffle_exchange_count,
+    window_operator_count,
 )
 
 
@@ -60,6 +61,20 @@ def test_extraction_shuffle_budget(spark, tmp_path):
     t = spark.read.parquet(p)
     out = assign_visits(extract_turns(t, with_sections=True))
     assert shuffle_exchange_count(out) == 1
+
+
+def test_sessionize_plans_one_window(spark, tmp_path):
+    """visit_seq is 1 + sum(b) - first(b) over one running frame, so
+    assign_visits(extract_turns(t)) plans exactly ONE Window operator
+    (no row_number window before the running sum) over its one
+    shuffle, for both extraction variants."""
+    p = str(tmp_path / "t.parquet")
+    fixtures.transcripts_spark_df(spark, 10, seed=1).write.parquet(p)
+    t = spark.read.parquet(p)
+    for with_sections in (True, False):
+        out = assign_visits(extract_turns(t, with_sections=with_sections))
+        assert window_operator_count(out) == 1
+        assert shuffle_exchange_count(out) == 1
 
 
 def test_streaming_extraction(spark, tmp_path):

@@ -14,9 +14,9 @@ Repetition 0 is cold (first build in the session, JIT not warm); the
 warm repetitions are the steady-state cost every pass of a hot loop
 pays.  One JSON line per repetition.
 
-On a 4-vCPU host with ``4 300 2`` (3,172 turns), the extract build
-sends 370 py4j commands cold (1.0 s) and 54 warm (0.04 s).  The
-prepare build sends 422 and the outputs build 15,308 (3.7-4.9 s),
+On a 4-vCPU host with ``4 300 3`` (3,172 turns), the extract build
+sends 339 py4j commands cold (0.8 s) and 47 warm (0.03 s).  The
+prepare build sends 415 and the outputs build 15,308 (3.0-4.5 s),
 cold or warm.
 """
 
