@@ -46,6 +46,7 @@ check_oracles.py verifies all of them identically to the driver.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
@@ -61,7 +62,9 @@ from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.extract import 
     rules_udf,
 )
 from medical_pdf__ocr_structured_ccd_ccda_output_spark.renderers.xml import (
+    CODE,
     HL7_NAMESPACE,
+    NAME,
     ROOT_OID,
 )
 
@@ -265,6 +268,13 @@ _QUERY_ORDER = [
     "media_features", "corpus_dedup_pipeline_prod",
     "incremental_dedup_prod",
 ]
+
+
+# rules.term_variants' dict
+_VARIANTS = T.StructType([
+    T.StructField("alternatives", T.ArrayType(T.StringType(), False)),
+    T.StructField("decision", T.StringType()),
+])
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1345,13 +1355,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["user_stats"] = q_user_stats
 
     def q_parse_names(spark, sf):
-        """F10 name parsing (xml_renderer_v2.py:653-662) over customer
-        names."""
-        from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.lookup import (
-            parse_name_expr,
-        )
+        """F10 name parsing (rules.parse_name, xml_renderer_v2.py:653-662)
+        over customer names."""
         c = _read(spark, sf, "customer")
-        parsed = parse_name_expr(F.col("c_name"))
+        parsed = rules_udf(rules.parse_name, NAME)(F.col("c_name"))
         return c.select(
             "c_custkey",
             parsed["given"].alias("given"),
@@ -1361,15 +1368,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_contains_code_lookup(spark, sf):
         """F11 ordered first-match substring code lookup
-        (xml_renderer_v2.py:664-676) — same when-chain shape as the
-        SNOMED/LOINC maps, keyed on the part-name vocabulary so matches
-        actually occur in the synthetic data."""
-        from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.lookup import (
-            code_lookup_expr,
-        )
+        (rules.find_code, xml_renderer_v2.py:664-676) — the rule the
+        SNOMED/LOINC entries run, keyed on the part-name vocabulary so
+        matches actually occur in the synthetic data."""
         code_map = [("widget", "W-001"), ("gear", "G-002"), ("bolt", "B-003")]
         p = _read(spark, sf, "part")
-        hit = code_lookup_expr(F.col("p_name"), code_map)
+        hit = rules_udf(partial(rules.find_code, code_map=code_map),
+                        CODE)(F.col("p_name"))
         return p.select(
             "p_partkey",
             hit["code"].alias("code"),
@@ -1378,32 +1383,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["contains_code_lookup"] = q_contains_code_lookup
 
     def q_mark_unclear(spark, sf):
-        """F9 unclear marking (variant_preservation.py:170-185) driven by
-        the F1 confidence score; guess = first whitespace token."""
+        """F9 unclear marking (rules.mark_unclear,
+        variant_preservation.py:170-185) driven by the F1 confidence
+        score; guess = first whitespace token."""
         from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.cleaning import (
             PY_WS,
             strip_ws,
-        )
-        from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.lookup import (
-            mark_unclear_expr,
         )
         d = _read(spark, sf, "documents")
         conf = rules_udf(rules.raw_confidence, T.DoubleType())(F.col("text"))
         # Python .split()[0] semantics: unicode strip + PY_WS split
         guess = F.element_at(F.split(strip_ws(F.col("text")), f"{PY_WS}+"), 1)
-        return d.select(
-            "doc_id", mark_unclear_expr(guess, conf).alias("marked")
-        )
+        mark = rules_udf(rules.mark_unclear, T.StringType())
+        return d.select("doc_id", mark(guess, conf).alias("marked"))
     q["mark_unclear"] = q_mark_unclear
 
-    # ---- rows-only (non-SQL-expressible; pytest-oracled instead) ----
+    # ---- golden-oracled: difflib is not SQL-expressible ----
     def q_variant_lookup(spark, sf):
-        """F8 variant preservation: known-variant broadcast join +
-        difflib close matches (not SQL-expressible; pytest-oracled
-        against rules.term_variants)."""
-        from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.lookup import (
-            variant_lookup,
-        )
+        """F8 variant preservation (rules.term_variants): known-variant
+        hits + difflib close matches, oracled against golden values."""
         terms = spark.createDataFrame(
             [("polydypsia",), ("hypoglycemia",), ("glucose",), ("hemoglobin",),
              ("anxiety",), ("oesophagus",)],
@@ -1411,10 +1409,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         dico = ["polydipsia", "hypoglycaemia", "glucose", "haemoglobin",
                 "anxiety", "esophagus"]
-        out = variant_lookup(terms, "term", dictionary=dico)
+        variants = rules_udf(partial(rules.term_variants, dictionary=dico),
+                             _VARIANTS)
+        out = terms.select("term", variants(F.col("term")).alias("v"))
         return out.select(
-            "term", F.col("alternatives").cast("string").alias("alternatives"),
-            "decision",
+            "term", F.col("v.alternatives").cast("string").alias("alternatives"),
+            "v.decision",
         )
     q["variant_lookup"] = q_variant_lookup
 
@@ -2065,10 +2065,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_schema_warnings(spark, sf):
         """Schema-validation warnings stage (canonical_schema.py:182-292
         validators as flagged rows): synthetic visits with injected
-        anomalies run through functions.validate.visit_warnings_expr."""
-        from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.validate import (
-            visit_warnings_expr,
-        )
+        anomalies run through rules.visit_warnings."""
         p = _read(spark, sf, "part")
         k = F.col("p_partkey")
         visits = p.select(
@@ -2082,10 +2079,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.when(k % 19 == 0, F.lit("1.0")).otherwise(F.lit("2.0"))
             .alias("schema_version"),
         )
-        w = visit_warnings_expr(
-            F.col("visit_id"), F.col("confidence"), F.col("turn_count"),
-            F.col("schema_version"),
-        )
+        warnings = rules_udf(rules.visit_warnings,
+                             T.ArrayType(T.StringType(), False))
+        w = warnings(F.col("visit_id"), F.col("confidence"),
+                     F.col("turn_count"), F.col("schema_version"))
         return visits.select(
             "conv_id", "visit_id",
             F.array_join(w, "|").alias("warnings"),

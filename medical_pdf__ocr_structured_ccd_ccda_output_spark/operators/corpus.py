@@ -674,20 +674,6 @@ def hash_split(documents: DataFrame, key: str = "source",
     return documents.withColumn("split", expr)
 
 
-def deterministic_sample(documents: DataFrame, rate: float,
-                         key: str = "doc_id",
-                         salt: str = "sample-v1") -> DataFrame:
-    """Reproducible ~rate subsample: keep rows whose hash bucket falls
-    below rate.  Samples at different rates with the same salt NEST
-    (a 1% sample is a subset of the 10% sample — bucket < 10_000 ⊂
-    bucket < 100_000), which is the property corpus-curation ablations
-    rely on.  Pure filter: predicate-pushdown-friendly, zero shuffle.
-    """
-    return documents.filter(
-        _hash_bucket(salt, F.col(key)) < int(rate * 1_000_000)
-    )
-
-
 def pack_manifest(documents: DataFrame, capacity: int = 2048,
                   group: str = "source") -> DataFrame:
     """Concat-and-chunk packing manifest: map each document to its
@@ -729,10 +715,10 @@ def pack_manifest(documents: DataFrame, capacity: int = 2048,
 def corpus_mix(documents: DataFrame, weights: dict, key: str = "doc_id",
                group: str = "source", salt: str = "mix-v1",
                default_rate: float = 0.0) -> DataFrame:
-    """Weighted deterministic corpus mixing: keep each group's rows at
-    its configured rate, on the same md5 bucket as deterministic_sample
-    — so a re-run reproduces the exact mix, raising one source's
-    weight strictly grows its kept set (nesting), and membership is
+    """Weighted deterministic corpus mixing: keep a row when the md5
+    bucket of its salted key falls below its group's configured rate —
+    so a re-run reproduces the exact mix, raising one source's weight
+    strictly grows its kept set (nesting), and membership is
     independent of partitioning.
 
     `weights` (group -> rate in [0,1]) becomes a map LITERAL — the

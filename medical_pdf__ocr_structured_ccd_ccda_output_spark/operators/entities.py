@@ -3,8 +3,9 @@
 The reference's structuring stage is an LLM call; the graft replaces it
 with deterministic line-based parsing of the already-segmented sections
 (MEDICATIONS / problem-bearing / LABORATORY), per the extraction tier's
-north star.  All parsing is JVM regex — entities are exploded from the
-sections array, no Python.
+north star.  Medications, problems and labs are parsed with JVM regex;
+vitals, allergies and plan items with the rules.py line grammar, one
+Arrow UDF call per section line.
 
 Output schemas follow FIXTURES.md §3 so the dedup stage can consume
 either these extracted entities or externally-provided entity tables.
@@ -12,10 +13,13 @@ either these extracted entities or externally-provided entity tables.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from .. import rules
-from ..functions.cleaning import PY_WS, strip_ws
+from ..functions.cleaning import PY_WS
+from .extract import rules_udf
 
 # name then optional dose (number+unit) then the rest as frequency/route
 # (engine_portable: \s means Python-unicode whitespace in every grammar
@@ -101,114 +105,74 @@ def extract_lab_results(turns: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Vitals / allergies / plan (canonical_schema.py:64-94,140-180; line
-# grammar defined in rules.py §13, shared with the pytest oracle)
+# Vitals / allergies / plan (canonical_schema.py:64-94,140-180): the
+# line grammar is rules.py §13's, run on each section line through
+# rules_udf
 # ---------------------------------------------------------------------------
 
-_BULLET = rules.java_portable(rules.BULLET_PREFIX_PATTERN)
+_VITAL_FIELDS = [
+    T.StructField("vital_name", T.StringType()),
+    T.StructField("value", T.DoubleType()),
+    T.StructField("systolic", T.DoubleType()),
+    T.StructField("diastolic", T.DoubleType()),
+    T.StructField("unit", T.StringType()),
+    T.StructField("bp_valid", T.BooleanType()),
+]
+_ALLERGY_FIELDS = [T.StructField("substance", T.StringType())]
+_PLAN_FIELDS = [
+    T.StructField("action", T.StringType()),
+    T.StructField("category", T.StringType()),
+]
 
 
-def _canonical_vital_expr(label):
-    """Normalized-label -> canonical vital key (exact-equality when-chain
-    over rules.VITAL_LABEL_MAP)."""
-    norm = F.trim(F.regexp_replace(F.lower(label), f"{PY_WS}+", " "))
-    expr = F.lit(None).cast("string")
-    for key, canonical in reversed(rules.VITAL_LABEL_MAP):
-        expr = F.when(norm == key, F.lit(canonical)).otherwise(expr)
-    return expr
+def _parsed_lines(turns: DataFrame, section: str,
+                  parse: Callable[[str | None], list],
+                  fields: list[T.StructField]) -> DataFrame:
+    """One row per line of ``section`` that ``parse`` accepts: its
+    result's ``fields``, then source_page and source_line_in_turn.
+    ``parse`` returns a 0-or-1 element list, so the explode both keeps
+    the accepted lines and parses each line once (see rules_udf)."""
+    udf = rules_udf(parse, T.ArrayType(T.StructType(fields)))
+    return _section_lines(turns, (section,)).select(
+        "conv_id", "visit_id",
+        F.explode(udf(F.col("line"))).alias("_p"),
+        F.col("turn_idx").alias("source_page"),
+        F.col("line_no").alias("source_line_in_turn"),
+    ).select("conv_id", "visit_id", "_p.*",
+             "source_page", "source_line_in_turn")
+
+
+def _vital(line: str | None) -> list:
+    v = rules.parse_vital_line(line)
+    return [] if v is None else [v]
+
+
+def _allergy(line: str | None) -> list:
+    s = rules.parse_allergy_line(line)
+    return [] if s is None else [(s,)]
+
+
+def _plan(line: str | None) -> list:
+    p = rules.parse_plan_line(line)
+    return [] if p is None else [p]
 
 
 def extract_vitals(turns: DataFrame) -> DataFrame:
     """VITAL SIGNS section lines -> one row per recognized vital with the
-    BloodPressure range validation flag (40-300 / 20-200,
-    canonical_schema.py:75-76).  Pure JVM regex."""
-    lines = _section_lines(turns, ("VITAL SIGNS",))
-    vital_pat = rules.java_portable(rules.VITAL_LINE_PATTERN)
-    g = lambda i: F.regexp_extract(F.col("line"), vital_pat, i)  # noqa: E731
-    parsed = (
-        lines.filter(F.col("line").rlike(vital_pat))
-        .select(
-            "conv_id", "visit_id",
-            _canonical_vital_expr(g(1)).alias("vital_name"),
-            F.nullif(g(2), F.lit("")).cast("double").alias("_v1"),
-            F.nullif(g(3), F.lit("")).cast("double").alias("_v2"),
-            F.nullif(g(4), F.lit("")).alias("_unit"),
-            F.col("turn_idx").alias("source_page"),
-            F.col("line_no").alias("source_line_in_turn"),
-        )
-        .filter(F.col("vital_name").isNotNull())
-    )
-    is_bp = F.col("vital_name") == "blood_pressure"
-    # slash form belongs to BP only; BP without the slash form is dropped
-    parsed = parsed.filter(
-        (is_bp & F.col("_v2").isNotNull())
-        | (~is_bp & F.col("_v2").isNull())
-    )
-    lo_s, hi_s = rules.BP_SYSTOLIC_RANGE
-    lo_d, hi_d = rules.BP_DIASTOLIC_RANGE
-    return parsed.select(
-        "conv_id", "visit_id", "vital_name",
-        F.when(~is_bp, F.col("_v1")).alias("value"),
-        F.when(is_bp, F.col("_v1")).alias("systolic"),
-        F.when(is_bp, F.col("_v2")).alias("diastolic"),
-        F.when(is_bp, F.coalesce(F.col("_unit"), F.lit("mmHg")))
-        .otherwise(F.col("_unit")).alias("unit"),
-        F.when(
-            is_bp,
-            F.col("_v1").between(lo_s, hi_s) & F.col("_v2").between(lo_d, hi_d),
-        ).otherwise(F.lit(True)).alias("bp_valid"),
-        "source_page", "source_line_in_turn",
-    )
+    BloodPressure range validation flag (rules.parse_vital_line)."""
+    return _parsed_lines(turns, "VITAL SIGNS", _vital, _VITAL_FIELDS)
 
 
 def extract_allergies(turns: DataFrame) -> DataFrame:
-    """ALLERGIES section lines -> substance strings (bullets stripped,
-    no-allergy markers dropped — rules.ALLERGY_NEGATIONS)."""
-    lines = _section_lines(turns, ("ALLERGIES",))
-    # strip_ws, not F.trim: rules.parse_allergy_line strips ALL
-    # whitespace (tabs, \r from CRLF payloads), trim only spaces
-    substance = strip_ws(F.regexp_replace(F.col("line"), _BULLET, ""))
-    norm = F.trim(F.regexp_replace(F.lower(substance), f"{PY_WS}+", " "))
-    return (
-        lines.select(
-            "conv_id", "visit_id",
-            substance.alias("substance"),
-            norm.alias("_norm"),
-            F.col("turn_idx").alias("source_page"),
-            F.col("line_no").alias("source_line_in_turn"),
-        )
-        .filter(
-            (F.col("substance") != "")
-            & ~F.col("_norm").isin(*sorted(rules.ALLERGY_NEGATIONS))
-        )
-        .drop("_norm")
-    )
-
-
-def _plan_category_expr(action):
-    low = F.lower(action)
-    expr = F.lit("other")
-    for key, cat in reversed(rules.PLAN_CATEGORY_RULES):
-        expr = F.when(low.contains(key), F.lit(cat)).otherwise(expr)
-    return expr
+    """ALLERGIES section lines -> substance strings, bullets stripped and
+    no-allergy markers dropped (rules.parse_allergy_line)."""
+    return _parsed_lines(turns, "ALLERGIES", _allergy, _ALLERGY_FIELDS)
 
 
 def extract_plan_items(turns: DataFrame) -> DataFrame:
     """PLAN section lines -> PlanItem rows with the ordered-keyword
-    category (rules.PLAN_CATEGORY_RULES; enums.py PlanCategory)."""
-    lines = _section_lines(turns, ("PLAN",))
-    # strip_ws matches rules.parse_plan_line's .strip() (see allergies)
-    action = strip_ws(F.regexp_replace(F.col("line"), _BULLET, ""))
-    return (
-        lines.select(
-            "conv_id", "visit_id",
-            action.alias("action"),
-            _plan_category_expr(action).alias("category"),
-            F.col("turn_idx").alias("source_page"),
-            F.col("line_no").alias("source_line_in_turn"),
-        )
-        .filter(F.col("action") != "")
-    )
+    category (rules.parse_plan_line)."""
+    return _parsed_lines(turns, "PLAN", _plan, _PLAN_FIELDS)
 
 
 def extract_visit_texts(turns: DataFrame) -> DataFrame:
@@ -247,26 +211,3 @@ def extract_visit_texts(turns: DataFrame) -> DataFrame:
         F.col("turn_idx").alias("source_page"),
         F.col("sec.start_line").alias("source_line_in_turn"),
     ).filter(F.col("text") != "")
-
-
-def visit_text_fields(turns: DataFrame) -> DataFrame:
-    """Pivoted per-visit form: (conv_id, visit_id, reason_for_visit,
-    history_of_present_illness, assessment) — document-order '\\n'
-    concatenation when a field spans several turns."""
-    rows = extract_visit_texts(turns)
-    ordered = F.struct("source_page", "source_line_in_turn",
-                       F.col("text").alias("t"))
-    agg = rows.groupBy("conv_id", "visit_id").agg(*[
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.when(F.col("field") == f, ordered))
-                ),
-                lambda s: s["t"],
-            ),
-            "\n",
-        ).alias(f)
-        for f in ("reason_for_visit", "history_of_present_illness",
-                  "assessment")
-    ])
-    return agg

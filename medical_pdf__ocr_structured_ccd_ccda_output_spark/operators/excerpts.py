@@ -8,9 +8,8 @@ is a 60-char window starting 10 chars before the hit.
 Spark design: entities ⨝ lines as an equi-join on conv_id with a
 ``contains`` residual, deduped to the first hit per entity with a
 min-by aggregate over line number — instead of the reference's
-O(entities × lines) nested Python loop.  Line numbering follows the
-reference: lines of the per-conversation combined text, i.e. a running
-line offset across turns in turn order.
+O(entities × lines) nested Python loop.  The caller supplies the
+numbered (conv_id, line_no, line) rows.
 """
 
 from __future__ import annotations
@@ -18,31 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.cleaning import strip_ws
-
-
-def conversation_lines(turns_with_visits: DataFrame) -> DataFrame:
-    """(conv_id, line_no, line): document-order line numbering across the
-    conversation's cleaned turns.  The cross-turn offset is a running sum
-    window over per-turn line counts — cheap (the window runs on per-turn
-    rows, not per-line rows); the explode happens after."""
-    per_turn = turns_with_visits.select(
-        "conv_id", "turn_idx", "ts",
-        F.split(F.col("text_clean"), "\n").alias("_lines"),
-    )
-    w = (
-        Window.partitionBy("conv_id")
-        .orderBy("turn_idx", "ts")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    per_turn = per_turn.withColumn(
-        "_offset", F.coalesce(F.sum(F.size("_lines")).over(w), F.lit(0))
-    )
-    pos_line = F.posexplode(F.col("_lines")).alias("pos", "line")
-    return per_turn.select("conv_id", "turn_idx", "_offset", pos_line).select(
-        "conv_id", "turn_idx",
-        (F.col("_offset") + F.col("pos") + 1).cast("int").alias("line_no"),
-        "line",
-    )
 
 
 def enrich_excerpts(entities: DataFrame, lines: DataFrame,

@@ -66,15 +66,22 @@ def _return_type(with_sections: bool) -> T.StructType:
     return T.StructType([f for f in FIELDS.fields if f.name != "sections"])
 
 
-def rules_udf(fn: Callable[[str | None], object],
-              return_type: T.DataType) -> Callable[[Column], Column]:
+def rules_udf(fn: Callable[..., object],
+              return_type: T.DataType) -> Callable[..., Column]:
     """A scalar Arrow UDF that maps ``fn`` (a ``rules.py`` function of
-    one text) over each Arrow batch of a text column: one Python call
-    per row, one ``pa.array`` per batch.  Nulls reach ``fn`` as None."""
+    N values) over each Arrow batch of N columns: one Python call per
+    row, one ``pa.array`` per batch.  Nulls reach ``fn`` as None.
+
+    Evaluate each call once per row: a filter on the UDF's result
+    column is pushed below the projection that computes it, and the
+    UDF then runs twice, in two ArrowEvalPython nodes with a Python
+    worker each.  A rule that keeps or drops rows returns a 0-or-1
+    element array to explode instead."""
     arrow_type = to_arrow_type(return_type)
 
-    def run(text: pa.Array) -> pa.Array:
-        return pa.array([fn(t) for t in text.to_pylist()], type=arrow_type)
+    def run(*cols: pa.Array) -> pa.Array:
+        rows = zip(*(c.to_pylist() for c in cols))
+        return pa.array([fn(*r) for r in rows], type=arrow_type)
 
     return F.arrow_udf(run, return_type)
 

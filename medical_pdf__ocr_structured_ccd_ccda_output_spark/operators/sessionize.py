@@ -45,7 +45,14 @@ TURN_ORDER = ["turn_idx", "ts"]
 
 def encounter_type_expr(text: Column) -> Column:
     """Ordered first-match keyword scan -> EncounterType enum value
-    (rules.ENCOUNTER_TYPE_RULES; 'unknown' default per enums.py:16-22)."""
+    (rules.ENCOUNTER_TYPE_RULES; 'unknown' default per enums.py:16-22).
+
+    The one JVM twin of a rules.py function (rules.infer_encounter_type,
+    pinned to it by the encounter_type oracle and tests): visit_rollup
+    evaluates it per turn in front of its aggregate, and an
+    ArrowEvalPython node there does not pass on the cached turns'
+    conv_id partitioning, so a UDF would add an Exchange
+    hashpartitioning(conv_id, visit_id) and a Spark job to job.main."""
     low = F.lower(text)
     expr = F.lit("unknown")
     for key, enc in reversed(rules.ENCOUNTER_TYPE_RULES):

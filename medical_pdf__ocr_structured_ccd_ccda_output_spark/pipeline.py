@@ -13,7 +13,7 @@ Shuffle budget (the thing that matters at 100 TB):
 Lineage + metrics ride on the same DataFrames (no extra scans besides
 the small aggregates).
 
-The plan is built by two builders, and ``run_pipeline`` is simply
+The plan is built by two builders; the whole pipeline is
 ``build_outputs(spark, prepare_turns(...))``:
   prepare_turns  quality aggregate, quarantine, extract, sessionize:
                  everything the extracted_turns sink needs (TurnsStage)
@@ -29,8 +29,9 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from . import rules
 from .operators.dedup import dedup_all, dedup_log, kind_output, split_dedup_output
 from .operators.entities import (
     extract_allergies,
@@ -41,7 +42,7 @@ from .operators.entities import (
     extract_visit_texts,
     extract_vitals,
 )
-from .operators.extract import extract_turns
+from .operators.extract import extract_turns, rules_udf
 from .operators.rollups import (
     data_quality_rollup,
     document_rollup,
@@ -83,9 +84,8 @@ def conversation_quality(transcripts: DataFrame) -> DataFrame:
     """P1 ingest validation (pdf_service.py:28-99 analog) as one map-side-
     combinable aggregate per conversation: turn-count bounds, total size,
     emptiness, encrypted marker.  Returns (conv_id, n_turns, total_chars,
-    n_nonempty, warnings array, quarantined bool); warning order matches
-    rules.conversation_warnings."""
-    from . import rules
+    n_nonempty, warnings array, quarantined bool); the warnings are
+    rules.conversation_warnings of the aggregate."""
     from .functions.cleaning import PY_NONWS as _PY_NONWS
 
     txt = F.coalesce(F.col("text"), F.lit(""))
@@ -99,14 +99,9 @@ def conversation_quality(transcripts: DataFrame) -> DataFrame:
         F.count(F.when(txt.rlike(_PY_NONWS), 1)).alias("n_nonempty"),
         F.max(txt.contains(rules.ENCRYPTED_MARKER)).alias("_has_encrypted"),
     )
-    warnings = F.array_compact(F.array(
-        F.when(F.col("_has_encrypted"), F.lit("encrypted")),
-        F.when(F.col("n_turns") > rules.MAX_TURNS_PER_CONV,
-               F.lit("too_many_pages")),
-        F.when(F.col("total_chars") > rules.MAX_CONV_CHARS,
-               F.lit("file_too_large")),
-        F.when(F.col("n_nonempty") == 0, F.lit("no_pages")),
-    ))
+    warnings = rules_udf(rules.conversation_warnings,
+                         T.ArrayType(T.StringType(), False))(
+        "n_turns", "total_chars", "n_nonempty", "_has_encrypted")
     return agg.select(
         "conv_id", "n_turns", "total_chars", "n_nonempty",
         warnings.alias("warnings"),
@@ -114,14 +109,13 @@ def conversation_quality(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def apply_quarantine(transcripts: DataFrame,
-                     quality: DataFrame | None = None
+def apply_quarantine(transcripts: DataFrame, quality: DataFrame
                      ) -> tuple[DataFrame, DataFrame]:
-    """(clean_turns, quarantine_rows).  The quarantined-conversation list
-    is expected to be tiny relative to the corpus, so the turn-level
+    """(clean_turns, quarantine_rows) for ``quality``, the
+    conversation_quality of ``transcripts``.  The quarantined-conversation
+    list is expected to be tiny relative to the corpus, so the turn-level
     filter is a broadcast anti/semi join on conv_id — no extra shuffle
     of the big side."""
-    quality = quality if quality is not None else conversation_quality(transcripts)
     bad = quality.filter(F.col("quarantined")).select("conv_id")
     clean = transcripts.join(F.broadcast(bad), "conv_id", "left_anti")
     return clean, quality.filter(F.col("quarantined"))
@@ -162,21 +156,6 @@ def prepare_turns(transcripts: DataFrame,
     return TurnsStage(turns, quality, quarantine)
 
 
-def run_pipeline(spark: SparkSession, transcripts: DataFrame,
-                 run_id: str = "run_0",
-                 skew_aware: bool = False,
-                 include_raw_text: bool = True,
-                 with_validation: bool = True,
-                 with_narrative: bool = False,
-                 max_text_chars: int | None = None) -> PipelineResult:
-    stage = prepare_turns(transcripts, skew_aware=skew_aware,
-                          with_validation=with_validation)
-    return build_outputs(spark, stage, run_id=run_id,
-                         include_raw_text=include_raw_text,
-                         with_narrative=with_narrative,
-                         max_text_chars=max_text_chars)
-
-
 def build_outputs(spark: SparkSession, stage: TurnsStage,
                   run_id: str = "run_0",
                   include_raw_text: bool = True,
@@ -190,13 +169,11 @@ def build_outputs(spark: SparkSession, stage: TurnsStage,
                           max_text_chars=max_text_chars)
     # schema-validation warnings stage (raising Pydantic validators ->
     # flagged rows; canonical_schema.py:182-208,286-292)
-    from .functions.validate import visit_warnings_expr
-
+    warnings = rules_udf(rules.visit_warnings,
+                         T.ArrayType(T.StringType(), False))
     visits = visits.withColumn(
         "schema_warnings",
-        visit_warnings_expr(
-            F.col("visit_id"), F.col("confidence"), F.col("turn_count")
-        ),
+        warnings(F.col("visit_id"), F.col("confidence"), F.col("turn_count")),
     )
     data_quality = data_quality_rollup(turns)
     docs = document_rollup(turns, include_combined_text=include_raw_text,

@@ -57,3 +57,21 @@ def read_schema_columns(df: DataFrame) -> list[str]:
     for m in re.finditer(r"ReadSchema: struct<([^>]*)>", plan):
         cols.extend(p.split(":")[0] for p in m.group(1).split(",") if p)
     return cols
+
+
+def arrow_udf_calls(df: DataFrame) -> list[list[str]]:
+    """The Python UDF calls of each ArrowEvalPython node of the executed
+    plan, one list per node.  A call prints as ``name(args)#resultId``,
+    so the same call in two nodes is one UDF evaluated twice per row."""
+    nodes, calls = [df._jdf.queryExecution().executedPlan()], []
+    while nodes:
+        node = nodes.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            nodes.append(node.executedPlan())
+            continue
+        if node.nodeName() == "ArrowEvalPython":
+            udfs = node.udfs()
+            calls.append([udfs.apply(i).toString() for i in range(udfs.size())])
+        kids = node.children()
+        nodes.extend(kids.apply(i) for i in range(kids.size()))
+    return calls

@@ -10,7 +10,12 @@ column, written like any other sink.  No document id from wall-clock
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from functools import partial
+
+from pyspark.sql import Column, DataFrame, functions as F, types as T
+
+from .. import rules
+from ..operators.extract import rules_udf
 
 HL7_NAMESPACE = "urn:hl7-org:v3"
 ROOT_OID = "2.16.840.1.113883.1.3"
@@ -18,6 +23,12 @@ LOINC_SYSTEM = "2.16.840.1.113883.6.1"
 SNOMED_SYSTEM = "2.16.840.1.113883.6.96"
 GENDER_CODE_SYSTEM = "2.16.840.1.113883.5.1"
 PATIENT_ID_ROOT = "2.16.840.1.113883.3.1"
+
+# rules.find_code's (code, display) and rules.parse_name's dict
+CODE = T.StructType([T.StructField("code", T.StringType()),
+                      T.StructField("display", T.StringType())])
+NAME = T.StructType([T.StructField("given", T.StringType()),
+                     T.StructField("family", T.StringType())])
 
 
 def xml_escape(col: Column) -> Column:
@@ -153,12 +164,10 @@ def _section_xml(code: str, display: str, title: str, body: Column) -> Column:
 def _coded_entry(text_col: Column, code_map: list[tuple[str, str]],
                  system: str) -> Column:
     """First-match substring code lookup -> <entry> element or ''
-    (xml_renderer_v2.py:664-676).  The lookup itself is F11's
-    code_lookup_expr — one implementation of the first-match-wins
-    semantics, this wrapper only formats the <entry>."""
-    from ..functions.lookup import code_lookup_expr
-
-    hit = code_lookup_expr(text_col, code_map)
+    (xml_renderer_v2.py:664-676).  The lookup is rules.find_code; this
+    wrapper only formats the <entry>."""
+    hit = rules_udf(partial(rules.find_code, code_map=code_map),
+                    CODE)(text_col)
     return F.when(
         hit.isNotNull(),
         F.format_string(
@@ -170,8 +179,6 @@ def _coded_entry(text_col: Column, code_map: list[tuple[str, str]],
 
 
 def _problem_row() -> Column:
-    from .. import rules
-
     item_text = F.concat(
         xml_escape(F.col("problem")),
         F.when(F.col("icd10_code").isNotNull(),
@@ -223,8 +230,6 @@ _RESULT_HEADER = (
 
 
 def _result_row() -> Column:
-    from .. import rules
-
     flag = F.when(
         F.col("abnormal_flag").isNull() | (F.col("abnormal_flag") == ""),
         F.lit("normal"),
@@ -356,7 +361,6 @@ def demographics_xml(patients: DataFrame) -> DataFrame:
     name (given/family split, xml_renderer.py:105-170), birthTime and
     administrativeGenderCode; UNK nullFlavors when absent."""
     from ..functions.cleaning import strip_ws
-    from ..functions.lookup import parse_name_expr
 
     pid = F.when(
         F.col("patient_id").isNotNull(),
@@ -364,7 +368,7 @@ def demographics_xml(patients: DataFrame) -> DataFrame:
                         xml_escape(F.col("patient_id").cast("string")),
                         F.lit(PATIENT_ID_ROOT)),
     ).otherwise(F.lit('<id nullFlavor="UNK"/>'))
-    parsed = parse_name_expr(F.col("patient_name"))
+    parsed = rules_udf(rules.parse_name, NAME)(F.col("patient_name"))
     name = F.when(
         F.col("patient_name").isNotNull()
         & (strip_ws(F.col("patient_name")) != ""),

@@ -763,13 +763,16 @@ KNOWN_VARIANTS = {
 }
 
 
-def mark_unclear(best_guess: str | None, confidence: float) -> str:
-    if confidence < 0.3 or not best_guess:
+def mark_unclear(best_guess: str | None, confidence: float | None) -> str:
+    """A missing confidence is not below the 0.3 cut: SQL's three-valued
+    ``confidence < 0.3`` is null there, so the guess is kept."""
+    if (confidence is not None and confidence < 0.3) or not best_guess:
         return "[ILLEGIBLE]"
     return f"[UNCLEAR: {best_guess}]"
 
 
-def term_variants(term: str, dictionary: list[str] | None = None) -> dict:
+def term_variants(term: str | None,
+                  dictionary: list[str] | None = None) -> dict:
     """Variant preservation (variant_preservation.py:126-168): known-
     variant dict first, then difflib close matches (n=3, cutoff=0.8)
     when the term is not already in the dictionary; order-preserving
@@ -777,7 +780,7 @@ def term_variants(term: str, dictionary: list[str] | None = None) -> dict:
     from difflib import get_close_matches
 
     alternatives: list[str] = []
-    tl = term.lower()
+    tl = (term or "").lower()
     if tl in KNOWN_VARIANTS:
         alternatives.extend(KNOWN_VARIANTS[tl])
     if dictionary and tl not in [d.lower() for d in dictionary]:
@@ -813,9 +816,10 @@ LOINC_CODES = [
 ]
 
 
-def parse_name(full_name: str) -> dict:
-    """Last token = family, rest = given (xml_renderer_v2.py:653-662)."""
-    parts = full_name.strip().split()
+def parse_name(full_name: str | None) -> dict:
+    """Last token = family, rest = given (xml_renderer_v2.py:653-662).
+    A blank or missing name keeps itself as the family name."""
+    parts = (full_name or "").split()
     if len(parts) == 1:
         return {"given": "", "family": parts[0]}
     if len(parts) >= 2:
@@ -823,9 +827,10 @@ def parse_name(full_name: str) -> dict:
     return {"given": "", "family": full_name}
 
 
-def find_code(text: str, code_map: list[tuple[str, str]]) -> tuple | None:
+def find_code(text: str | None,
+              code_map: list[tuple[str, str]]) -> tuple | None:
     """Ordered first-match substring lookup (xml_renderer_v2.py:664-676)."""
-    low = text.lower()
+    low = (text or "").lower()
     for key, code in code_map:
         if key in low:
             return (code, key.title())
@@ -891,13 +896,13 @@ BP_SYSTOLIC_RANGE = (40.0, 300.0)
 BP_DIASTOLIC_RANGE = (20.0, 200.0)
 
 
-def parse_vital_line(line: str) -> dict | None:
+def parse_vital_line(line: str | None) -> dict | None:
     """One vitals-section line -> canonical vital dict, or None.
 
     blood_pressure needs the slash form and carries (systolic, diastolic,
     bp_valid) with the schema's 40-300 / 20-200 range check; every other
     vital carries a single `value`.  Unknown labels are skipped."""
-    m = _VITAL_LINE_RE.match(line)
+    m = _VITAL_LINE_RE.match(line or "")
     if not m:
         return None
     label, v1, v2, unit = m.groups()
@@ -930,11 +935,11 @@ ALLERGY_NEGATIONS = {"none", "nkda", "no known allergies",
                      "no known drug allergies"}
 
 
-def parse_allergy_line(line: str) -> str | None:
+def parse_allergy_line(line: str | None) -> str | None:
     """Allergy-section line -> substance string (bullets stripped), or
     None for empties / explicit no-allergy markers (allergies are plain
     strings in the schema, canonical_schema.py:174)."""
-    s = re.sub(BULLET_PREFIX_PATTERN, "", line).strip()
+    s = re.sub(BULLET_PREFIX_PATTERN, "", line or "").strip()
     if not s or normalize_term(s) in ALLERGY_NEGATIONS:
         return None
     return s
@@ -965,10 +970,10 @@ def categorize_plan_action(action: str) -> str:
     return "other"
 
 
-def parse_plan_line(line: str) -> dict | None:
+def parse_plan_line(line: str | None) -> dict | None:
     """Plan-section line -> {action, category} (PlanItem,
     canonical_schema.py:140-145), or None for empties."""
-    s = re.sub(BULLET_PREFIX_PATTERN, "", line).strip()
+    s = re.sub(BULLET_PREFIX_PATTERN, "", line or "").strip()
     if not s:
         return None
     return {"action": s, "category": categorize_plan_action(s)}
@@ -1062,16 +1067,20 @@ SUPPORTED_SCHEMA_VERSION = "2.0"
 
 
 def visit_warnings(visit_id: str | None, confidence: float | None,
-                   page_count: int,
-                   schema_version: str = SUPPORTED_SCHEMA_VERSION) -> list[str]:
+                   page_count: int | None,
+                   schema_version: str | None = SUPPORTED_SCHEMA_VERSION
+                   ) -> list[str]:
+    """Ordered warning codes for one visit row; empty = valid.  A
+    missing visit_id or confidence is flagged; a missing page count or
+    schema version is not (neither can be compared)."""
     w = []
     if not (visit_id or "").startswith("visit_"):
         w.append("invalid_visit_id")
     if confidence is None or confidence < 0.0 or confidence > 1.0:
         w.append("confidence_out_of_range")
-    if page_count < 1:
+    if page_count is not None and page_count < 1:
         w.append("no_source_pages")
-    if schema_version != SUPPORTED_SCHEMA_VERSION:
+    if schema_version is not None and schema_version != SUPPORTED_SCHEMA_VERSION:
         w.append("unsupported_schema_version")
     return w
 

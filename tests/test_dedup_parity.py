@@ -14,7 +14,6 @@ from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.dedup import (
     split_dedup_output,
 )
 from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.excerpts import (
-    conversation_lines,
     enrich_excerpts,
 )
 
@@ -247,13 +246,19 @@ def test_fused_dedup_matches_per_kind(spark):
 
 
 def test_excerpt_enrichment(spark):
-    from pyspark.sql import functions as F
     from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.extract import extract_turns
     from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.sessionize import assign_visits
 
     df = fixtures.transcripts_spark_df(spark, 20, seed=42)
     turns = assign_visits(extract_turns(df, with_sections=False))
-    lines = conversation_lines(turns).cache()
+    # lines of each conversation's cleaned turns, numbered in turn order
+    numbered, seen = [], {}
+    for r in turns.orderBy("conv_id", "turn_idx").collect():
+        for line in r["text_clean"].split("\n"):
+            seen[r["conv_id"]] = n = seen.get(r["conv_id"], 0) + 1
+            numbered.append((r["conv_id"], n, line))
+    lines = spark.createDataFrame(
+        numbered, "conv_id string, line_no int, line string")
 
     entities = spark.createDataFrame(
         [("conv_000001", "visit_001", "Metformin"),
@@ -266,10 +271,7 @@ def test_excerpt_enrichment(spark):
     assert len(out) == 3
 
     # oracle: same line universe, reference find_excerpt rule
-    conv_lines = [
-        r["line"] for r in lines.filter(F.col("conv_id") == "conv_000001")
-        .orderBy("line_no").collect()
-    ]
+    conv_lines = [line for c, _, line in numbered if c == "conv_000001"]
     want = rules.find_excerpt(conv_lines, "Metformin")
     got = out["Metformin"]
     if want:

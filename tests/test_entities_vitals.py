@@ -192,7 +192,7 @@ def test_conversation_quarantine(spark):
     assert got["enc"]["warnings"] == ["encrypted"]
     assert got["long"]["warnings"] == ["too_many_pages"]
 
-    clean, quar = pipeline.apply_quarantine(tr)
+    clean, quar = pipeline.apply_quarantine(tr, quality)
     assert {r["conv_id"] for r in clean.select("conv_id").distinct().collect()} == {"ok"}
     assert quar.count() == 4
 
@@ -245,9 +245,11 @@ def test_demographics_xml(spark):
     assert '<administrativeGenderCode code="U"' in got["c2"]
 
 
-def test_visit_schema_warnings_parity(spark):
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.validate import (
-        visit_warnings_expr,
+def test_visit_schema_warnings_parity(spark, turns):
+    from pyspark.sql import types as T
+
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.extract import (
+        rules_udf,
     )
     cases = [
         ("visit_001", 0.5, 3, "2.0"),
@@ -256,18 +258,32 @@ def test_visit_schema_warnings_parity(spark):
         ("visit_001", None, 0, "2.0"),
         ("visit_001", 0.5, 3, "1.0"),
         (None, -0.1, 0, "1.0"),
+        ("visit_001", 0.5, None, None),
     ]
     df = spark.createDataFrame(
         cases, "visit_id string, confidence double, page_count int, ver string")
+    warnings = rules_udf(rules.visit_warnings,
+                         T.ArrayType(T.StringType(), False))
     out = df.select(
         "visit_id", "confidence", "page_count", "ver",
-        visit_warnings_expr(F.col("visit_id"), F.col("confidence"),
-                            F.col("page_count"), F.col("ver")).alias("w"),
+        warnings(F.col("visit_id"), F.col("confidence"),
+                 F.col("page_count"), F.col("ver")).alias("w"),
     ).collect()
+    assert len(out) == len(cases)
     for r in out:
         want = rules.visit_warnings(r["visit_id"], r["confidence"],
                                     r["page_count"], r["ver"])
         assert list(r["w"]) == want, (r["visit_id"], r["w"], want)
+    # a missing page count or schema version cannot be compared
+    assert rules.visit_warnings("visit_001", 0.5, None, None) == []
+
+    # build_outputs' visit_spans carry the rule's warnings per visit
+    visits = pipeline.build_outputs(
+        spark, pipeline.TurnsStage(turns)).visit_spans.collect()
+    assert visits
+    for v in visits:
+        assert list(v["schema_warnings"]) == rules.visit_warnings(
+            v["visit_id"], v["confidence"], v["turn_count"])
 
 
 def test_extract_visit_texts(turns):
@@ -295,9 +311,6 @@ def test_extract_visit_texts(turns):
     assert fields["assessment"] == "Likely DI."
     # `HEADER: inline` form keeps the inline content as the body
     assert fields["reason_for_visit"] == "polyuria"
-    piv = entities.visit_text_fields(t2).first()
-    assert piv["assessment"] == "Likely DI."
-    assert piv["reason_for_visit"] == "polyuria"
 
     secs = rx.entity_sections(visit_texts=entities.extract_visit_texts(t2))
     xml = secs.first()["sections_xml"]

@@ -4,19 +4,20 @@ Exact membership is DuckDB-value-hash-oracled through the driver
 contract (q_hash_split); this file pins the properties the oracle
 doesn't express:
 * leakage-freedom — every doc of a source shares one split;
-* sample nesting — the 1% sample is a subset of the 10% sample;
+* sample nesting — corpus_mix's 1% sample is a subset of its 10%
+  sample;
 * partitioning-independence — membership is a pure function of the
   key, unchanged under repartition (the failure mode of rand()/
   sampleBy sampling);
 * plausible proportions at sf0.1 (source-level split, so doc-level
   fractions wobble with source sizes);
-* zero-shuffle plans for both operators.
+* a zero-shuffle split plan.
 """
 
 from pyspark.sql import functions as F
 
 from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.corpus import (
-    deterministic_sample,
+    corpus_mix,
     hash_split,
 )
 
@@ -33,14 +34,17 @@ def test_split_is_leakage_free_and_total(spark):
     assert out.filter(~F.col("split").isin("train", "val", "test")).count() == 0
 
 
+def _sample(d, rate):
+    """Every source kept at ``rate``."""
+    weights = {r["source"]: rate for r in d.select("source").distinct().collect()}
+    return {r["doc_id"] for r in corpus_mix(d, weights).collect()}
+
+
 def test_samples_nest_and_are_repartition_stable(spark):
     d = _docs(spark)
-    s10 = {r["doc_id"] for r in deterministic_sample(d, 0.10).collect()}
-    s01 = {r["doc_id"] for r in deterministic_sample(d, 0.01).collect()}
+    s10, s01 = _sample(d, 0.10), _sample(d, 0.01)
     assert s01 <= s10
-    s10_rep = {r["doc_id"]
-               for r in deterministic_sample(d.repartition(13), 0.10).collect()}
-    assert s10_rep == s10
+    assert _sample(d.repartition(13), 0.10) == s10
 
 
 def test_split_proportions_at_sf01(spark):
@@ -54,6 +58,5 @@ def test_split_proportions_at_sf01(spark):
 
 def test_zero_shuffle_plans(spark):
     d = _docs(spark)
-    for df in (hash_split(d), deterministic_sample(d, 0.1)):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
+    plan = hash_split(d)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan

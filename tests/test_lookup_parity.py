@@ -1,13 +1,25 @@
-"""Parity tests for functions/lookup.py (SURVEY F3, F8-F11)
-against the pure-Python reference rules (rules.py), which mirror
+"""The lookup rules (SURVEY F8-F11) at their Spark call sites, against
+the pure-Python rules they run (rules.py, which mirror
 reference/src/renderers/xml_renderer_v2.py:653-676 and
-reference/src/services/variant_preservation.py:126-216.
+reference/src/services/variant_preservation.py:126-216).
+
+Each call site runs its rule through operators.extract.rules_udf, so
+what is checked here is the plumbing around the rule: nulls reaching
+the rule as None, several columns zipped into one call, the result
+typed as the call site declares it, and the XML the renderer wraps
+around it.
 """
 
-from pyspark.sql import functions as F
+from functools import partial
 
+from pyspark.sql import functions as F, types as T
+
+import __spark_entry__ as entry
 from medical_pdf__ocr_structured_ccd_ccda_output_spark import rules
-from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions import lookup
+from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.extract import (
+    rules_udf,
+)
+from medical_pdf__ocr_structured_ccd_ccda_output_spark.renderers import xml as rx
 
 NAMES = [
     "John Smith",
@@ -17,20 +29,30 @@ NAMES = [
     "",
     "   ",
     "a b",
+    None,
 ]
 
 
+def name_xml(name):
+    """demographics_xml's <name> element, from rules.parse_name."""
+    if name is None or not name.strip():
+        return '<name nullFlavor="UNK"/>'
+    p = rules.parse_name(name)
+    given = f"<given>{p['given']}</given>" if p["given"] else ""
+    family = f"<family>{p['family']}</family>" if p["family"] else ""
+    return f"<name>{given}{family}</name>"
+
+
 def test_parse_name_parity(spark):
-    df = spark.createDataFrame([(n,) for n in NAMES], ["full_name"])
-    parsed = lookup.parse_name_expr(F.col("full_name"))
-    rows = (
-        df.select("full_name", parsed["given"].alias("g"), parsed["family"].alias("f"))
-        .collect()
+    pats = spark.createDataFrame(
+        [(str(i), None, n, None, None) for i, n in enumerate(NAMES)],
+        "conv_id string, patient_id string, patient_name string, "
+        "dob date, sex string",
     )
-    for r in rows:
-        exp = rules.parse_name(r["full_name"])
-        assert r["g"] == exp["given"], r["full_name"]
-        assert r["f"] == exp["family"], r["full_name"]
+    got = {r["conv_id"]: r["record_target_xml"]
+           for r in rx.demographics_xml(pats).collect()}
+    for i, n in enumerate(NAMES):
+        assert name_xml(n) in got[str(i)], repr(n)
 
 
 CODE_TEXTS = [
@@ -41,49 +63,54 @@ CODE_TEXTS = [
     "nothing to see here",
     "glucose level 185",
     "24-hour urine volume collected",
+    "glucose level 185",                     # a duplicate keeps its row
+    None,
 ]
 
 
-def test_snomed_lookup_parity(spark):
-    df = spark.createDataFrame([(t,) for t in CODE_TEXTS], ["text"])
-    hit = lookup.code_lookup_expr(F.col("text"), rules.SNOMED_CODES)
-    rows = df.select(
-        "text", hit["code"].alias("code"), hit["display"].alias("display")
-    ).collect()
-    for r in rows:
-        exp = rules.find_code(r["text"], rules.SNOMED_CODES)
-        if exp is None:
-            assert r["code"] is None, r["text"]
-        else:
-            assert (r["code"], r["display"]) == exp, r["text"]
+def entry_xml(text, code_map, system):
+    """_coded_entry's <entry> element, from rules.find_code."""
+    hit = rules.find_code(text, code_map)
+    if hit is None:
+        return ""
+    return (f'<entry><observation><code code="{hit[0]}" '
+            f'displayName="{hit[1]}" codeSystem="{system}"/>'
+            f'</observation></entry>')
 
 
-def test_loinc_lookup_join_parity(spark):
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(CODE_TEXTS)], ["id", "text"]
-    )
-    out = lookup.code_lookup_join(df, "text", rules.LOINC_CODES, out_col="hit")
-    rows = {r["id"]: r for r in out.collect()}
-    assert len(rows) == len(CODE_TEXTS)  # multiplicity preserved
+def _coded_entries(spark, code_map, system):
+    df = spark.createDataFrame(list(enumerate(CODE_TEXTS)),
+                               "id int, text string")
+    out = df.select("id", rx._coded_entry(F.col("text"), code_map, system)
+                    .alias("e"))
+    rows = {r["id"]: r["e"] for r in out.collect()}
+    assert len(rows) == len(CODE_TEXTS)
     for i, t in enumerate(CODE_TEXTS):
-        exp = rules.find_code(t, rules.LOINC_CODES)
-        got = rows[i]["hit"]
-        if exp is None:
-            assert got is None, t
-        else:
-            assert (got["code"], got["display"]) == exp, t
+        assert rows[i] == entry_xml(t, code_map, system), t
+
+
+def test_snomed_lookup_parity(spark):
+    _coded_entries(spark, rules.SNOMED_CODES, rx.SNOMED_SYSTEM)
+
+
+def test_loinc_lookup_parity(spark):
+    _coded_entries(spark, rules.LOINC_CODES, rx.LOINC_SYSTEM)
 
 
 def test_mark_unclear_parity(spark):
     cases = [("diabetes", 0.5), ("diabetes", 0.29), (None, 0.9), ("", 0.9),
-             ("x", 0.3)]
-    df = spark.createDataFrame(cases, ["guess", "conf"])
+             ("x", 0.3), ("x", None), (None, None)]
+    df = spark.createDataFrame(cases, "guess string, conf double")
+    mark = rules_udf(rules.mark_unclear, T.StringType())
     rows = df.select(
-        "guess", "conf",
-        lookup.mark_unclear_expr(F.col("guess"), F.col("conf")).alias("m"),
+        "guess", "conf", mark(F.col("guess"), F.col("conf")).alias("m"),
     ).collect()
+    assert len(rows) == len(cases)
     for r in rows:
         assert r["m"] == rules.mark_unclear(r["guess"], r["conf"])
+    # a missing confidence keeps the guess, as the SQL oracle's
+    # three-valued `confidence < 0.3` does
+    assert rules.mark_unclear("x", None) == "[UNCLEAR: x]"
 
 
 DICTIONARY = ["polydipsia", "hypoglycaemia", "glucose", "haemoglobin",
@@ -96,29 +123,18 @@ TERMS = [
     "glucos",         # typo -> close match only
     "oesophagus",     # known variant
     "zzzz",           # nothing
+    None,
 ]
 
 
 def test_variant_lookup_parity(spark):
-    df = spark.createDataFrame([(t,) for t in TERMS], ["term"])
-    out = lookup.variant_lookup(df, "term", dictionary=DICTIONARY)
-    rows = {r["term"]: r for r in out.collect()}
-    for t in TERMS:
+    df = spark.createDataFrame(list(enumerate(TERMS)), "id int, term string")
+    variants = rules_udf(partial(rules.term_variants, dictionary=DICTIONARY),
+                         entry._VARIANTS)
+    rows = {r["id"]: r["v"] for r in
+            df.select("id", variants(F.col("term")).alias("v")).collect()}
+    for i, t in enumerate(TERMS):
         exp = rules.term_variants(t, DICTIONARY)
-        assert list(rows[t]["alternatives"]) == exp["alternatives"], t
-        assert rows[t]["decision"] == exp["decision"], t
-
-
-def test_similarity_udf_parity(spark):
-    pairs = [
-        ("Hypertension", "HTN"),
-        ("Type 2 Diabetes", "Type 2 Diabetes Mellitus"),
-        ("aspirin", "Aspirin"),
-        ("", "x"),
-        ("metformin 500mg", "metformin 500 mg"),
-    ]
-    df = spark.createDataFrame(pairs, ["a", "b"])
-    ratio = lookup.similarity_udf()
-    rows = df.select("a", "b", ratio(F.col("a"), F.col("b")).alias("r")).collect()
-    for r in rows:
-        assert r["r"] == rules.similarity(r["a"], r["b"]), (r["a"], r["b"])
+        assert list(rows[i]["alternatives"]) == exp["alternatives"], t
+        assert rows[i]["decision"] == exp["decision"], t
+    assert rows[len(TERMS) - 1]["decision"] == "raw_preserved"

@@ -115,7 +115,8 @@ def test_dedup_carries_line_ordinal(spark):
 
 def test_pipeline_with_narrative(spark):
     from medical_pdf__ocr_structured_ccd_ccda_output_spark.pipeline import (
-        run_pipeline,
+        build_outputs,
+        prepare_turns,
     )
 
     t = spark.createDataFrame(
@@ -123,7 +124,7 @@ def test_pipeline_with_narrative(spark):
          ("c1", 1, "ASSESSMENT\n- stable condition")],
         "conv_id string, turn_idx int, text string",
     ).withColumn("ts", F.to_timestamp(F.lit("2024-01-01")))
-    res = run_pipeline(spark, t, with_narrative=True)
+    res = build_outputs(spark, prepare_turns(t), with_narrative=True)
     assert res.narrative is not None
     doc = res.narrative.first()["narrative"]
     assert doc.startswith("MEDICAL RECORD SUMMARY")

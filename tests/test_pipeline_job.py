@@ -6,14 +6,17 @@ import xml.etree.ElementTree as ET
 import pytest
 
 from medical_pdf__ocr_structured_ccd_ccda_output_spark import fixtures
-from medical_pdf__ocr_structured_ccd_ccda_output_spark.pipeline import run_pipeline
+from medical_pdf__ocr_structured_ccd_ccda_output_spark.pipeline import (
+    build_outputs,
+    prepare_turns,
+)
 from medical_pdf__ocr_structured_ccd_ccda_output_spark.sources.manifest import Manifest
 
 
 @pytest.fixture(scope="module")
 def result(spark):
     df = fixtures.transcripts_spark_df(spark, 30, seed=42)
-    return run_pipeline(spark, df, run_id="t")
+    return build_outputs(spark, prepare_turns(df), run_id="t")
 
 
 def test_pipeline_shapes(result):
@@ -32,7 +35,8 @@ def test_pipeline_shapes(result):
 
 def test_pipeline_validation_off(spark):
     df = fixtures.transcripts_spark_df(spark, 10, seed=7)
-    res = run_pipeline(spark, df, run_id="nv", with_validation=False)
+    res = build_outputs(spark, prepare_turns(df, with_validation=False),
+                        run_id="nv")
     assert res.quarantine is None
     assert res.documents.count() == 10
 
@@ -259,7 +263,7 @@ def test_job_spark_job_budget(spark, spark_jobs, small_input, tmp_path):
 
 
 def test_repeat_pipeline_compiles_almost_nothing(spark, small_input):
-    """A second identical run_pipeline write finds its whole-stage
+    """A second identical pipeline write finds its whole-stage
     classes in the codegen cache.  One pipeline generates more distinct
     classes than the default 100-entry cache holds, so before
     session.get_spark sized it (spark.sql.codegen.cache.maxEntries) the
@@ -273,8 +277,8 @@ def test_repeat_pipeline_compiles_almost_nothing(spark, small_input):
         .METRIC_COMPILATION_TIME()
 
     def write_all():
-        res = run_pipeline(spark, spark.read.parquet(
-            os.path.join(small_input, "transcripts.parquet")))
+        res = build_outputs(spark, prepare_turns(spark.read.parquet(
+            os.path.join(small_input, "transcripts.parquet"))))
         sinks = [getattr(res, f.name) for f in fields(res)]
         for df in [s for s in sinks if isinstance(s, DataFrame)] + \
                 list(res.lineage.values()):

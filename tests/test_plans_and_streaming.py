@@ -11,6 +11,7 @@ from medical_pdf__ocr_structured_ccd_ccda_output_spark import fixtures
 from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.extract import extract_turns
 from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.sessionize import assign_visits
 from medical_pdf__ocr_structured_ccd_ccda_output_spark.plans.inspect import (
+    arrow_udf_calls,
     broadcast_join_count,
     has_pushed_filters,
     read_schema_columns,
@@ -75,6 +76,60 @@ def test_sessionize_plans_one_window(spark, tmp_path):
         out = assign_visits(extract_turns(t, with_sections=with_sections))
         assert window_operator_count(out) == 1
         assert shuffle_exchange_count(out) == 1
+
+
+def _calls_in_two_nodes(df) -> list[str]:
+    seen, twice = set(), []
+    for node in arrow_udf_calls(df):
+        for call in set(node):
+            if call in seen:
+                twice.append(call)
+            seen.add(call)
+    return twice
+
+
+def test_sink_plans_evaluate_each_udf_call_once(spark, tmp_path):
+    """No sink of build_outputs evaluates a Python UDF call in two
+    ArrowEvalPython nodes.  withColumn(p, udf(x)).filter(p.isNotNull())
+    has Catalyst push the filter below the projection, and the UDF then
+    runs twice per row, each node with a Python worker of its own; the
+    entity extractors explode a 0-or-1 element array instead.  The
+    shared frames are persisted as job.main persists them, so each sink
+    plan reads the extraction from the cache."""
+    from dataclasses import fields
+
+    from pyspark.sql import DataFrame, types as T
+
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark import rules
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.extract import (
+        rules_udf,
+    )
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark.pipeline import (
+        build_outputs,
+        prepare_turns,
+    )
+
+    p = str(tmp_path / "t.parquet")
+    fixtures.transcripts_spark_df(spark, 10, seed=1).write.parquet(p)
+    t = spark.read.parquet(p)
+    res = build_outputs(spark, prepare_turns(t), with_narrative=True)
+    for df in res.to_persist:
+        df.persist()
+    try:
+        sinks = {f.name: getattr(res, f.name) for f in fields(res)}
+        sinks.update(res.lineage)
+        for name, df in sinks.items():
+            if isinstance(df, DataFrame):
+                assert not _calls_in_two_nodes(df), name
+    finally:
+        for df in res.to_persist:
+            df.unpersist()
+
+    # the shape this guards against is seen
+    udf = rules_udf(rules.parse_plan_line, T.MapType(T.StringType(),
+                                                     T.StringType()))
+    bad = t.withColumn("_p", udf(F.col("text"))).filter(F.col("_p").isNotNull())
+    assert _calls_in_two_nodes(bad)
 
 
 def test_streaming_extraction(spark, tmp_path):

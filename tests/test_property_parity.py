@@ -159,18 +159,20 @@ def test_rule_surface_parity_on_generated_text(docs):
 
 # \xa0/ /\x85/\x1c: Python str.strip()/.split() treat these as
 # whitespace; the Spark exprs must too (PY_WS class, round-3 fix)
-_NAMES = st.text(
+_NAMES = st.one_of(st.none(), st.text(
     alphabet=string.ascii_letters + " .,'-\t\n\x0b\xa0 \x85\x1c", max_size=24
-)
+))
 _GUESS = st.one_of(
     st.none(), st.sampled_from(["", "  ", "metformin", "x"]),
     st.text(alphabet=string.ascii_letters + " ", max_size=10),
 )
 _CONF = st.one_of(
+    st.none(),
     st.sampled_from([0.0, 0.15, 0.29, 0.3, 0.31, 0.75, 1.0]),
     st.floats(min_value=0.0, max_value=1.0, allow_nan=False),
 )
 _CODE_TEXT = st.one_of(
+    st.none(),
     _RAW,
     st.sampled_from([
         "glucose high", "Polyuria noted", "diabetes insipidus workup",
@@ -202,8 +204,8 @@ _VCONF = st.one_of(
           suppress_health_check=[HealthCheck.too_slow])
 @given(st.lists(
     st.tuples(_NAMES, _GUESS, _CONF, _CODE_TEXT, _PATH, _VISIT_ID, _VCONF,
-              st.integers(min_value=-1, max_value=3),
-              st.sampled_from(["2.0", "1.0", ""])),
+              st.one_of(st.none(), st.integers(min_value=-1, max_value=3)),
+              st.sampled_from(["2.0", "1.0", "", None])),
     min_size=12, max_size=12,
 ))
 def test_scalar_expr_parity(tuples):
@@ -211,23 +213,23 @@ def test_scalar_expr_parity(tuples):
 
     from pyspark.sql import functions as F
     from pyspark.sql.types import (
-        DoubleType, IntegerType, StringType, StructField, StructType,
+        ArrayType, DoubleType, IntegerType, StringType, StructField,
+        StructType,
     )
 
     from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.cleaning import (
         sanitize_base_name_expr,
     )
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.lookup import (
-        code_lookup_expr,
-        mark_unclear_expr,
-        parse_name_expr,
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.extract import (
+        rules_udf,
     )
-    from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.validate import (
-        visit_warnings_expr,
+    from medical_pdf__ocr_structured_ccd_ccda_output_spark.renderers import (
+        xml as rx,
     )
     from medical_pdf__ocr_structured_ccd_ccda_output_spark.session import (
         get_spark,
     )
+    from tests.test_lookup_parity import entry_xml, name_xml
 
     spark = get_spark("prop", shuffle_partitions=4)
     schema = StructType([
@@ -238,28 +240,35 @@ def test_scalar_expr_parity(tuples):
         StructField("ver", StringType()),
     ])
     df = spark.createDataFrame(list(tuples), schema)
+    mark = rules_udf(rules.mark_unclear, StringType())
+    warnings = rules_udf(rules.visit_warnings, ArrayType(StringType(), False))
     got = df.select(
-        parse_name_expr(F.col("name")).alias("pname"),
-        mark_unclear_expr(F.col("guess"), F.col("conf")).alias("marked"),
-        code_lookup_expr(F.col("ctext"), rules.SNOMED_CODES).alias("snomed"),
-        code_lookup_expr(F.col("ctext"), rules.LOINC_CODES).alias("loinc"),
+        mark(F.col("guess"), F.col("conf")).alias("marked"),
+        rx._coded_entry(F.col("ctext"), rules.SNOMED_CODES,
+                        rx.SNOMED_SYSTEM).alias("snomed"),
+        rx._coded_entry(F.col("ctext"), rules.LOINC_CODES,
+                        rx.LOINC_SYSTEM).alias("loinc"),
         sanitize_base_name_expr(F.col("path")).alias("base"),
-        visit_warnings_expr(
+        warnings(
             F.col("vid"), F.col("vconf"), F.col("pages"), F.col("ver")
         ).alias("warns"),
     ).collect()
-    for (name, guess, conf, ctext, path, vid, vconf, pages, ver), row in zip(
-        tuples, got
+    pats = df.select(
+        F.lit("c").alias("conv_id"), F.lit(None).cast("string").alias("patient_id"),
+        F.col("name").alias("patient_name"), F.lit(None).cast("date").alias("dob"),
+        F.lit(None).cast("string").alias("sex"),
+    )
+    names = rx.demographics_xml(pats).collect()
+    for (name, guess, conf, ctext, path, vid, vconf, pages, ver), row, nrow in zip(
+        tuples, got, names, strict=True
     ):
         d = row.asDict(recursive=True)
-        assert d["pname"] == rules.parse_name(name), repr(name)
+        assert name_xml(name) in nrow["record_target_xml"], repr(name)
         assert d["marked"] == rules.mark_unclear(guess, conf), (guess, conf)
-        for col, cmap in (("snomed", rules.SNOMED_CODES),
-                          ("loinc", rules.LOINC_CODES)):
-            want = rules.find_code(ctext, cmap)
-            want_d = (None if want is None
-                      else {"code": want[0], "display": want[1]})
-            assert d[col] == want_d, repr(ctext)
+        for col, cmap, system in (
+                ("snomed", rules.SNOMED_CODES, rx.SNOMED_SYSTEM),
+                ("loinc", rules.LOINC_CODES, rx.LOINC_SYSTEM)):
+            assert d[col] == entry_xml(ctext, cmap, system), repr(ctext)
         want_base = (
             PurePosixPath(path).stem
             .replace(" ", "_").replace("(", "").replace(")", "")
@@ -330,9 +339,15 @@ def test_entity_extraction_parity_on_generated_text(docs):
     )
 
     spark = get_spark("prop", shuffle_partitions=4)
+    # two null rows: a turn without sections and a section without text
+    null_rows = [
+        ("cn", "visit_1", len(docs), None),
+        ("cn", "visit_1", len(docs) + 1,
+         [{"section": "PLAN", "start_line": 1, "end_line": 1, "text": None}]),
+    ]
     turns = spark.createDataFrame(
         [(f"c{i}", "visit_1", i, rules.extract_sections(d))
-         for i, d in enumerate(docs)],
+         for i, d in enumerate(docs)] + null_rows,
         "conv_id string, visit_id string, turn_idx int, sections array<"
         "struct<section:string, start_line:int, end_line:int, text:string>>",
     )
@@ -341,7 +356,7 @@ def test_entity_extraction_parity_on_generated_text(docs):
     alg = extract_allergies(turns).collect()
     plan = extract_plan_items(turns).collect()
 
-    got = {i: ([], [], []) for i in range(len(docs))}
+    got = {i: ([], [], []) for i in range(len(docs) + len(null_rows))}
     for r in vit:
         got[r["source_page"]][0].append(
             (r["source_line_in_turn"], r["vital_name"], r["value"],
@@ -357,6 +372,7 @@ def test_entity_extraction_parity_on_generated_text(docs):
         want = _py_entities(doc)
         have = tuple(sorted(x) for x in got[i])
         assert have == want, repr(doc)
+    assert all(got[i] == ([], [], []) for i in range(len(docs), len(got)))
 
 
 # ---------------------------------------------------------------------------

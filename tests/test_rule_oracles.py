@@ -1,8 +1,9 @@
 """The rules.py contract queries against their DuckDB oracles.
 
-The extraction-rule queries and the corpus word-text queries run
-rules.py through operators.extract.rules_udf, the mechanism
-extract_turns and the corpus operators are built on; each oracle
+The extraction-rule, lookup, validation and corpus word-text queries
+run rules.py through operators.extract.rules_udf, the mechanism
+extract_turns, the entity extractors, the XML renderer and the corpus
+operators are built on; each oracle
 restates the rule in DuckDB SQL.  That makes this the one check of
 rules.py by an independent implementation.  The compare is
 tools/check_oracles.py's own, so a query passes here exactly when the
@@ -18,6 +19,9 @@ RULE_QUERIES = [
     "clean_extract", "confidence", "layout_hints", "boundary_flags",
     "extract_date", "section_headers", "section_spans", "uncertain_tokens",
     "mark_unclear", "vitals_extract", "allergies_plan", "data_quality",
+    # lookup and validation rules: names, codes, variants, warnings
+    "parse_names", "contains_code_lookup", "variant_lookup",
+    "schema_warnings", "ccd_xml_entities",
     # corpus word text: shingles, n-gram counts, quality signals, tokens
     "quality_scores", "token_counts", "decontaminate", "corpus_curation",
     "top_ngrams", "salient_terms", "ngram_jaccard",

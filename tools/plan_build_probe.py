@@ -6,7 +6,7 @@ the seconds to EXECUTE each built plan into a noop sink.
 The pipeline is built as ``job.main`` builds it: ``prepare_turns``
 (``prepare_*``) blocks the first sink write, the extracted_turns one;
 ``build_outputs`` (``outputs_*``) runs while that write does.  Their sum
-is what ``run_pipeline`` costs.
+is what building the whole pipeline costs.
 
 Usage: python tools/plan_build_probe.py [cores] [conversations] [reps]
 
@@ -15,8 +15,8 @@ warm repetitions are the steady-state cost every pass of a hot loop
 pays.  One JSON line per repetition.
 
 On a 4-vCPU host with ``4 300 3`` (3,172 turns), the extract build
-sends 339 py4j commands cold (0.8 s) and 47 warm (0.03 s).  The
-prepare build sends 415 and the outputs build 15,308 (3.0-4.5 s),
+sends 339 py4j commands cold (0.7-0.8 s) and 47 warm (0.02-0.06 s).
+The prepare build sends 415 and the outputs build 13,156 (2.3-3.9 s),
 cold or warm.
 """
 
